@@ -10,19 +10,6 @@ import org.apache.spark.sql.SparkSession
   * UTC so timestamp semantics match the DuckDB oracle.
   */
 object GraftSession {
-  /** Upper bound for Await-ing a concurrently materialized query leg
-    * (the c21 approx leg, the s9 PQ subspace pool — guide §2.6 sites).
-    * `Duration.Inf` let one hung Spark job wedge a build forever with
-    * no diagnostic (ADVICE r21); this is deliberately GENEROUS — legs
-    * that legitimately run long at cluster scale can raise it via
-    * `GRAFT_LEG_TIMEOUT_SEC` — because its job is turning a wedged
-    * process into a loud TimeoutException, not pacing normal work.
-    */
-  val legTimeout: scala.concurrent.duration.Duration =
-    scala.concurrent.duration.Duration(
-      sys.env.getOrElse("GRAFT_LEG_TIMEOUT_SEC", "7200").toLong,
-      java.util.concurrent.TimeUnit.SECONDS)
-
   def local(appName: String = "graft", cores: Int = 32): SparkSession = {
     val spark = SparkSession
       .builder()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.ArtifactCache
 import graft.sources.Tables
 import graft.functions.TextAnalysis.{hash60, tokensCol}
 
@@ -578,9 +579,7 @@ object Curation {
     * idempotently (the s9 write discipline).
     */
   private[graft] def writeClusterCentroids(s: SparkSession, dir: String,
-      path: String): Unit = {
-    val key = s"$dir->$path"
-    if (writtenCentroids.contains(key)) return
+      path: String): Unit = ArtifactCache(dir, "p12_centroids", path) {
     val centers = graft.mopso.Init.kmeansCenters(
       Tables.embeddings(s, dir).select(col("features")),
       P12K, P12MaxIter, P12Seed)
@@ -590,21 +589,15 @@ object Curation {
       .toDF("cid", "centroid")
       .repartition(1)
       .write.mode("overwrite").parquet(path)
-    writtenCentroids.add(key)
   }
-
-  private val writtenCentroids =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Drops the per-JVM written-centroid memo for `dir` so the next
     * [[writeClusterCentroids]] refits from scratch — the bench's
     * `p12_centroid_build` row calls this first (the p7 invalidate
     * discipline).
     */
-  def invalidateCentroids(dir: String): Unit = {
-    val it = writtenCentroids.iterator()
-    while (it.hasNext) if (it.next().startsWith(dir + "->")) it.remove()
-  }
+  def invalidateCentroids(dir: String): Unit =
+    ArtifactCache.invalidate(dir, "p12_centroids")
 
   /** The serving face of p12 against an ALREADY-persisted centroid
     * artifact — split out so ScaleBench can price fit and serve

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.ArtifactCache
 import graft.sources.Tables
 import graft.functions.TextAnalysis.{hash60, tokensCol}
 
@@ -1015,26 +1016,18 @@ object Dedup {
     * micro-nats — the parquet round trip is exact). The bench carries
     * the training cost in its own `p11_lm_build` row.
     */
-  def writeP11LmModel(s: SparkSession, dir: String, path: String,
-      force: Boolean = false): Unit = {
-    val key = s"$dir->$path"
-    if (!force && writtenLmModels.contains(key)) return
-    TextAnalysis.lm2Model(qualityGated(s, dir))
-      .write.mode("overwrite").parquet(path)
-    writtenLmModels.add(key)
-  }
-
-  private val writtenLmModels =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  def writeP11LmModel(s: SparkSession, dir: String, path: String): Unit =
+    ArtifactCache(dir, "p11_lm", path) {
+      TextAnalysis.lm2Model(qualityGated(s, dir))
+        .write.mode("overwrite").parquet(path)
+    }
 
   /** Drops the per-JVM written-artifact memo for `dir`, so the next
     * [[writeP11LmModel]] retrains. The bench's `p11_lm_build` row calls
     * this first (p7's [[QualityModel.invalidate]] twin).
     */
-  def invalidateLm(dir: String): Unit = {
-    val it = writtenLmModels.iterator()
-    while (it.hasNext) if (it.next().startsWith(dir + "->")) it.remove()
-  }
+  def invalidateLm(dir: String): Unit =
+    ArtifactCache.invalidate(dir, "p11_lm")
 
   /** Streaming face of d11: each arriving micro-batch of (doc_id, text)
     * documents is assigned against the frozen store by the EXACT batch
@@ -1187,15 +1180,12 @@ object Dedup {
     * serve. The bench carries the build in its own `d11_index_build`
     * row.
     */
-  def writeDedupIndex(s: SparkSession, dir: String, path: String,
-      force: Boolean = false): Unit = {
-    val key = s"$dir->$path"
-    if (!force && writtenDedupIndexes.contains(key)) return
-    writeDedupIndexOf(s, Tables.documents(s, dir)
-      .where(pmod(col("doc_id"), lit(DeltaMod)) =!= DeltaResidue)
-      .select(col("doc_id"), col("text")), path)
-    writtenDedupIndexes.add(key)
-  }
+  def writeDedupIndex(s: SparkSession, dir: String, path: String): Unit =
+    ArtifactCache(dir, "d11_index", path) {
+      writeDedupIndexOf(s, Tables.documents(s, dir)
+        .where(pmod(col("doc_id"), lit(DeltaMod)) =!= DeltaResidue)
+        .select(col("doc_id"), col("text")), path)
+    }
 
   /** [[writeDedupIndex]] over an EXPLICIT base corpus — the staleness
     * protocol's face (ScaleBench builds the store on a hash-holdout
@@ -1218,14 +1208,9 @@ object Dedup {
     bands.unpersist()
   }
 
-  private val writtenDedupIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Drops the per-JVM index memo for `dir` ([[invalidateLm]] twin). */
-  def invalidateDedupIndex(dir: String): Unit = {
-    val it = writtenDedupIndexes.iterator()
-    while (it.hasNext) if (it.next().startsWith(dir + "->")) it.remove()
-  }
+  def invalidateDedupIndex(dir: String): Unit =
+    ArtifactCache.invalidate(dir, "d11_index")
 
   /** d11: INCREMENTAL dedup — assign an arriving batch against the
     * persisted corpus signature store withOUT re-signaturing or

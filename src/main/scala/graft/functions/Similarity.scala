@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Linalg
+import graft.core.{ArtifactCache, ConcurrentLeg, Linalg}
 import graft.operators.Clustering
 import graft.sources.Tables
 
@@ -673,18 +673,14 @@ object Similarity {
   private[graft] def coarseCentroidsOf(s: SparkSession, corpus: DataFrame,
       nlist: Int, key: String): DataFrame = {
     import s.implicits._
-    val arr = trainedCenters.synchronized {
-      trainedCenters.getOrElseUpdate((key, nlist),
-        graft.mopso.Init.kmeansCenters(
-          corpus.select(col("features")), nlist, maxIter = 20, seed = 42L))
+    val arr = ArtifactCache(key, "ivfadc", ("coarse", nlist)) {
+      graft.mopso.Init.kmeansCenters(
+        corpus.select(col("features")), nlist, maxIter = 20, seed = 42L)
     }
     arr.zipWithIndex
       .map { case (c, i) => (i + 1, c.toSeq) }.toSeq
       .toDF("cell", "cv")
   }
-
-  private val trainedCenters =
-    scala.collection.mutable.Map[(String, Int), Array[Array[Double]]]()
 
   /** The auto-IVF top-5 ranking for an ARBITRARY query frame
     * (vec_id, features) — queries need not live in the corpus. Emits
@@ -1021,48 +1017,27 @@ object Similarity {
   private def pqResidualCodebookOf(s: SparkSession, corpus: DataFrame,
       cents: DataFrame, key: String): DataFrame = {
     import s.implicits._
-    val rows = pqResidualCache.synchronized {
-      pqResidualCache.getOrElseUpdate(key, {
-        val res = residualFrameOf(corpus, cents).select(col("features"))
-          .localCheckpoint(eager = true) // M k-means consumers, one build
-        // the M sub-space fits are INDEPENDENT seeded jobs over the one
-        // checkpointed residual frame — submit them from a thread pool
-        // (guide §2.6: actions are only sequential because the driver
-        // calls them sequentially) so each fit's tail back-fills the
-        // cluster the others left idle. Each fit's own partitioning,
-        // seed, and aggregation order are untouched, so the trained
-        // codewords are bit-identical to the sequential build's
-        // (spec-pinned by the s8/s9 oracle rows).
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val fits = (1 to PqSubspaces).map { m =>
-            scala.concurrent.Future {
-              val sub = res.select(
-                slice(col("features"), (m - 1) * PqSubDim + 1, PqSubDim)
-                  .as("features"))
-              graft.mopso.Init.kmeansCenters(sub, PqCodewords, maxIter = 20,
-                seed = 542L + m)
-                .zipWithIndex.map { case (c, j) => (m, j + 1, c.toSeq) }
-            }
-          }
-          // finite (generous) bound: a hung fit surfaces as a loud
-          // TimeoutException instead of wedging the build forever
-          // (ADVICE r21); shutdownNow in that path stops the pool
-          // from submitting the remaining fits' jobs
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(fits),
-            graft.core.GraftSession.legTimeout).flatten
-          catch { case t: Throwable => pool.shutdownNow(); throw t }
-        } finally pool.shutdown()
-      })
+    val rows = ArtifactCache(key, "ivfadc", "codebook") {
+      val res = residualFrameOf(corpus, cents).select(col("features"))
+        .localCheckpoint(eager = true) // M k-means consumers, one build
+      // the M sub-space fits are INDEPENDENT seeded jobs over the one
+      // checkpointed residual frame — run them as concurrent legs, 4 in
+      // flight, so each fit's tail back-fills the cluster the others
+      // left idle. Each fit's own partitioning, seed, and aggregation
+      // order are untouched, so the trained codewords are bit-identical
+      // to the sequential build's (spec-pinned by the s8/s9 oracle rows).
+      val fits = (1 to PqSubspaces).map { m => () =>
+        val sub = res.select(
+          slice(col("features"), (m - 1) * PqSubDim + 1, PqSubDim)
+            .as("features"))
+        graft.mopso.Init.kmeansCenters(sub, PqCodewords, maxIter = 20,
+          seed = 542L + m)
+          .zipWithIndex.map { case (c, j) => (m, j + 1, c.toSeq) }
+      }
+      ConcurrentLeg.all(s, "s9-pq", fits, parallelism = 4)(_()).flatten
     }
     rows.toDF("m", "j", "cv")
   }
-
-  private val pqResidualCache =
-    scala.collection.mutable.Map[String, Seq[(Int, Int, Seq[Double])]]()
 
   /** IVFADC (Jégou et al. 2011 §IV): the s7 coarse quantizer COMPOSED
     * with residual PQ — the standard production ANN shape at corpus
@@ -1131,41 +1106,19 @@ object Similarity {
     * and is written partitioned by nothing here — at scale, bucket it
     * by `cell` so a probe's candidate scan is partition-pruned.
     */
-  def writeIvfAdcIndex(s: SparkSession, dir: String, path: String): Unit = {
-    val key = s"$dir->$path"
-    if (writtenIvfAdc.contains(key)) return
-    val (cents, cbR, codes) = ivfAdcIndexFrames(s, dir)
-    writeIndexTables(cents, cbR, codes, path)
-    writtenIvfAdc.add(key)
-  }
-
-  private val writtenIvfAdc =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Drops the per-JVM written-index memo for `dir` so the next
-    * [[writeIvfAdcIndex]] re-exports (the underlying quantizer fits
-    * have their own caches — this marker only skips the parquet
-    * re-write, which is what the bench's serve rows must not pay).
-    * The bench's `s9_index_build` row clears quantizer caches too.
-    */
-  def invalidateIvfAdcWrite(dir: String): Unit = {
-    val it = writtenIvfAdc.iterator()
-    while (it.hasNext) if (it.next().startsWith(dir + "->")) it.remove()
-  }
+  def writeIvfAdcIndex(s: SparkSession, dir: String, path: String): Unit =
+    ArtifactCache(dir, "ivfadc", ("index", path)) {
+      val (cents, cbR, codes) = ivfAdcIndexFrames(s, dir)
+      writeIndexTables(cents, cbR, codes, path)
+    }
 
   /** Full build-cost invalidation for `dir`: written-index marker AND
     * the memoized quantizer fits (trained coarse centers, residual
     * codebook), so a timed `s9_index_build` row covers train + encode
     * + export — the p7 `invalidate` contract.
     */
-  def invalidateIvfAdcBuild(dir: String): Unit = {
-    invalidateIvfAdcWrite(dir)
-    trainedCenters.synchronized {
-      trainedCenters.keys.filter(_._1 == dir).toSeq
-        .foreach(trainedCenters.remove)
-    }
-    pqResidualCache.synchronized { pqResidualCache.remove(dir) }
-  }
+  def invalidateIvfAdcBuild(dir: String): Unit =
+    ArtifactCache.invalidate(dir, "ivfadc")
 
   /** Persist an index built from an explicit corpus frame — the
     * BASE-ONLY build the incremental-maintenance measurement starts
@@ -1524,24 +1477,19 @@ object Similarity {
     */
   private def pqCodebookTrained(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rows = pqTrainedCache.synchronized {
-      pqTrainedCache.getOrElseUpdate(dir, {
-        val e = Tables.embeddings(s, dir)
-        (1 to PqSubspaces).flatMap { m =>
-          val sub = e.select(
-            slice(col("features"), (m - 1) * PqSubDim + 1, PqSubDim)
-              .as("features"))
-          graft.mopso.Init.kmeansCenters(sub, PqCodewords, maxIter = 20,
-            seed = 42L + m)
-            .zipWithIndex.map { case (c, j) => (m, j + 1, c.toSeq) }
-        }
-      })
+    val rows = ArtifactCache(dir, "pq_trained") {
+      val e = Tables.embeddings(s, dir)
+      (1 to PqSubspaces).flatMap { m =>
+        val sub = e.select(
+          slice(col("features"), (m - 1) * PqSubDim + 1, PqSubDim)
+            .as("features"))
+        graft.mopso.Init.kmeansCenters(sub, PqCodewords, maxIter = 20,
+          seed = 42L + m)
+          .zipWithIndex.map { case (c, j) => (m, j + 1, c.toSeq) }
+      }
     }
     rows.toDF("m", "j", "cv")
   }
-
-  private val pqTrainedCache =
-    scala.collection.mutable.Map[String, Seq[(Int, Int, Seq[Double])]]()
 
   /** PQ codes per vector (vec_id, codes: array of M codeword ids):
     * argmin over the broadcast codebook per subspace, ties toward the

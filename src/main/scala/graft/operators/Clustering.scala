@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Linalg
+import graft.core.{ArtifactCache, ConcurrentLeg, Linalg}
 import graft.sources.Tables
 
 /** The clustering data-plane operators (SURVEY §2.3/§2.4/§2.11) expressed
@@ -1277,46 +1277,38 @@ object Clustering {
     // CONCURRENTLY (guide §2.6) so the checkpoint barrier doesn't
     // serialize what the old duplicated-plan form ran as overlapping
     // stages of one job
-    val approxF = scala.concurrent.Future {
-      // job-grouped so a failing exact leg can cancel these jobs
-      // instead of leaving them running unsupervised (ADVICE r21)
-      s.sparkContext.setJobGroup("c21-approx", "c21 LSH approx leg")
-      try lshRankedNeighbors(s, dir, LshPlanes, LshTables)
-        .localCheckpoint(eager = true)
-      finally s.sparkContext.clearJobGroup()
-    }(scala.concurrent.ExecutionContext.global)
-    // exact leg = the recall denominator: same n² candidate COMPUTE as
-    // c10 (inherent to "exact"), but ranked through the bounded
-    // aggregate so the exchange carries O(n·L) rows, not the n² window
-    // sort (the oracle deliberately keeps the window formulation as the
-    // independent cross-check)
-    val ex = pc.select(col("id").as("xi"), col("features").as("xv"),
-      col("cluster").as("cx"))
-    val ey = pc.select(col("id").as("yi"), col("features").as("yv"),
-      col("cluster").as("cy"))
-    val exact =
-      try topRankedPairs(
+    ConcurrentLeg(s, "c21-approx")(
+      lshRankedNeighbors(s, dir, LshPlanes, LshTables)
+        .localCheckpoint(eager = true)) { approxLeg =>
+      // exact leg = the recall denominator: same n² candidate COMPUTE as
+      // c10 (inherent to "exact"), but ranked through the bounded
+      // aggregate so the exchange carries O(n·L) rows, not the n² window
+      // sort (the oracle deliberately keeps the window formulation as the
+      // independent cross-check)
+      val ex = pc.select(col("id").as("xi"), col("features").as("xv"),
+        col("cluster").as("cx"))
+      val ey = pc.select(col("id").as("yi"), col("features").as("yv"),
+        col("cluster").as("cy"))
+      val exact = topRankedPairs(
         ex.crossJoin(ey).where(col("xi") =!= col("yi")))
         .localCheckpoint(eager = true) // two consumers: value + denominator
-      catch { case t: Throwable =>
-        s.sparkContext.cancelJobGroup("c21-approx"); throw t
-      }
-    val approx = scala.concurrent.Await.result(approxF,
-      graft.core.GraftSession.legTimeout)
-    val connLsh = approx.agg(
-      round(sum(when(col("same"), lit(1.0) / col("rnk"))
-        .otherwise(lit(0.0))), 4).as("conn_lsh"))
-    val connExact = exact.agg(
-      round(sum(when(col("same"), lit(1.0) / col("rnk"))
-        .otherwise(lit(0.0))), 4).as("conn_exact"),
-      count(lit(1)).as("n_exact"))
-    val hits = approx
-      .join(exact.select(col("xi"), col("yi")), Seq("xi", "yi"), "left_semi")
-      .agg(count(lit(1)).as("n_hit"))
-    connLsh.crossJoin(connExact).crossJoin(hits)
-      .select(col("conn_lsh"), col("conn_exact"), col("n_hit"),
-        col("n_exact"),
-        round(col("n_hit") / col("n_exact"), 6).as("recall"))
+      val approx = approxLeg()
+      val connLsh = approx.agg(
+        round(sum(when(col("same"), lit(1.0) / col("rnk"))
+          .otherwise(lit(0.0))), 4).as("conn_lsh"))
+      val connExact = exact.agg(
+        round(sum(when(col("same"), lit(1.0) / col("rnk"))
+          .otherwise(lit(0.0))), 4).as("conn_exact"),
+        count(lit(1)).as("n_exact"))
+      val hits = approx
+        .join(exact.select(col("xi"), col("yi")), Seq("xi", "yi"),
+          "left_semi")
+        .agg(count(lit(1)).as("n_hit"))
+      connLsh.crossJoin(connExact).crossJoin(hits)
+        .select(col("conn_lsh"), col("conn_exact"), col("n_hit"),
+          col("n_exact"),
+          round(col("n_hit") / col("n_exact"), 6).as("recall"))
+    }
   }
 
   /** s12: the corpus-wide k-NN GRAPH as a first-class artifact — every
@@ -1656,9 +1648,6 @@ object Clustering {
     (planesDf, pointsDf, pc, gmut)
   }
 
-  private val writtenGraphIdx =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Bucket count of the graph store's SERVING layout — matches the
     * session's shuffle-partition sizing so a bucket-joined serve uses
     * every core.
@@ -1689,14 +1678,14 @@ object Clustering {
   /** Returns the build's per-phase wall clock — (chain, closure,
     * points_write, export_write, export_meta) — so the decade record
     * can name which phase carries `s14_index_build`'s residual
-    * above-linear ratio (VERDICT r17 next-4); empty when the memo
-    * short-circuits.
+    * above-linear ratio (VERDICT r17 next-4); a memo hit returns the
+    * phases of the build that wrote the store.
     */
   private[graft] def writeKnnGraphIndexOf(s: SparkSession,
       corpus: DataFrame, numPlanes: Int, path: String,
       key: String, cap: Int = GraphBuildCap,
-      forceOrder: Option[String] = None): Seq[(String, Double)] = {
-    if (writtenGraphIdx.contains(key)) return Seq.empty
+      forceOrder: Option[String] = None): Seq[(String, Double)] =
+    ArtifactCache(key, "s14_store") {
     val phases = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     def timedPhase[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
@@ -1841,7 +1830,6 @@ object Clustering {
         .toDF("build_sec", "points_at_build")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/build_meta")
     }
-    writtenGraphIdx.add(key)
     phases.toSeq
     } finally {
       pc0.unpersist()
@@ -2151,10 +2139,8 @@ object Clustering {
   /** Drops the per-JVM written-index memo for `dir` so a timed build
     * row re-exports (the p7 `invalidate` contract).
     */
-  def invalidateKnnGraphIndex(dir: String): Unit = {
-    val it = writtenGraphIdx.iterator()
-    while (it.hasNext) if (it.next().startsWith(dir + "->")) it.remove()
-  }
+  def invalidateKnnGraphIndex(dir: String): Unit =
+    ArtifactCache.invalidate(dir, "s14_store")
 
   /** Assign a batch of (id, features) vectors against a persisted
     * graph index: sign each vector with the FROZEN planes (a driver

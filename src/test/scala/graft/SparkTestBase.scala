@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
@@ -11,6 +15,23 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
   val sfDir = "/root/testdata/sf0.001"
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** Spark jobs submitted while `f` runs. The listener bus is drained on
+    * both sides, so no earlier job is counted and no job of `f` missed.
+    */
+  def jobsDuring(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(counter)
+    try { f; Bridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(counter)
+    n.get
+  }
 }
 
 object SparkTestBase {

@@ -257,6 +257,8 @@ class CurationSpec extends AnyFunSuite with SparkTestBase {
     Curation.invalidateCentroids(sfDir)
     Curation.writeClusterCentroids(spark, sfDir, path)
     assert(readCents() === first, "k-means refit must be deterministic")
+    assert(jobsDuring(Curation.writeClusterCentroids(spark, sfDir, path))
+      === 0, "a repeated write of the same (dir, path) is a memo hit")
     val sel = Curation.serveClusterBudget(spark, sfDir, path).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))

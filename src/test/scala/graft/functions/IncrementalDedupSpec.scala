@@ -21,6 +21,8 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val out = Dedup.d11IncrementalDedup(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val path = indexPath(sfDir)
+    assert(jobsDuring(Dedup.writeDedupIndex(spark, sfDir, path)) === 0,
+      "serving built the index; writing it again is a memo hit")
     // base-side store state, straight from the parquet the query served
     val bands = spark.read.parquet(s"$path/bands").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band"),

@@ -133,6 +133,9 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
     assert(rows.nonEmpty)
+    val lmPath = s"${Similarity.artifactRoot(sfDir)}/p11_lm"
+    assert(jobsDuring(Dedup.writeP11LmModel(spark, sfDir, lmPath)) === 0,
+      "serving wrote the LM; writing it again is a memo hit")
     // every selected doc survived BOTH learned gates (subset law)
     assert(rows.map(_._1).toSet.subsetOf(lmKept))
     // and the p10 budget semantics hold unchanged on the learned chain

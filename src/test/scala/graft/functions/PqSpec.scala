@@ -136,6 +136,8 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivfadc_idx").toString
     Similarity.writeIvfAdcIndex(spark, sfDir, path)
+    assert(jobsDuring(Similarity.writeIvfAdcIndex(spark, sfDir, path)) === 0,
+      "a repeated write of the same (dir, path) is a memo hit")
     val e = Tables.embeddings(spark, sfDir)
     val n = e.count()
     val nlist = Similarity.ivfCellsFor(n)

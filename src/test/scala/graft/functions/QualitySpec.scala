@@ -98,5 +98,8 @@ class QualitySpec extends AnyFunSuite with SparkTestBase {
     val b = QualityModel.queries("p7_quality_score")(spark, sfDir)
       .collect().map(_.toString).toSeq
     assert(a === b)
+    val path = s"${Similarity.artifactRoot(sfDir)}/p7_model"
+    assert(jobsDuring(QualityModel.writeServedModel(spark, sfDir, path))
+      === 0, "serving wrote the model; writing it again is a memo hit")
   }
 }

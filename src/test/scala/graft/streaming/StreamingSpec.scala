@@ -651,10 +651,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .toString + "/graph"
     val pts = Tables.labeledPoints(spark, sfDir)
       .select(col("id"), col("features"))
-    Clustering.writeKnnGraphIndexOf(spark,
-      pts.where(pmod(col("id"), lit(Clustering.S14Mod)) =!=
-        lit(Clustering.S14Res)),
+    val base = pts.where(pmod(col("id"), lit(Clustering.S14Mod)) =!=
+      lit(Clustering.S14Res))
+    def build() = Clustering.writeKnnGraphIndexOf(spark, base,
       Clustering.LshPlanes, path, s"spec->$path")
+    build()
+    assert(jobsDuring(build()) === 0,
+      "a repeated build of the same key is a memo hit")
+    // the build records the corpus count it was built from; a store
+    // whose points/ disagrees would mis-scale the append-wave budget
+    val atBuild = spark.read.parquet(s"$path/build_meta")
+      .select("points_at_build").head().getLong(0)
+    assert(atBuild === spark.read.parquet(s"$path/points").count())
     val delta = pts
       .where(pmod(col("id"), lit(Clustering.S14Mod)) ===
         lit(Clustering.S14Res))
