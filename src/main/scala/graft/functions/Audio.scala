@@ -397,8 +397,8 @@ object Audio {
     *     bucket instead of O(n²) — at x100 the replicated-container
     *     buckets that hang mm10 emit linearly here.
     *  3. TRANSITIVE CLOSURE — verified pairs feed
-    *     [[Dedup.connectedComponents]] (min-label propagation), so every
-    *     doc keeps the group its full clique would give it: within a
+    *     [[graft.core.Closure.components]] (min-label propagation), so
+    *     every doc keeps the group its full clique would give it: within a
     *     bucket-class all pairs verify (cos ≈ 0.999), hence the star
     *     topology preserves exactly the uncapped groups.
     *
@@ -450,7 +450,7 @@ object Audio {
       .where(graft.core.Linalg.cosineCol(col("ea"), col("eb")) >=
         AudioNearDupCosine)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    Dedup.connectedComponents(allIds, verified)
+    graft.core.Closure.components(allIds, verified)
       .select(col("doc_id").as("id"), col("group_id"))
       .orderBy(col("id"))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.ArtifactCache
+import graft.core.{ArtifactCache, Closure}
 import graft.sources.Tables
 import graft.functions.TextAnalysis.{hash60, tokensCol}
 
@@ -74,29 +74,6 @@ object Dedup {
     */
   val MinCurationTokens = 30
   val MinStopRatio = 0.02
-
-  /** Round cap for [[connectedComponents]] — propagation needs one round
-    * per hop of graph diameter, and the d3 cap's star topology keeps
-    * components shallow; a graph still changing after this many rounds
-    * fails loudly rather than silently emitting half-merged groups.
-    */
-  val MaxPropagationRounds = 30
-
-  /** Outer round at which the pointer-doubling closure escalates from
-    * one shortcut hop per round to full path compression (iterated
-    * label∘label to fixpoint). Shallow geometry (the common case)
-    * never reaches it and pays nothing; long random-id chains switch
-    * to the hash-to-min discipline instead of riding the bare step's
-    * O(diameter) rounds into the [[MaxPropagationRounds]] wall.
-    * 4, down from 10 (r21): the sf0.1 ε-clone graph burned NINE linear
-    * rounds (~0.5–1 s of fixed stage cost each) before the round-10
-    * escalation converged it in one — measured 10 → 6 rounds and
-    * ~8.5 → ~4.5 s on the s13 closure after the drop. The escalated
-    * rounds' price is the 4n-row star union, second-order against a
-    * whole round's exchanges; graphs that converge within 3 rounds
-    * still never pay it.
-    */
-  val CompressEscalateRounds = 4
 
   /** Exact dedup summary via content hash: total docs, distinct contents,
     * duplicate groups. (Hash-groupBy — the map-side partial aggregation
@@ -456,7 +433,7 @@ object Dedup {
       .select(col("p.doc_a"), col("p.doc_b")).distinct()
   }
 
-  /** First-round labels for [[connectedComponents]], read straight off the
+  /** First-round labels for [[Closure.components]], read straight off the
     * bucket arrays: every doc in a multi-doc bucket is directly connected
     * to the bucket minimum (clique members pair with it, overflow docs
     * star to it), so propagation round 1 from identity labels lands on
@@ -470,240 +447,6 @@ object Dedup {
         explode(col("ids")).as("doc_id"))
       .groupBy(col("doc_id")).agg(min(col("rep")).as("group_id"))
 
-  /** Distributed connected components by min-label propagation: every
-    * node's label starts as its own id; each round takes the min of its
-    * own and its neighbors' labels, until a fixpoint. Labels are
-    * monotonically non-increasing, so convergence is detected by ONE
-    * aggregate per round (sum of labels unchanged) — no extra
-    * old-vs-new join. Each round is a join + min-aggregate on the edge
-    * list: at 100 TB that is two shuffles per round over O(n·cap) edges
-    * (the d3 bucket cap bounds E), with rounds = graph diameter — the
-    * star edges keep duplicate components shallow. For extreme diameters
-    * the `pointerDoubling` flag makes rounds O(log d) — see below.
-    *
-    * @param docs  (doc_id) universe — isolated docs become singletons
-    * @param pairs (doc_a, doc_b) undirected candidate edges
-    * @param init  optional (doc_id, group_id) head-start labels — must be
-    *              a valid intermediate propagation state (each label the
-    *              min of some set of ids reachable from the doc), e.g.
-    *              [[repInitFromBuckets]]; docs absent from it start at
-    *              their own id
-    * @param pointerDoubling add a label-of-label hop each round
-    *              (`label ← min(label, label(label))`, the pointer-jumping
-    *              half of large-star/small-star): influence distance
-    *              doubles per round, so a diameter-d component converges
-    *              in O(log d) rounds instead of O(d), at the price of one
-    *              extra small self-join of the label frame per round.
-    *              Correctness is unchanged — label(label) is reachable by
-    *              transitivity, labels stay monotone. Off by default:
-    *              d6/p1's star topology keeps diameters tiny, so the
-    *              extra join costs more than the rounds it saves; turn it
-    *              on for deep-chain graphs (spec'd on a chain the plain
-    *              loop's round cap cannot finish).
-    * @return (doc_id, group_id = min reachable doc_id), persisted
-    */
-  private[graft] def connectedComponents(
-      docs: DataFrame, pairs: DataFrame,
-      init: Option[DataFrame] = None,
-      pointerDoubling: Boolean = false): DataFrame = {
-    // pre-partitioned on the per-round join key (dst = doc_id), so the
-    // cached edge list is shuffled ONCE here and every propagation round
-    // only exchanges the (much smaller) label side. Symmetrization is an
-    // explode of each pair into both directions — ONE scan of `pairs`,
-    // where a unionAll of two selects would execute the (possibly
-    // expensive, e.g. d7's cosine-verify join) pair plan twice.
-    // SELF-EDGES (r21): one (v, v) row per doc rides in the cached list
-    // so each round's min-aggregate sees the node's OWN label alongside
-    // its neighbors' — the old `labels ⟕ nbrMin + least` re-attachment
-    // join (one more corpus-sized exchange per round) folds into the
-    // aggregate itself, and nodes with no pair edges still emit a row.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .unionByName(docs.select(col("doc_id").as("src"),
-        col("doc_id").as("dst")))
-      .repartition(col("dst"))
-      .persist()
-    // roundCheckpoint per round: the iterative plan references `labels`
-    // twice per round, so WITHOUT lineage truncation the Catalyst plan
-    // doubles every round — exponential analysis/explain cost long
-    // before any data moves. NOT Dataset.localCheckpoint (r17, found by
-    // a 27-minute driver stall then `ArithmeticException: BigInteger
-    // would overflow supported range` on the indep x100 rank table):
-    // Spark 4's localCheckpoint pins the ORIGIN plan's size estimate
-    // into the new LogicalRDD (`LogicalRDD.fromDataset` →
-    // `rewriteStatsAndConstraints`), and the size-only join estimate is
-    // a PRODUCT of its children — so each round's estimate multiplies
-    // the previous round's pinned estimate twice (step join + doubling
-    // hop) and the BigInteger DIGIT COUNT doubles per round. Any
-    // closure needing ~25+ rounds (honest long-chain geometry; the
-    // ε-clone fixtures converge in a handful) burns unbounded driver
-    // CPU in Toom-Cook multiplication before overflowing at 2^31 bits.
-    // The RDD round-trip below cuts lineage the same way but gives the
-    // new leaf DEFAULT stats (no origin rewrite) — per-round estimates
-    // stay flat. Superseded rounds are unpersisted EXPLICITLY
-    // (ADVICE r17): relying on the ContextCleaner means a 30-round
-    // escalated closure can accumulate every round's MEMORY_AND_DISK
-    // blocks until a driver GC happens to run; the loop instead drops
-    // round r−2's blocks as soon as round r materializes — r−1 must
-    // stay (it is `prevLabels`, an input to the escalated star edges
-    // AND the cached parent of round r's lineage). On a real cluster
-    // prefer reliable `checkpoint()` for executor-loss tolerance.
-    var roundRdds: List[org.apache.spark.rdd.RDD[_]] =
-      Nil // newest first, ≤2 kept live
-    def roundCheckpoint(df: DataFrame): DataFrame = {
-      // internal-row lineage cut (r21): same truncation as the old
-      // df.rdd + createDataFrame round-trip (fresh leaf, DEFAULT stats —
-      // see the note above) without the per-round InternalRow → Row →
-      // InternalRow double conversion, which boxed every field of every
-      // label row per round
-      val (cut, rdd) = org.apache.spark.sql.graft.Bridge.cachedLineageCut(df)
-      roundRdds = rdd :: roundRdds
-      // eager: the convergence aggregate right after materializes it
-      cut
-    }
-    def dropSupersededRounds(): Unit =
-      if (roundRdds.length > 2) {
-        roundRdds.drop(2).foreach(_.unpersist(blocking = false))
-        roundRdds = roundRdds.take(2)
-      }
-    // convergence checksum as decimal(38,0): an exact Long sum overflows
-    // once n·maxId exceeds 2^63 (≈1e10 sequential doc ids — precisely the
-    // 100 TB regime), which would throw per round under ANSI mode or
-    // silently wrap the fixpoint test without it. The same aggregate also
-    // carries the row count, so the empty-universe probe costs nothing
-    // extra (sum over zero rows is null → ZERO).
-    def labelStats(df: DataFrame): (java.math.BigDecimal, Long) = {
-      val v = df.agg(sum(col("group_id").cast("decimal(38,0)")),
-        count(lit(1))).head()
-      (if (v.isNullAt(0)) java.math.BigDecimal.ZERO else v.getDecimal(0),
-        v.getLong(1))
-    }
-    var labels = init match {
-      case Some(i) =>
-        docs.select(col("doc_id"))
-          .join(i.withColumnRenamed("doc_id", "i_doc"),
-            col("doc_id") === col("i_doc"), "left")
-          .select(col("doc_id"),
-            coalesce(col("group_id"), col("doc_id")).as("group_id"))
-          .localCheckpoint(eager = true)
-      case None =>
-        docs.select(col("doc_id"), col("doc_id").as("group_id"))
-          .localCheckpoint(eager = true)
-    }
-    val (sum0, n0) = labelStats(labels)
-    var prevLabels = labels
-    var checksum = sum0
-    var converged = n0 == 0L
-    var round = 0
-    // one shortcut composition: a's labels chased one level through
-    // mapping b (label ∘ label) — labels stay component members, so
-    // composing never crosses a component boundary
-    def compose(a: DataFrame, b: DataFrame): DataFrame = {
-      val hop = b.select(col("doc_id").as("h_doc"),
-        col("group_id").as("h_grp"))
-      a.join(hop, col("group_id") === col("h_doc"), "left")
-        .select(col("doc_id"),
-          least(col("group_id"), coalesce(col("h_grp"), col("group_id")))
-            .as("group_id"))
-    }
-    try {
-      while (!converged && round < MaxPropagationRounds) {
-        // deep-geometry escalation (r17, found by the indep x100 rank
-        // table): propagation over a FIXED edge set is Θ(graph
-        // diameter) rounds no matter how labels are chased — the
-        // ε-clone fixtures converge in a handful only because copy ids
-        // ascend along the chain; honest geometry has random ids along
-        // long paths. Past [[CompressEscalateRounds]] the min step also
-        // flows over the POINTER stars (v ↔ label(v), both directions)
-        // of the CURRENT **and PREVIOUS** round: the current star
-        // broadcasts a region's min to every member in one hop, and the
-        // previous star is what makes region MERGES O(1) — a boundary
-        // node that just defected to a smaller min still carries a
-        // stale edge to its old center, so the news reaches the center
-        // next round instead of crawling node-by-node across the old
-        // region (without the stale edges the defector leaves the star
-        // before reporting, and each merge costs a region radius — the
-        // same Θ(diameter) wall). Stars coalesce as labels agree: the
-        // hash-to-min contraction, empirically O(log n) rounds. Not
-        // enabled from round 1: shallow geometry (the common case)
-        // converges before the threshold and never pays the 4n-row
-        // union. Pointer edges stay within a component, so the
-        // fixpoint is unchanged (union-find twin spec).
-        def starEdges(l: DataFrame): DataFrame = l
-          .where(col("doc_id") =!= col("group_id"))
-          .select(explode(array(
-            struct(col("doc_id").as("src"), col("group_id").as("dst")),
-            struct(col("group_id").as("src"), col("doc_id").as("dst"))))
-            .as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        val effEdges =
-          if (!pointerDoubling || round + 1 < CompressEscalateRounds)
-            edges
-          else edges.unionByName(starEdges(labels))
-            .unionByName(starEdges(prevLabels))
-        // the self-edge in the cached list carries each node's own label
-        // into the min — `least(own, nbr_min)` IS this aggregate, so the
-        // old labels ⟕ nbrMin re-attachment join (and its corpus-sized
-        // exchange) is gone from every round
-        val stepped = effEdges
-          .join(labels, col("dst") === col("doc_id"))
-          .groupBy(col("src")).agg(min(col("group_id")).as("group_id"))
-          .select(col("src").as("doc_id"), col("group_id"))
-        val tR0 = System.nanoTime()
-        // TRUE pointer doubling in escalated rounds (VERDICT r21
-        // next-3): chase the FRESH step through itself (f∘f) instead
-        // of through the previous round's labels — influence distance
-        // doubles against the post-relaxation state, not the stale
-        // one, at the price of materializing the step once (its cut
-        // RDD backs both sides of the hop join, so the step computes
-        // once; the RDD is dropped right after the round's stats job
-        // below). Fixpoint unchanged: step(step(v)) is reachable by
-        // transitivity and labels stay monotone, and the loop only
-        // stops when the COMPOSED operator is stable — which forces
-        // the relaxation itself stable, the plain loop's invariant.
-        // Pre-escalation doubling rounds keep the old hop through the
-        // already-materialized labels: shallow graphs converge there
-        // and must not pay an extra per-round materialization.
-        val (next, stepRdd) =
-          if (!pointerDoubling) (roundCheckpoint(stepped), None)
-          else if (round + 1 < CompressEscalateRounds)
-            (roundCheckpoint(compose(stepped, labels)), None)
-          else {
-            val (st, rdd) =
-              org.apache.spark.sql.graft.Bridge.cachedLineageCut(stepped)
-            (roundCheckpoint(compose(st, st)), Some(rdd))
-          }
-        val nextSum = labelStats(next)._1
-        // the stats job materialized `next` — the step's blocks are no
-        // longer an input to any future plan
-        stepRdd.foreach(_.unpersist(blocking = false))
-        if (sys.env.contains("GRAFT_CLOSURE_DEBUG"))
-          System.err.println(f"[closure] round $round: " +
-            f"${(System.nanoTime() - tR0) / 1e9}%.2f s")
-        // labels only ever decrease → fixpoint iff the sum is unchanged
-        prevLabels = labels
-        labels = next
-        // round r is materialized (the stats job above) — r−2 and older
-        // are no longer inputs to any future plan; drop their blocks now
-        dropSupersededRounds()
-        converged = nextSum.compareTo(checksum) == 0
-        checksum = nextSum
-        round += 1
-      }
-      require(converged,
-        s"label propagation still changing after $MaxPropagationRounds rounds")
-      // converged: only the FINAL round's blocks back the returned
-      // frame — release the runner-up too (its data is no longer an
-      // input; lineage alone keeps fault recovery correct)
-      roundRdds.drop(1).foreach(_.unpersist(blocking = false))
-      roundRdds = roundRdds.take(1)
-    } finally edges.unpersist() // also on the divergence throw
-    labels
-  }
-
   /** d6: duplicate GROUPS from the d3 candidate pairs — the step a
     * training-data pipeline actually acts on (keep one doc per group =
     * `doc_id == group_id`). Transitive closure over the capped LSH pairs
@@ -712,18 +455,9 @@ object Dedup {
     * with a recursive CTE — an independent algorithm cross-check of the
     * propagation loop.
     */
-  def d6DedupGroups: Q = (s, dir) => {
-    // the bucket arrays feed two consumers (candidate pairs + the
-    // first-round labels), so persist them for the span of the
-    // propagation loop — the signature/banding scan runs once
-    val buckets = bucketArrays(bandRows(s, dir)).persist()
-    val out = connectedComponents(
-      Tables.documents(s, dir).select(col("doc_id")),
-      pairsFromBuckets(buckets),
-      init = Some(repInitFromBuckets(buckets)))
-    buckets.unpersist()
-    out.orderBy(col("doc_id"))
-  }
+  def d6DedupGroups: Q = (s, dir) =>
+    dedupGroupsFromBands(bandRows(s, dir), Tables.documents(s, dir))
+      .orderBy(col("doc_id"))
 
   /** d12: dedup-group REPRESENTATIVE selection — which duplicate
     * survives. d6/p1/p10 keep each group's min doc_id (cheap, stable,
@@ -748,14 +482,8 @@ object Dedup {
     */
   def d12GroupReps: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val buckets = bucketArrays(bandRows(s, dir)).persist()
-    val groups = connectedComponents(
-      docs.select(col("doc_id")),
-      pairsFromBuckets(buckets),
-      init = Some(repInitFromBuckets(buckets)))
-    buckets.unpersist()
-    val out = groupReps(groups, docs)
-    out.orderBy(col("group_id"))
+    groupReps(dedupGroupsFromBands(bandRows(s, dir), docs), docs)
+      .orderBy(col("group_id"))
   }
 
   /** The rep-selection reduction over any (doc_id, group_id) labeling
@@ -805,7 +533,7 @@ object Dedup {
     * are unchanged (spec-pinned against the uncapped form).
     */
   def d7SemanticGroups: Q = (s, dir) =>
-    connectedComponents(
+    Closure.components(
       Tables.embeddings(s, dir).select(col("vec_id").as("doc_id")),
       Similarity.nearDupPairsCapped(s, dir)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
@@ -853,19 +581,19 @@ object Dedup {
       curated.select(col("doc_id"), col("text")))), curated)
 
   /** The closure half of [[dedupGroupsOf]] over PRE-BUILT band rows —
-    * factored (r21) so the d11 index build shares ONE signature/banding
-    * pass between the persisted band table and the group closure
-    * (previously it signed the base corpus twice).
+    * d6, d12, p1/p10/p11 and the d11 build (which shares ONE
+    * signature/banding pass between its band table and this closure,
+    * r21). The bucket arrays feed two consumers (candidate pairs and
+    * the first-round labels), so they stay persisted for the span of
+    * the propagation loop and the banding scan runs once. Every caller
+    * bands `curated` itself, so every pair endpoint is a `curated` doc.
     */
   private[graft] def dedupGroupsFromBands(bands: DataFrame,
       curated: DataFrame): DataFrame = {
     val buckets = bucketArrays(bands).persist()
-    val groups = connectedComponents(
-      curated.select(col("doc_id")),
-      pairsFromBuckets(buckets),
-      init = Some(repInitFromBuckets(buckets)))
-    buckets.unpersist()
-    groups
+    try Closure.components(curated.select(col("doc_id")),
+      pairsFromBuckets(buckets), init = Some(repInitFromBuckets(buckets)))
+    finally buckets.unpersist()
   }
 
   def p1CorpusCuration: Q = (s, dir) => {

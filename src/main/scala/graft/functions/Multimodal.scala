@@ -1031,7 +1031,7 @@ object Multimodal {
       .where(graft.core.Linalg.cosineCol(col("ea"), col("eb")) >=
         PixelNearDupCosine)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    val out = Dedup.connectedComponents(
+    val out = graft.core.Closure.components(
       Tables.documents(s, dir).select(col("doc_id")), verified)
       .select(col("doc_id").as("id"), col("group_id"))
       .orderBy(col("id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{ArtifactCache, ConcurrentLeg, Linalg}
+import graft.core.{ArtifactCache, Closure, ConcurrentLeg, Linalg}
 import graft.sources.Tables
 
 /** The clustering data-plane operators (SURVEY §2.3/§2.4/§2.11) expressed
@@ -1441,12 +1441,7 @@ object Clustering {
       .where(col("ga.xi") < col("ga.yi"))
       .select(col("ga.xi").as("doc_a"), col("ga.yi").as("doc_b"))
     val ids = ids0.select(col("id").as("doc_id"))
-    // pointer doubling, not the plain loop: near-dup chains through a
-    // vector corpus make mutual-kNN components DEEP (the x100 fixture's
-    // exceed the 30-round cap — measured), and doubling converges in
-    // O(log diameter) rounds; same fixpoint, spec'd in PipelineSpec
-    val comp = graft.functions.Dedup
-      .connectedComponents(ids, mutual, pointerDoubling = true)
+    val comp = Closure.components(ids, mutual)
       .select(col("doc_id").as("id"), col("group_id").as("component"))
     orphans match {
       case None =>
@@ -2595,8 +2590,7 @@ object Clustering {
             col("canon").as("doc_b")))
       val verts = edges.select(explode(array(col("doc_a"),
         col("doc_b"))).as("doc_id")).distinct()
-      tracked(graft.functions.Dedup
-        .connectedComponents(verts, edges, pointerDoubling = true)
+      tracked(Closure.components(verts, edges)
         .where(col("doc_id") =!= col("group_id"))
         .select(col("doc_id").as("component"),
           col("group_id").as("canon")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions.{col, length, lit, pmod, size, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.core.ClosureSpec.unionFind
 import graft.sources.Tables
 
 /** Pipeline-operator behavior that the DuckDB oracle can't see:
@@ -77,17 +78,6 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val root = unionFind(candidates)
     val disconnected = truth.filterNot { case (a, b) => root(a) == root(b) }
     assert(disconnected.isEmpty, s"disconnected: ${disconnected.take(5)}")
-  }
-
-  /** Driver-side union-find over a (small, collected) candidate edge set. */
-  private def unionFind(edges: Set[(Long, Long)]): Long => Long = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) => parent(find(a)) = find(b) }
-    find
   }
 
   test("p10 composes the production order: reps of p1, budget semantics hold") {
@@ -187,122 +177,6 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     // small buckets still emit the exact all-pairs clique
     val small = (0L until 5L).map(id => (id, 0, "k")).toDF("doc_id", "band", "key")
     assert(Dedup.bucketedPairs(small).count() === 10)
-  }
-
-  test("bucket-rep init equals a propagation round: same groups, head start") {
-    import spark.implicits._
-    // overlapping buckets (doc 5 bridges them) + an out-of-bucket doc
-    val bands = (Seq((1L, 0, "a"), (5L, 0, "a"), (9L, 0, "a")) ++
-      Seq((5L, 1, "b"), (3L, 1, "b")) ++
-      Seq((7L, 0, "c"))).toDF("doc_id", "band", "key")
-    val buckets = Dedup.bucketArrays(bands)
-    val init = Dedup.repInitFromBuckets(buckets)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // exactly min(own, min bucket-rep): the bridge doc takes the lower rep
-    assert(init === Map(1L -> 1L, 5L -> 1L, 9L -> 1L, 3L -> 3L))
-    val docs = Seq(1L, 3L, 5L, 7L, 9L).toDF("doc_id")
-    val pairs = Dedup.pairsFromBuckets(buckets)
-    val plain = Dedup.connectedComponents(docs, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val seeded = Dedup.connectedComponents(docs, pairs,
-      init = Some(Dedup.repInitFromBuckets(buckets)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(seeded === plain)
-    assert(seeded === Map(1L -> 1L, 3L -> 1L, 5L -> 1L, 9L -> 1L, 7L -> 7L))
-  }
-
-  test("min-label propagation resolves transitive groups and singletons") {
-    import spark.implicits._
-    // a 10-hop chain (forces multiple propagation rounds: diameter 9),
-    // a separate triangle, and an isolated singleton
-    val docs = (1L to 14L).toDF("doc_id")
-    val chain = (1L until 10L).map(i => (i, i + 1))
-    val triangle = Seq((11L, 12L), (12L, 13L), (11L, 13L))
-    val pairs = (chain ++ triangle).toDF("doc_a", "doc_b")
-    val groups = Dedup.connectedComponents(docs, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    (1L to 10L).foreach(d => assert(groups(d) === 1L, s"chain doc $d"))
-    (11L to 13L).foreach(d => assert(groups(d) === 11L, s"triangle doc $d"))
-    assert(groups(14L) === 14L) // isolated doc keeps its own group
-    // keep-one-representative rule: exactly one doc per group
-    assert(groups.count { case (d, g) => d == g } === 3)
-    // empty universe: no rounds, no NPE from the null sum aggregate
-    val empty = Dedup.connectedComponents(
-      Seq.empty[Long].toDF("doc_id"),
-      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
-    assert(empty.count() === 0L)
-  }
-
-  test("pointer doubling finishes a chain the plain round cap cannot") {
-    import spark.implicits._
-    // a chain deeper than MaxPropagationRounds: plain propagation moves
-    // the min one hop per round and must hit the cap; the pointer-jumping
-    // variant doubles influence distance per round and converges in
-    // O(log d)
-    val n = Dedup.MaxPropagationRounds + 10L
-    val docs = (0L until n).toDF("doc_id")
-    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    assertThrows[IllegalArgumentException] {
-      Dedup.connectedComponents(docs, chain)
-    }
-    val groups = Dedup.connectedComponents(docs, chain,
-      pointerDoubling = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(groups.length === n)
-    assert(groups.forall(_._2 === 0L), "whole chain is one component")
-  }
-
-  test("compression escalation finishes a RANDOM-id long path (the " +
-      "indep-geometry wall) within the round cap") {
-    import spark.implicits._
-    // the sequential-id chain above flatters the single shortcut hop:
-    // copy ids ascend along ε-clone chains, so each node's neighbor-min
-    // already points far back. Honest geometry has random ids along a
-    // long path — the bare step + one hop is O(diameter) rounds there,
-    // which blew the 30-round cap on the indep x100 rank table (r17).
-    // A deterministic multiplicative permutation scrambles ids along a
-    // 4096-node path; only the escalated compression can close it.
-    val n = 4096L
-    val p = 4099L // prime > n; k=3001 coprime → a permutation of 1..4098
-    def perm(i: Long): Long = (i + 1L) * 3001L % p
-    val ids = (0L until n).map(perm)
-    val docs = ids.toDF("doc_id")
-    val path = (0L until n - 1).map(i => (perm(i), perm(i + 1)))
-      .toDF("doc_a", "doc_b")
-    val groups = Dedup.connectedComponents(docs, path,
-      pointerDoubling = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(groups.length === n)
-    val minId = ids.min
-    assert(groups.forall(_._2 === minId),
-      "random-id path must resolve to one component at the global min")
-  }
-
-  test("min-label propagation == union-find on random graphs") {
-    import spark.implicits._
-    // a handful of randomized graphs (each case runs a real multi-job
-    // propagation loop, so the case count stays small); the union-find
-    // is an independent algorithm computing the same component minima
-    val rng = new scala.util.Random(1234L)
-    (1 to 8).foreach { c =>
-      val n = 10 + rng.nextInt(40)
-      val nEdges = rng.nextInt(2 * n)
-      val edges = Seq.fill(nEdges) {
-        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)
-      }.filter { case (a, b) => a != b }
-      val got = Dedup.connectedComponents(
-        (0L until n.toLong).toDF("doc_id"),
-        edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val root = unionFind(edges.toSet)
-      // normalize union-find roots to the component MIN id
-      val minOfRoot = (0L until n.toLong).groupBy(root).map {
-        case (r, members) => (r, members.min)
-      }
-      (0L until n.toLong).foreach { d =>
-        assert(got(d) === minOfRoot(root(d)), s"case $c, node $d")
-      }
-    }
   }
 
   test("IVF ANN recall vs brute force is high on clustered fixture") {
