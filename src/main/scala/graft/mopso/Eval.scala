@@ -17,7 +17,8 @@ object Eval {
     * returns NaN.
     */
   def silhouette(block: EvalBlock, centers: Array[Array[Double]]): Double = {
-    val (clusters, _) = FitnessKernel.assign(block.points, centers)
+    val (clusters, _) =
+      FitnessKernel.assign(block.points, centers, block.neighbors)
     val k = centers.length
     val n = block.points.length
     if (n == 0) return 0.0

@@ -65,38 +65,35 @@ object FitnessKernel {
 
   /** Nearest-centroid assignment (calKmeans / calPartitionKmeans,
     * Spark_MOPSO_Avg.scala:660-675): 1-based cluster ids, ties toward the
-    * lower id (first strict minimum). Returns (cluster per point, Dev sum).
+    * lower id. Returns (cluster per point, Dev summed in point order).
+    *
+    * One [[CenterSearch]] table serves every point. A point's search
+    * starts at the cluster of its first already-assigned neighbor in
+    * `neighbors` (lists are rank-ordered, so that is the nearest one),
+    * else at the previous point's cluster. `neighbors` may be shorter than
+    * `points`, or empty when the caller has no lists.
     */
-  def assign(points: Array[Array[Double]],
-      centers: Array[Array[Double]]): (Array[Int], Double) = {
+  def assign(points: Array[Array[Double]], centers: Array[Array[Double]],
+      neighbors: Array[Array[Int]] = Array.empty): (Array[Int], Double) = {
+    val search = new CenterSearch(centers)
     val n = points.length
     val clusters = new Array[Int](n)
     var dev = 0.0
+    var guess = 1
     var i = 0
     while (i < n) {
-      val (bestK, bestD) = assignOne(points(i), centers)
-      clusters(i) = bestK
-      dev += bestD
+      if (i < neighbors.length) {
+        val nbr = neighbors(i)
+        var idx = 0
+        while (idx < nbr.length && nbr(idx) > i) idx += 1
+        if (idx < nbr.length) guess = clusters(nbr(idx))
+      }
+      guess = search.nearest(points(i), guess)
+      clusters(i) = guess
+      dev += search.dist
       i += 1
     }
     (clusters, dev)
-  }
-
-  /** Nearest centroid of ONE point: (1-based cluster id, distance) —
-    * the single-point face of [[assign]] (same strict-minimum tie rule),
-    * shared by the no-collect global path ([[GlobalNeighbors]]).
-    */
-  def assignOne(pt: Array[Double],
-      centers: Array[Array[Double]]): (Int, Double) = {
-    var bestK = 1
-    var bestD = Double.MaxValue
-    var k = 0
-    while (k < centers.length) {
-      val d = Linalg.euclid(pt, centers(k))
-      if (d < bestD) { bestD = d; bestK = k + 1 }
-      k += 1
-    }
-    (bestK, bestD)
   }
 
   /** One row's (dev, conn) terms from its own features plus its neighbor
@@ -104,19 +101,22 @@ object FitnessKernel {
     * terms [[devConn]] accumulates, enabling a fully distributed exact
     * global evaluation with no driver collect (the neighbor's cluster is
     * recomputed from its features instead of looked up in a shared
-    * clusters array: redundant compute, zero shuffle).
+    * clusters array: redundant compute, zero shuffle). The row's search
+    * starts at `guess`; each neighbor's starts at the row's own cluster.
+    * Returns the row's cluster too, the next row's natural guess.
     */
   def rowPartial(feat: Array[Double], nbrs: Array[Array[Double]],
-      centers: Array[Array[Double]], l: Int): (Double, Double) = {
-    val (own, dev) = assignOne(feat, centers)
+      search: CenterSearch, l: Int, guess: Int): (Int, Double, Double) = {
+    val own = search.nearest(feat, guess)
+    val dev = search.dist
     var conn = 0.0
     val lim = math.min(l, nbrs.length)
     var idx = 0
     while (idx < lim) {
-      if (assignOne(nbrs(idx), centers)._1 == own) conn += 1.0 / (idx + 1)
+      if (search.nearest(nbrs(idx), own) == own) conn += 1.0 / (idx + 1)
       idx += 1
     }
-    (dev, conn)
+    (own, dev, conn)
   }
 
   /** (Dev, Conn) of one particle over one scope (partition or whole data).
@@ -130,7 +130,7 @@ object FitnessKernel {
     * (documented divergence — only reachable where the reference crashes).
     */
   def devConn(pd: PartData, centers: Array[Array[Double]], l: Int): (Double, Double) = {
-    val (clusters, dev) = assign(pd.points, centers)
+    val (clusters, dev) = assign(pd.points, centers, pd.neighbors)
     var conn = 0.0
     var i = 0
     while (i < pd.points.length) {
@@ -154,5 +154,78 @@ object FitnessKernel {
     val (dev, conn) = devConn(pd, centers, l)
     val rate = pd.points.length.toDouble / total
     (dev * rate, conn * rate)
+  }
+}
+
+/** Exact nearest-center search over one center set, pruned by the
+  * triangle inequality (Elkan, "Using the Triangle Inequality to
+  * Accelerate k-Means", ICML 2003). The K×K center-distance table is
+  * built once per center set; [[nearest]] then answers any number of
+  * points, each from a starting guess.
+  *
+  * Skip rule: with the current best center b at computed distance d_b,
+  * center c is skipped when
+  * {{{  d(b, c) − 1e-150 > 2·d_b·m,   m = 1 + max(1e-12, F·1e-15)  }}}
+  * and d(b, c) is finite. In exact arithmetic d(x, c) ≥ d(b, c) − d(x, b)
+  * > d_b, so c can neither win nor tie. The test is strict and the
+  * margins absorb rounding: a computed F-term distance is within a
+  * relative (F/2 + 2)·2^-53 of the true one, and three such errors enter
+  * the bound, far below m − 1; underflow of squared differences to
+  * subnormals adds at most √F·2^-537 absolute error per distance,
+  * far below the 1e-150 slack. An overflowed table entry (∞) proves
+  * nothing and never skips; a NaN entry compares false and never skips.
+  *
+  * Result rule, identical to a full scan in id order that keeps the first
+  * strict minimum from (cluster 1, Double.MaxValue): the state starts
+  * there, the guess is measured first, and the remaining centers are
+  * visited in id order, a candidate replacing the best when its distance
+  * is smaller or equal with a lower id. The outcome is the least (distance,
+  * id) pair, which no visiting order changes, and a skipped center is
+  * never that pair. NaN distances never compare smaller; ∞ and MaxValue
+  * never beat the start state, so non-finite inputs still answer
+  * (1, Double.MaxValue). The reported distance is the winner's
+  * [[graft.core.Linalg.euclid]] value, so Dev sums are bit-identical.
+  *
+  * Not thread-safe ([[dist]] holds the last answer): one per task.
+  */
+final class CenterSearch(centers: Array[Array[Double]]) {
+  private[this] val k = centers.length
+
+  /** half(b)(c): the largest d_b for which d(b, c) still skips c. */
+  private[this] val half: Array[Array[Double]] = {
+    val f = if (k == 0) 0 else centers(0).length
+    val twoM = 2.0 * (1.0 + math.max(1e-12, f * 1e-15))
+    Array.tabulate(k, k) { (b, c) =>
+      val d = Linalg.euclid(centers(b), centers(c))
+      if (d == Double.PositiveInfinity) 0.0 else (d - 1e-150) / twoM
+    }
+  }
+
+  private[this] var bestDist = 0.0
+
+  /** Distance from the last [[nearest]] query point to its center. */
+  def dist: Double = bestDist
+
+  /** 1-based id of the center nearest to `pt`, searched from the 1-based
+    * id `guess` (any valid id gives the same answer).
+    */
+  def nearest(pt: Array[Double], guess: Int): Int = {
+    val g = guess - 1
+    var best = 0
+    var bestD = Double.MaxValue
+    if (g < k) {
+      val dg = Linalg.euclid(pt, centers(g))
+      if (dg < bestD) { best = g; bestD = dg }
+    }
+    var c = 0
+    while (c < k) {
+      if (c != g && !(half(best)(c) > bestD)) {
+        val d = Linalg.euclid(pt, centers(c))
+        if (d < bestD || (d == bestD && c < best)) { best = c; bestD = d }
+      }
+      c += 1
+    }
+    bestDist = bestD
+    best + 1
   }
 }

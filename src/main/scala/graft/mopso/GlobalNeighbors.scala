@@ -26,8 +26,9 @@ import graft.functions.TopKAggregate
   * bounds partial aggregate state to L pairs per point, so the exchange
   * carries O(n·L) rows where a window formulation would shuffle and sort
   * the full n² candidate set. Each row then carries (L+1)·F doubles and
-  * the per-iteration job does (L+1)·K·F multiplies per row per particle
-  * with zero network beyond the broadcast positions. The all-pairs
+  * the per-iteration job does at most (L+1)·K·F multiplies per row per
+  * particle ([[CenterSearch]] skips provably farther centers) with zero
+  * network beyond the broadcast positions. The all-pairs
   * candidate GENERATION is the exact-KNN cost paid once; at 100 TB the
   * generator swaps for an LSH/IVF candidate set
   * (graft.functions.Similarity) with everything downstream unchanged.
@@ -147,13 +148,16 @@ object GlobalNeighbors {
       positions: Array[Array[Array[Double]]], l: Int): Array[Array[Double]] = {
     val sc = nbrRows.sparkContext
     val bc = sc.broadcast(positions)
-    val partials = nbrRows.mapPartitionsWithIndex { (pid, it) =>
-      val pos = bc.value
-      val acc = Array.fill(pos.length)(Array(0.0, 0.0))
+    val partials = try nbrRows.mapPartitionsWithIndex { (pid, it) =>
+      val searches = bc.value.map(new CenterSearch(_))
+      val guesses = Array.fill(searches.length)(1)
+      val acc = Array.fill(searches.length)(Array(0.0, 0.0))
       it.foreach { case (feat, _, nbrs) =>
         var p = 0
-        while (p < pos.length) {
-          val (dev, conn) = FitnessKernel.rowPartial(feat, nbrs, pos(p), l)
+        while (p < searches.length) {
+          val (own, dev, conn) =
+            FitnessKernel.rowPartial(feat, nbrs, searches(p), l, guesses(p))
+          guesses(p) = own
           acc(p)(0) += dev
           acc(p)(1) += conn
           p += 1
@@ -161,7 +165,7 @@ object GlobalNeighbors {
       }
       Iterator.single((pid, acc))
     }.collect()
-    bc.destroy()
+    finally bc.destroy()
     val fits = Array.fill(positions.length)(Array(0.0, 0.0))
     partials.sortBy(_._1).foreach { case (_, arr) =>
       var p = 0
@@ -179,21 +183,23 @@ object GlobalNeighbors {
       centerSets: Array[Array[Array[Double]]]): Array[Map[(Int, Int), Long]] = {
     val sc = nbrRows.sparkContext
     val bc = sc.broadcast(centerSets)
-    val parts = nbrRows.mapPartitions { it =>
-      val css = bc.value
-      val maps = Array.fill(css.length)(
+    val parts = try nbrRows.mapPartitions { it =>
+      val searches = bc.value.map(new CenterSearch(_))
+      val guesses = Array.fill(searches.length)(1)
+      val maps = Array.fill(searches.length)(
         scala.collection.mutable.Map.empty[(Int, Int), Long])
       it.foreach { case (feat, lab, _) =>
         var i = 0
-        while (i < css.length) {
-          val key = (lab, FitnessKernel.assignOne(feat, css(i))._1)
+        while (i < searches.length) {
+          guesses(i) = searches(i).nearest(feat, guesses(i))
+          val key = (lab, guesses(i))
           maps(i)(key) = maps(i).getOrElse(key, 0L) + 1L
           i += 1
         }
       }
       Iterator.single(maps.map(_.toMap))
     }.collect()
-    bc.destroy()
+    finally bc.destroy()
     val merged = Array.fill(centerSets.length)(
       scala.collection.mutable.Map.empty[(Int, Int), Long])
     parts.foreach(_.zipWithIndex.foreach { case (h, i) =>

@@ -40,6 +40,11 @@ object Init {
     * partition returns one candidate per particle. Per-particle semantics
     * are unchanged.
     *
+    * A point's scan of the chosen set stops once its running minimum is
+    * no greater than the partition's best so far: the minimum only falls
+    * and a winner must beat the best strictly, so the chosen centers are
+    * those of the full scan.
+    *
     * Seeds are drawn with replacement (independent per particle, matching
     * the reference's independent takeSample(false, 1) calls).
     */
@@ -52,7 +57,7 @@ object Init {
     for (_ <- 1 until k) {
       val bc = sc.broadcast(chosen.map(_.toArray))
       val perPartition: Array[Array[(Double, Array[Double])]] =
-        points.mapPartitions { it =>
+        try points.mapPartitions { it =>
           val pts = it.toArray
           if (pts.isEmpty) Iterator.empty
           else {
@@ -63,7 +68,7 @@ object Init {
               while (i < pts.length) {
                 var minD = Double.MaxValue
                 var c = 0
-                while (c < set.length) {
+                while (c < set.length && minD > best._1) {
                   val d = Linalg.euclid(set(c), pts(i))
                   if (d < minD) minD = d
                   c += 1
@@ -75,7 +80,7 @@ object Init {
             })
           }
         }.collect()
-      bc.destroy()
+        finally bc.destroy()
       var p = 0
       while (p < numParticles) {
         // driver argmax across partitions; ties → first partition, like the

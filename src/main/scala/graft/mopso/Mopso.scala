@@ -2,6 +2,7 @@ package graft.mopso
 
 import scala.util.Random
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,223 +102,228 @@ object Mopso {
       .map(r => (r.getSeq[Double](0).toArray, r.getInt(1)))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // evaluation blocks: per-partition for ScopePartition, one global block
-    // otherwise; neighbor lists precomputed once (see FitnessKernel)
-    // §7.4.6: optional seeded Bernoulli sample of the evaluation rows —
-    // deterministic per (seed, row index), applied before block building
-    // so the neighbor graphs shrink quadratically with the fraction
-    val evalRDD: RDD[(Array[Double], Int)] =
-      if (cfg.fitnessSampleFraction >= 1.0) rowsRDD
-      else rowsRDD.mapPartitionsWithIndex { (pid, it) =>
-        val r = new java.util.Random(seed ^ (pid.toLong << 17))
-        it.filter(_ => r.nextDouble() < cfg.fitnessSampleFraction)
-      }
-
     var blocksRDD: RDD[EvalBlock] = null
     var globalBlock: EvalBlock = null
     var nbrRows: RDD[(Array[Double], Int, Array[Array[Double]])] = null
-    cfg.scope match {
-      case ScopeGlobal if cfg.globalExactDistributed =>
-        // no-collect exact global path: neighbor features gathered once
-        // through the bounded top-k aggregate, rows stay distributed
-        nbrRows = GlobalNeighbors.build(spark, evalRDD, cfg.lIndex)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        nbrRows.count() // materialize while rowsRDD is still cached
-      case ScopePartition =>
-        blocksRDD = evalRDD.mapPartitions { it =>
-          val rows = it.toArray
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val pts = rows.map(_._1)
-            Iterator.single(
-              EvalBlock(pts, rows.map(_._2),
-                FitnessKernel.buildNeighbors(pts, cfg.lIndex)))
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        blocksRDD.count() // materialize once before the loop
-      case ScopeGlobal =>
-        val rows = evalRDD.collect()
-        val pts = rows.map(_._1)
-        globalBlock = EvalBlock(pts, rows.map(_._2),
-          FitnessKernel.buildNeighbors(pts, cfg.lIndex))
-    }
-    val globalBC =
-      if (globalBlock != null && distributedGlobal(cfg)) sc.broadcast(globalBlock)
-      else null
-
-    // rate denominator = the EVALUATED population (== N unless sampling);
-    // cheap on the cached blocks
-    val evalTotal: Long = cfg.scope match {
-      case _ if cfg.fitnessSampleFraction >= 1.0 => total
-      case ScopePartition => blocksRDD.map(_.points.length.toLong).sum().toLong
-      case ScopeGlobal if cfg.globalExactDistributed => nbrRows.count()
-      case ScopeGlobal => globalBlock.points.length.toLong
-    }
-
-    def evaluate(positions: Array[Array[Array[Double]]]): Array[Array[Double]] =
-      cfg.scope match {
-        case ScopePartition =>
-          val bc = sc.broadcast(positions)
-          val partials = blocksRDD
-            .mapPartitionsWithIndex { (pid, it) =>
-              it.map { block =>
-                (pid, bc.value.map(pos =>
-                  FitnessKernel.partitionPartial(block.toPartData, pos,
-                    cfg.lIndex, evalTotal)))
-              }
-            }.collect()
-          bc.destroy()
-          val fits = Array.fill(positions.length)(Array(0.0, 0.0))
-          // driver merge in partition order (Spark_MOPSO_Avg.scala:230-245)
-          partials.sortBy(_._1).foreach { case (_, arr) =>
-            var p = 0
-            while (p < arr.length) {
-              fits(p)(0) += arr(p)._1; fits(p)(1) += arr(p)._2; p += 1
-            }
-          }
-          fits
-        case ScopeGlobal if cfg.globalExactDistributed =>
-          GlobalNeighbors.evaluate(nbrRows, positions, cfg.lIndex)
-        case ScopeGlobal if distributedGlobal(cfg) =>
-          val posBC = sc.broadcast(positions)
-          val out = sc
-            .parallelize(positions.indices.toSeq,
-              math.min(positions.length, math.max(sc.defaultParallelism, 1)))
-            .map { i =>
-              val (dev, conn) = FitnessKernel.devConn(
-                globalBC.value.toPartData, posBC.value(i), cfg.lIndex)
-              (i, Array(dev, conn))
-            }.collect()
-          posBC.destroy()
-          out.sortBy(_._1).map(_._2)
-        case ScopeGlobal =>
-          positions.map { pos =>
-            val (dev, conn) =
-              FitnessKernel.devConn(globalBlock.toPartData, pos, cfg.lIndex)
-            Array(dev, conn)
-          }
-      }
-
-    // I1 K-Means baseline (for the reference's own comparison eval,
-    // Spark_MOPSO_Avg.scala:361-389)
-    val kmeansCenters =
-      Init.kmeansCenters(base.select(col("features")), k, cfg.kmeansIter, seed)
-
-    // I3 swarm init (batched maximin) + I4 velocities
-    val initPositions =
-      Init.maximinBatch(rowsRDD.map(_._1), k, cfg.numParticles, seed)
-    var particles: Array[Particle] = initPositions.map { pos =>
-      Particle(pos,
-        Swarm.initVelocity(k, numFeatures, cfg.vMin, cfg.vMax, rng),
-        Array(0.0, 0.0), pos, Array(0.0, 0.0), Array(0.0))
-    }
-
-    rowsRDD.unpersist() // init done; blocksRDD/globalBlock carry the loop
-
-    // initial fitness; pbest = current (Spark_MOPSO_Avg.scala:158-174)
-    val initFits = evaluate(particles.map(_.position))
-    particles = particles.zip(initFits).map { case (p, f) =>
-      p.copy(fitness = f, bestPosition = p.position, bestFitness = f)
-    }
-
-    // archive bootstrap: whole swarm, then non-dominated filter
-    // (Spark_MOPSO_Avg.scala:176-189); crowding arrays shared by reference
-    var archive = Archive.update(
-      particles.map(p => ArchiveEntry(p.position, p.fitness, p.crowding)),
-      cfg.repository, cfg.crowding)
-
-    var iter = 1
-    while (iter <= cfg.iterMax) {
-      val w = Swarm.weight(cfg.wSchedule, iter, cfg.iterMax, cfg.wMax, cfg.wMin)
-      val gbest = Archive.leader(archive, cfg.leader, cfg.crowding, rng)
-      particles = particles.map(
-        Swarm.updateVelocityPosition(_, gbest.position, bounds, w, cfg, rng))
-      val fits = evaluate(particles.map(_.position))
-      particles = particles.zip(fits).map { case (p, f) =>
-        Swarm.pbestUpdate(p, f, cfg.pbest, rng)
-      }
-      archive = Archive.update(
-        archive ++ particles.map(p =>
-          ArchiveEntry(p.position, p.fitness, p.crowding)),
-        cfg.repository, cfg.crowding)
-      iter += 1
-    }
-
-    // E1 purity for every archive entry + the kmeans baseline in ONE job:
-    // per partition, per center set, a (label, cluster) histogram; driver
-    // merges and takes the majority cluster per label
-    // (Spark_MOPSO_Avg.scala:325-389 runs K filter+assignment jobs per
-    // entry instead)
-    val centerSets = archive.map(_.position) :+ kmeansCenters
-    val hists: Array[Map[(Int, Int), Long]] = cfg.scope match {
-      case ScopePartition =>
-        val bc = sc.broadcast(centerSets)
-        val parts = blocksRDD.mapPartitions { it =>
-          it.map(block => bc.value.map(cs => histogram(block, cs)))
-        }.collect()
-        bc.destroy()
-        val merged = Array.fill(centerSets.length)(
-          scala.collection.mutable.Map.empty[(Int, Int), Long])
-        parts.foreach { arr =>
-          arr.zipWithIndex.foreach { case (h, i) =>
-            h.foreach { case (key, n) =>
-              merged(i)(key) = merged(i).getOrElse(key, 0L) + n
-            }
-          }
+    var globalBC: Broadcast[EvalBlock] = null
+    // every exit releases what the run persisted or broadcast, a throw too
+    try {
+      // evaluation blocks: per-partition for ScopePartition, one global block
+      // otherwise; neighbor lists precomputed once (see FitnessKernel)
+      // §7.4.6: optional seeded Bernoulli sample of the evaluation rows —
+      // deterministic per (seed, row index), applied before block building
+      // so the neighbor graphs shrink quadratically with the fraction
+      val evalRDD: RDD[(Array[Double], Int)] =
+        if (cfg.fitnessSampleFraction >= 1.0) rowsRDD
+        else rowsRDD.mapPartitionsWithIndex { (pid, it) =>
+          val r = new java.util.Random(seed ^ (pid.toLong << 17))
+          it.filter(_ => r.nextDouble() < cfg.fitnessSampleFraction)
         }
-        merged.map(_.toMap)
-      case ScopeGlobal if cfg.globalExactDistributed =>
-        GlobalNeighbors.histograms(nbrRows, centerSets)
-      case ScopeGlobal =>
-        centerSets.map(cs => histogram(globalBlock, cs))
-    }
-    // under sampling, purity/validity are measured on the evaluated sample
-    val purities = hists.map(h => purityOf(h, evalTotal))
-    val validity = hists.map(h => majorityValid(h, k))
 
-    // optional E3 final-result selection: exact silhouette per entry over
-    // the collected dataset (the reference also collects here,
-    // Spark_MOPSO_Avg.scala:618 — small-data-only, hence the flag).
-    // With silhouetteSimplified the selection is FULLY DISTRIBUTED: all
-    // archive entries scored by one aggregate pass over the original
-    // DataFrame (Eval.simplifiedSilhouetteDf, the c20 shape) — no
-    // collect at any data size.
-    val (sils, bestCenters) =
-      if (cfg.withSilhouette && cfg.silhouetteSimplified) {
-        val ss = Eval.simplifiedSilhouetteDf(
-          data.select(col("features")), archive.map(_.position).toSeq)
-        val best = archive(ss.indexOf(ss.max)).position
-        (Some(ss), Some(best.sortBy((c: Array[Double]) => c(0))))
-      } else if (cfg.withSilhouette) {
-        val block =
-          if (globalBlock != null) globalBlock
-          else if (blocksRDD != null) {
-            // serve from the still-cached partition blocks — rowsRDD was
-            // unpersisted after init and would recompute the scan+shuffle
-            val blocks = blocksRDD.collect()
-            EvalBlock(blocks.flatMap(_.points), blocks.flatMap(_.labels),
-              Array.empty)
-          } else {
-            // no-collect global path: the silhouette flag is the one
-            // (small-data-only, reference-faithful) consumer that still
-            // materializes the points
-            val rows = nbrRows.map(r => (r._1, r._2)).collect()
-            EvalBlock(rows.map(_._1), rows.map(_._2), Array.empty)
+      cfg.scope match {
+        case ScopeGlobal if cfg.globalExactDistributed =>
+          // no-collect exact global path: neighbor features gathered once
+          // through the bounded top-k aggregate, rows stay distributed
+          nbrRows = GlobalNeighbors.build(spark, evalRDD, cfg.lIndex)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          nbrRows.count() // materialize while rowsRDD is still cached
+        case ScopePartition =>
+          blocksRDD = evalRDD.mapPartitions { it =>
+            val rows = it.toArray
+            if (rows.isEmpty) Iterator.empty
+            else {
+              val pts = rows.map(_._1)
+              Iterator.single(
+                EvalBlock(pts, rows.map(_._2),
+                  FitnessKernel.buildNeighbors(pts, cfg.lIndex)))
+            }
+          }.persist(StorageLevel.MEMORY_AND_DISK)
+          blocksRDD.count() // materialize once before the loop
+        case ScopeGlobal =>
+          val rows = evalRDD.collect()
+          val pts = rows.map(_._1)
+          globalBlock = EvalBlock(pts, rows.map(_._2),
+            FitnessKernel.buildNeighbors(pts, cfg.lIndex))
+      }
+      if (globalBlock != null && distributedGlobal(cfg))
+        globalBC = sc.broadcast(globalBlock)
+
+      // rate denominator = the EVALUATED population (== N unless sampling);
+      // cheap on the cached blocks
+      val evalTotal: Long = cfg.scope match {
+        case _ if cfg.fitnessSampleFraction >= 1.0 => total
+        case ScopePartition => blocksRDD.map(_.points.length.toLong).sum().toLong
+        case ScopeGlobal if cfg.globalExactDistributed => nbrRows.count()
+        case ScopeGlobal => globalBlock.points.length.toLong
+      }
+
+      def evaluate(positions: Array[Array[Array[Double]]]): Array[Array[Double]] =
+        cfg.scope match {
+          case ScopePartition =>
+            val bc = sc.broadcast(positions)
+            val partials = try blocksRDD
+              .mapPartitionsWithIndex { (pid, it) =>
+                it.map { block =>
+                  (pid, bc.value.map(pos =>
+                    FitnessKernel.partitionPartial(block.toPartData, pos,
+                      cfg.lIndex, evalTotal)))
+                }
+              }.collect()
+            finally bc.destroy()
+            val fits = Array.fill(positions.length)(Array(0.0, 0.0))
+            // driver merge in partition order (Spark_MOPSO_Avg.scala:230-245)
+            partials.sortBy(_._1).foreach { case (_, arr) =>
+              var p = 0
+              while (p < arr.length) {
+                fits(p)(0) += arr(p)._1; fits(p)(1) += arr(p)._2; p += 1
+              }
+            }
+            fits
+          case ScopeGlobal if cfg.globalExactDistributed =>
+            GlobalNeighbors.evaluate(nbrRows, positions, cfg.lIndex)
+          case ScopeGlobal if distributedGlobal(cfg) =>
+            val posBC = sc.broadcast(positions)
+            val blockBC = globalBC
+            val out = try sc
+              .parallelize(positions.indices.toSeq,
+                math.min(positions.length, math.max(sc.defaultParallelism, 1)))
+              .map { i =>
+                val (dev, conn) = FitnessKernel.devConn(
+                  blockBC.value.toPartData, posBC.value(i), cfg.lIndex)
+                (i, Array(dev, conn))
+              }.collect()
+            finally posBC.destroy()
+            out.sortBy(_._1).map(_._2)
+          case ScopeGlobal =>
+            positions.map { pos =>
+              val (dev, conn) =
+                FitnessKernel.devConn(globalBlock.toPartData, pos, cfg.lIndex)
+              Array(dev, conn)
+            }
+        }
+
+      // I1 K-Means baseline (for the reference's own comparison eval,
+      // Spark_MOPSO_Avg.scala:361-389)
+      val kmeansCenters =
+        Init.kmeansCenters(base.select(col("features")), k, cfg.kmeansIter, seed)
+
+      // I3 swarm init (batched maximin) + I4 velocities
+      val initPositions =
+        Init.maximinBatch(rowsRDD.map(_._1), k, cfg.numParticles, seed)
+      var particles: Array[Particle] = initPositions.map { pos =>
+        Particle(pos,
+          Swarm.initVelocity(k, numFeatures, cfg.vMin, cfg.vMax, rng),
+          Array(0.0, 0.0), pos, Array(0.0, 0.0), Array(0.0))
+      }
+
+      rowsRDD.unpersist() // init done; blocksRDD/globalBlock carry the loop
+
+      // initial fitness; pbest = current (Spark_MOPSO_Avg.scala:158-174)
+      val initFits = evaluate(particles.map(_.position))
+      particles = particles.zip(initFits).map { case (p, f) =>
+        p.copy(fitness = f, bestPosition = p.position, bestFitness = f)
+      }
+
+      // archive bootstrap: whole swarm, then non-dominated filter
+      // (Spark_MOPSO_Avg.scala:176-189); crowding arrays shared by reference
+      var archive = Archive.update(
+        particles.map(p => ArchiveEntry(p.position, p.fitness, p.crowding)),
+        cfg.repository, cfg.crowding)
+
+      var iter = 1
+      while (iter <= cfg.iterMax) {
+        val w = Swarm.weight(cfg.wSchedule, iter, cfg.iterMax, cfg.wMax, cfg.wMin)
+        val gbest = Archive.leader(archive, cfg.leader, cfg.crowding, rng)
+        particles = particles.map(
+          Swarm.updateVelocityPosition(_, gbest.position, bounds, w, cfg, rng))
+        val fits = evaluate(particles.map(_.position))
+        particles = particles.zip(fits).map { case (p, f) =>
+          Swarm.pbestUpdate(p, f, cfg.pbest, rng)
+        }
+        archive = Archive.update(
+          archive ++ particles.map(p =>
+            ArchiveEntry(p.position, p.fitness, p.crowding)),
+          cfg.repository, cfg.crowding)
+        iter += 1
+      }
+
+      // E1 purity for every archive entry + the kmeans baseline in ONE job:
+      // per partition, per center set, a (label, cluster) histogram; driver
+      // merges and takes the majority cluster per label
+      // (Spark_MOPSO_Avg.scala:325-389 runs K filter+assignment jobs per
+      // entry instead)
+      val centerSets = archive.map(_.position) :+ kmeansCenters
+      val hists: Array[Map[(Int, Int), Long]] = cfg.scope match {
+        case ScopePartition =>
+          val bc = sc.broadcast(centerSets)
+          val parts = try blocksRDD.mapPartitions { it =>
+            it.map(block => bc.value.map(cs => histogram(block, cs)))
+          }.collect()
+          finally bc.destroy()
+          val merged = Array.fill(centerSets.length)(
+            scala.collection.mutable.Map.empty[(Int, Int), Long])
+          parts.foreach { arr =>
+            arr.zipWithIndex.foreach { case (h, i) =>
+              h.foreach { case (key, n) =>
+                merged(i)(key) = merged(i).getOrElse(key, 0L) + n
+              }
+            }
           }
-        val (ss, best) = Eval.selectBestBySilhouette(archive, block,
-          cfg.silhouetteSimplified)
-        (Some(ss), Some(best))
-      } else (None, None)
+          merged.map(_.toMap)
+        case ScopeGlobal if cfg.globalExactDistributed =>
+          GlobalNeighbors.histograms(nbrRows, centerSets)
+        case ScopeGlobal =>
+          centerSets.map(cs => histogram(globalBlock, cs))
+      }
+      // under sampling, purity/validity are measured on the evaluated sample
+      val purities = hists.map(h => purityOf(h, evalTotal))
+      val validity = hists.map(h => majorityValid(h, k))
 
-    if (blocksRDD != null) blocksRDD.unpersist()
-    if (nbrRows != null) nbrRows.unpersist()
-    if (globalBC != null) globalBC.destroy()
+      // optional E3 final-result selection: exact silhouette per entry over
+      // the collected dataset (the reference also collects here,
+      // Spark_MOPSO_Avg.scala:618 — small-data-only, hence the flag).
+      // With silhouetteSimplified the selection is FULLY DISTRIBUTED: all
+      // archive entries scored by one aggregate pass over the original
+      // DataFrame (Eval.simplifiedSilhouetteDf, the c20 shape) — no
+      // collect at any data size.
+      val (sils, bestCenters) =
+        if (cfg.withSilhouette && cfg.silhouetteSimplified) {
+          val ss = Eval.simplifiedSilhouetteDf(
+            data.select(col("features")), archive.map(_.position).toSeq)
+          val best = archive(ss.indexOf(ss.max)).position
+          (Some(ss), Some(best.sortBy((c: Array[Double]) => c(0))))
+        } else if (cfg.withSilhouette) {
+          val block =
+            if (globalBlock != null) globalBlock
+            else if (blocksRDD != null) {
+              // serve from the still-cached partition blocks — rowsRDD was
+              // unpersisted after init and would recompute the scan+shuffle
+              val blocks = blocksRDD.collect()
+              EvalBlock(blocks.flatMap(_.points), blocks.flatMap(_.labels),
+                Array.empty)
+            } else {
+              // no-collect global path: the silhouette flag is the one
+              // (small-data-only, reference-faithful) consumer that still
+              // materializes the points
+              val rows = nbrRows.map(r => (r._1, r._2)).collect()
+              EvalBlock(rows.map(_._1), rows.map(_._2), Array.empty)
+            }
+          val (ss, best) = Eval.selectBestBySilhouette(archive, block,
+            cfg.silhouetteSimplified)
+          (Some(ss), Some(best))
+        } else (None, None)
 
-    MopsoResult(archive, kmeansCenters,
-      purities.dropRight(1), validity.dropRight(1),
-      purities.last, validity.last,
-      sils, bestCenters,
-      k, numFeatures, total, (System.nanoTime() - t0) / 1e9)
+      MopsoResult(archive, kmeansCenters,
+        purities.dropRight(1), validity.dropRight(1),
+        purities.last, validity.last,
+        sils, bestCenters,
+        k, numFeatures, total, (System.nanoTime() - t0) / 1e9)
+    } finally {
+      rowsRDD.unpersist()
+      if (blocksRDD != null) blocksRDD.unpersist()
+      if (nbrRows != null) nbrRows.unpersist()
+      if (globalBC != null) globalBC.destroy()
+    }
   }
 
   private def distributedGlobal(cfg: MopsoConfig): Boolean =
@@ -325,7 +331,8 @@ object Mopso {
 
   private def histogram(block: EvalBlock,
       centers: Array[Array[Double]]): Map[(Int, Int), Long] = {
-    val (clusters, _) = FitnessKernel.assign(block.points, centers)
+    val (clusters, _) =
+      FitnessKernel.assign(block.points, centers, block.neighbors)
     val m = scala.collection.mutable.Map.empty[(Int, Int), Long]
     var i = 0
     while (i < block.labels.length) {

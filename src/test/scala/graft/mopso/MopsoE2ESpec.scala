@@ -177,4 +177,27 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
     val c2s = r2.archive.map(_.fitness(1)).toSet
     assert(c1s != c2s)
   }
+
+  test("a throw after the blocks are built releases every persisted RDD") {
+    val s = spark
+    import s.implicits._
+    val parts = 2
+    // a 3-feature row whose label hashes to its own partition: its block
+    // builds (a lone point has no neighbor pairs), the ragged vector then
+    // throws inside the K-Means baseline
+    val loneLabel = (1 to 50).find { l =>
+      Seq(0, l).toDF("label")
+        .select(org.apache.spark.sql.functions.expr(
+          s"pmod(hash(label), $parts)")).as[Int].collect().distinct.length == 2
+    }.get
+    val data = ((1 to 20).map(i => (Seq(i.toDouble, (i % 3).toDouble), 0)) :+
+      ((Seq(1.0, 2.0, 3.0), loneLabel))).toDF("features", "label")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception] {
+      Mopso.run(spark, data, MopsoConfig.labelPartition(parts)
+        .copy(iterMax = 1, numParticles = 4), seed = 7L)
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }
