@@ -91,15 +91,10 @@ object Cli {
       if (a.dataPath.endsWith(".parquet")) spark.read.parquet(a.dataPath)
       else Tables.labeledCsv(spark, a.dataPath,
         labeled = true, labelStartWithZero = a.labelStartWithZero)
-    val cfg0 = configFor(a)
-    // subPop=0 → auto partitioning (only meaningful for the partitioned
-    // variants; particle/single fix their own)
-    val cfg =
-      if (a.subPop == 0 &&
-          (a.variant == "avg" || a.variant == "labelPartition"))
-        cfg0.copy(numPartitions = MopsoConfig.partitionsFor(data.count()))
-      else cfg0
-    val result = Mopso.run(spark, data, cfg, a.seed)
+    // subPop = 0 reaches the partitioned variants as numPartitions = 0,
+    // which Mopso.run sizes from its input profile (particle/single fix
+    // their own partitioning)
+    val result = Mopso.run(spark, data, configFor(a), a.seed)
     val path = Report.saveMopsoReport(spark, result, a.outDir, stamp = true)
     // the reference prints its base-info + timing block; the essentials
     println(s"archive=${result.archive.length} k=${result.k} " +

@@ -102,6 +102,10 @@ final case class MopsoConfig(
     pbest: Config.PbestMode = Config.PbestDiscard,
     scope: Config.FitnessScope = Config.ScopePartition,
     partitioning: Config.Partitioning = Config.PartRandom,
+    /** Partitions of the evaluation data. 0 means `partitionsFor(N)`, N
+      * the input's row count, resolved once at the top of `Mopso.run`; a
+      * negative count is rejected there.
+      */
     numPartitions: Int = 32,
     clampVelocity: Boolean = true,
     clampPosition: Boolean = false,
@@ -151,8 +155,8 @@ object MopsoConfig {
     * O(Σ nᵤ²), so a PINNED partition count goes quadratic — measured 17x
     * for the x10→x100 decade at the reference's 8 — while holding nᵤ
     * constant restores O(n·nᵤ) (measured 26s vs 192s at x100). Use
-    * `avg(partitionsFor(df.count()))` when the input is not
-    * fixture-sized; m1's driver contract deliberately keeps the
+    * `avg(0)`, which `Mopso.run` sizes by this rule, when the input is
+    * not fixture-sized; m1's driver contract deliberately keeps the
     * reference's pinned 8 for fidelity.
     *
     * Third decade (r18, `scale_m1part_x1000.json`, 2M points): the

@@ -103,21 +103,29 @@ object FitnessKernel {
     * recomputed from its features instead of looked up in a shared
     * clusters array: redundant compute, zero shuffle). The row's search
     * starts at `guess`; each neighbor's starts at the row's own cluster.
+    * `weights` is [[rankWeights]] of L, built once by the caller.
     * Returns the row's cluster too, the next row's natural guess.
     */
   def rowPartial(feat: Array[Double], nbrs: Array[Array[Double]],
-      search: CenterSearch, l: Int, guess: Int): (Int, Double, Double) = {
+      search: CenterSearch, weights: Array[Double],
+      guess: Int): (Int, Double, Double) = {
     val own = search.nearest(feat, guess)
     val dev = search.dist
     var conn = 0.0
-    val lim = math.min(l, nbrs.length)
+    val lim = math.min(weights.length, nbrs.length)
     var idx = 0
     while (idx < lim) {
-      if (search.nearest(nbrs(idx), own) == own) conn += 1.0 / (idx + 1)
+      if (search.nearest(nbrs(idx), own) == own) conn += weights(idx)
       idx += 1
     }
     (own, dev, conn)
   }
+
+  /** Conn's rank weights for L neighbors: entry idx is 1/(idx+1), the very
+    * double the reference adds for the neighbor at rank idx.
+    */
+  def rankWeights(l: Int): Array[Double] =
+    Array.tabulate(math.max(l, 0))(idx => 1.0 / (idx + 1))
 
   /** (Dev, Conn) of one particle over one scope (partition or whole data).
     *
@@ -131,14 +139,15 @@ object FitnessKernel {
     */
   def devConn(pd: PartData, centers: Array[Array[Double]], l: Int): (Double, Double) = {
     val (clusters, dev) = assign(pd.points, centers, pd.neighbors)
+    val weights = rankWeights(l)
     var conn = 0.0
     var i = 0
     while (i < pd.points.length) {
       val nbr = pd.neighbors(i)
-      val lim = math.min(l, nbr.length)
+      val lim = math.min(weights.length, nbr.length)
       var idx = 0
       while (idx < lim) {
-        if (clusters(i) == clusters(nbr(idx))) conn += 1.0 / (idx + 1)
+        if (clusters(i) == clusters(nbr(idx))) conn += weights(idx)
         idx += 1
       }
       i += 1

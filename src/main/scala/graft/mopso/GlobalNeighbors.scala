@@ -150,13 +150,15 @@ object GlobalNeighbors {
     val bc = sc.broadcast(positions)
     val partials = try nbrRows.mapPartitionsWithIndex { (pid, it) =>
       val searches = bc.value.map(new CenterSearch(_))
+      val weights = FitnessKernel.rankWeights(l)
       val guesses = Array.fill(searches.length)(1)
       val acc = Array.fill(searches.length)(Array(0.0, 0.0))
       it.foreach { case (feat, _, nbrs) =>
         var p = 0
         while (p < searches.length) {
           val (own, dev, conn) =
-            FitnessKernel.rowPartial(feat, nbrs, searches(p), l, guesses(p))
+            FitnessKernel.rowPartial(feat, nbrs, searches(p), weights,
+              guesses(p))
           guesses(p) = own
           acc(p)(0) += dev
           acc(p)(1) += conn

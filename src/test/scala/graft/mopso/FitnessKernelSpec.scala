@@ -81,6 +81,31 @@ class FitnessKernelSpec extends AnyFunSuite {
     assert(math.abs(conn - refConn(pts, clusters, 10)) < 1e-9)
   }
 
+  test("Conn with L > 10 is bit-identical to the reference, both kernels") {
+    val rng = new Random(47)
+    val l = 23
+    val centers = randomPoints(3, 4, rng)
+    val pts = Array.fill(90)(
+      centers(rng.nextInt(3)).map(_ + rng.nextGaussian()))
+    val nbrs = FitnessKernel.buildNeighbors(pts, l)
+    val (clusters, _) = FitnessKernel.assign(pts, centers)
+    val (_, conn) = FitnessKernel.devConn(PartData(pts, nbrs), centers, l)
+    assert(bits(conn) === bits(refConn(pts, clusters, l)))
+    // the row kernel: per-row terms from the same weight table
+    val search = new CenterSearch(centers)
+    val weights = FitnessKernel.rankWeights(l)
+    assert(weights.length === l)
+    for (i <- pts.indices) {
+      val (own, _, rowConn) = FitnessKernel.rowPartial(pts(i),
+        nbrs(i).map(pts(_)), search, weights, 1)
+      var want = 0.0
+      for (idx <- nbrs(i).indices if clusters(nbrs(i)(idx)) == own)
+        want += 1.0 / (idx + 1)
+      assert(own === clusters(i))
+      assert(bits(rowConn) === bits(want), s"row $i")
+    }
+  }
+
   test("neighbor lists stable under duplicate distances") {
     // a grid with many exactly-equal pair distances
     val pts = (for (x <- 0 until 5; y <- 0 until 5)

@@ -1,5 +1,13 @@
 package graft.mopso
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -178,26 +186,137 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
     assert(c1s != c2s)
   }
 
-  test("a throw after the blocks are built releases every persisted RDD") {
-    val s = spark
-    import s.implicits._
-    val parts = 2
-    // a 3-feature row whose label hashes to its own partition: its block
-    // builds (a lone point has no neighbor pairs), the ragged vector then
-    // throws inside the K-Means baseline
-    val loneLabel = (1 to 50).find { l =>
-      Seq(0, l).toDF("label")
-        .select(org.apache.spark.sql.functions.expr(
-          s"pmod(hash(label), $parts)")).as[Int].collect().distinct.length == 2
-    }.get
-    val data = ((1 to 20).map(i => (Seq(i.toDouble, (i % 3).toDouble), 0)) :+
-      ((Seq(1.0, 2.0, 3.0), loneLabel))).toDF("features", "label")
+  /** `f`'s result and the number of Spark jobs the K-Means leg started
+    * meanwhile.
+    */
+  private def withLegJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val legJobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("mopso-kmeans"))) legJobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val out = try f finally {
+      Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    (out, legJobs.get)
+  }
+
+  /** Runs `f`, which must throw `E`, and checks what the failed run
+    * leaves: the K-Means leg's thread has stopped, nothing the run or the
+    * leg persisted is still persisted, and once the listener bus has
+    * caught up no job is active. Returns the exception and the number of
+    * jobs the leg started.
+    */
+  private def failedRunLeavesNothing[E <: Throwable: ClassTag](
+      f: => Any): (E, Int) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    intercept[Exception] {
-      Mopso.run(spark, data, MopsoConfig.labelPartition(parts)
-        .copy(iterMax = 1, numParticles = 4), seed = 7L)
-    }
+    val (e, legJobs) = withLegJobs(intercept[E](f))
+    val legThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("mopso-kmeans") && t.isAlive)
+    assert(legThreads.isEmpty, "the leg's thread outlived the run")
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    (e, legJobs)
+  }
+
+  test("a throw after the blocks are built releases every persisted RDD") {
+    // Spark's K-Means rejects K = 1 on the leg; the run sees it at the
+    // join, after the blocks, the init and the loop
+    val (e, _) = failedRunLeavesNothing[IllegalArgumentException] {
+      Mopso.run(spark, data, cfg.copy(iterMax = 1, kOverride = Some(1)),
+        seed = 7L)
+    }
+    assert(e.getMessage.toLowerCase.contains("k"))
+  }
+
+  test("a run that throws while the leg runs stops and releases the leg") {
+    // the jobs of a whole K-Means baseline on this input and seed
+    val (_, fullLeg) = withLegJobs(
+      Mopso.run(spark, data, cfg.copy(iterMax = 0), seed = 7L))
+    // L = -1 makes the blocks job throw while K-Means is under way; the
+    // leg then runs to its end instead of being cancelled mid-fit
+    val (_, legJobs) = failedRunLeavesNothing[SparkException] {
+      Mopso.run(spark, data, cfg.copy(iterMax = 1, lIndex = -1), seed = 7L)
+    }
+    assert(legJobs === fullLeg)
+  }
+
+  test("ragged features are rejected before anything is persisted") {
+    val ragged = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1 to 20).map(i => (Seq(i.toDouble, 0.0), i % 2)) :+
+        ((Seq(1.0, 2.0, 3.0), 0)), 3)).toDF("features", "label")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var e: IllegalArgumentException = null
+    val jobs = jobsDuring {
+      e = intercept[IllegalArgumentException] {
+        Mopso.run(spark, ragged, MopsoConfig.avg(2), seed = 7L)
+      }
+    }
+    assert(e.getMessage.contains("features"))
+    assert(e.getMessage.contains("F = 2"))
+    assert(e.getMessage.contains("one with 3"))
+    assert(jobs === 1, "only the profile job runs")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("the profile's K, N and F equal the SQL aggregate") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    // 6 rows over 8 partitions: partitions 0 and 4 are empty; labels with
+    // gaps and a null one; an id column
+    val rows = Seq[(Long, Seq[Double], Option[Int])](
+      (10L, Seq(1.0, 2.0, 3.0), Some(1)), (11L, Seq(0.0, 0.0, 1.0), Some(4)),
+      (12L, Seq(5.0, 5.0, 5.0), Some(9)), (13L, Seq(2.0, 1.0, 0.0), None),
+      (14L, Seq(7.0, 7.0, 7.0), Some(4)), (15L, Seq(3.0, 3.0, 3.0), Some(1)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8))
+      .toDF("id", "features", "label")
+    assert(df.rdd.glom().collect().map(_.isEmpty).toSeq ===
+      Seq(true, false, false, false, true, false, false, false))
+    val sql = df.agg(countDistinct(col("label")), count(lit(1)),
+      first(size(col("features")))).head()
+    val got = Mopso.profile(df)
+    assert(got === Mopso.InputProfile(
+      sql.getLong(0).toInt, sql.getLong(1), sql.getInt(2)))
+    assert(got === Mopso.InputProfile(3, df.count(), 3))
+  }
+
+  test("numPartitions = 0 resolves to partitionsFor(N); negative rejected") {
+    val run0 = Mopso.run(spark, data,
+      cfg.copy(numPartitions = 0, iterMax = 2), seed = 3L)
+    val parts = MopsoConfig.partitionsFor(500L)
+    val runN = Mopso.run(spark, data,
+      cfg.copy(numPartitions = parts, iterMax = 2), seed = 3L)
+    assert(run0.archive.map(_.fitness.toSeq).toSeq ===
+      runN.archive.map(_.fitness.toSeq).toSeq)
+    assert(run0.purities.toSeq === runN.purities.toSeq)
+    val input = data
+    var e: IllegalArgumentException = null
+    val jobs = jobsDuring {
+      e = intercept[IllegalArgumentException] {
+        Mopso.run(spark, input, cfg.copy(numPartitions = -2), seed = 3L)
+      }
+    }
+    assert(e.getMessage.contains("numPartitions") &&
+      e.getMessage.contains("-2"))
+    assert(jobs === 0)
+  }
+
+  test("a seeded iterMax = 0 run submits a fixed number of Spark jobs") {
+    // the profile, the rows and blocks, the maximin init, the initial
+    // fitness job, the histograms and the K-Means leg's jobs; 44 before
+    // the profile replaced the 3-job SQL aggregate and the 4 bounds jobs
+    // went (avg does not clamp positions)
+    val input = data
+    val jobs = jobsDuring(Mopso.run(spark, input, cfg.copy(iterMax = 0),
+      seed = 42L))
+    assert(jobs === 38)
   }
 }
