@@ -1,7 +1,6 @@
 package graft.mopso
 
-import java.util.concurrent.CancellationException
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.TimeoutException
 
 import scala.util.{Random, Try}
 import scala.util.control.NonFatal
@@ -74,9 +73,9 @@ final case class MopsoResult(
   *
   * Beside it, from the profile to the join, the K-Means baseline
   * ([[Init.kmeansCenters]]) runs on a [[graft.core.ConcurrentLeg]]: only
-  * the histograms read its centers. `run` returns only after the leg's
-  * thread has stopped; a failed run first lets the leg finish, so no job
-  * or cache of it is left behind.
+  * the histograms read its centers. `run` returns only after the leg has
+  * ended; a failed run first lets the leg finish, so no job or cache of
+  * it is left behind.
   */
 object Mopso {
 
@@ -87,8 +86,9 @@ object Mopso {
     val rng = new Random(seed)
     require(cfg0.numPartitions >= 0, "numPartitions must be 0 (sized by " +
       s"partitionsFor) or positive, got ${cfg0.numPartitions}")
-
     val hasId = data.columns.contains("id")
+    require(hasId || cfg0.partitioning != PartByIdRange,
+      "PartByIdRange needs an id column")
     val base = data.select(
       (if (hasId) Seq(col("id")) else Seq.empty) ++
         Seq(col("features"), col("label")): _*)
@@ -98,6 +98,10 @@ object Mopso {
     val InputProfile(labels, total, numFeatures) = profile(base)
     require(total > 0, "Mopso.run needs at least one input row")
     val k = cfg0.kOverride.getOrElse(labels)
+    // Spark's K-Means, the baseline, rejects K < 2, but only on the leg,
+    // which the run joins after its loop
+    require(k >= 2, "K must be at least 2, got " +
+      cfg0.kOverride.fold(s"$labels distinct labels")(o => s"kOverride = $o"))
     val cfg =
       if (cfg0.numPartitions > 0) cfg0
       else cfg0.copy(numPartitions = MopsoConfig.partitionsFor(total))
@@ -108,7 +112,6 @@ object Mopso {
         case PartRandom => base.repartition(cfg.numPartitions)
         case PartByLabel => base.repartition(cfg.numPartitions, col("label"))
         case PartByIdRange =>
-          require(hasId, "PartByIdRange needs an id column")
           base.repartitionByRange(cfg.numPartitions, col("id"))
       }
 
@@ -398,32 +401,24 @@ object Mopso {
 
   /** Runs `body` beside the K-Means baseline on a [[ConcurrentLeg]];
     * `body` joins the leg through the function it is handed. A failing
-    * `body` lets the leg finish before the failure propagates: a K-Means
-    * cancelled mid-fit leaves its caches persisted, and a map-stage job
-    * of its SQL part can start after the cancellation and outlive the run
-    * (Spark turns away the jobs of a cancelled group only when they are
-    * result jobs). Returns only after the leg's thread has stopped.
+    * `body` first lets the leg finish, bounded by the leg's timeout: a
+    * K-Means cancelled mid-fit leaves its caches persisted, and a map-stage
+    * job of its SQL part can start after the cancellation and outlive the
+    * run (Spark turns away the jobs of a cancelled group only when they
+    * are result jobs). A timed-out join propagates at once.
     */
   private def withKMeansLeg[A](spark: SparkSession, features: DataFrame,
       k: Int, maxIter: Int, seed: Long)(
-      body: (() => Array[Array[Double]]) => A): A = {
-    // the leg's thread once it starts; the caller's once the leg may no
-    // longer start
-    val owner = new AtomicReference[Thread]()
-    try ConcurrentLeg(spark, "mopso-kmeans") {
-      if (!owner.compareAndSet(null, Thread.currentThread()))
-        throw new CancellationException("the run ended before the leg began")
-      Init.kmeansCenters(features, k, maxIter, seed)
-    } { kmeans =>
+      body: (() => Array[Array[Double]]) => A): A =
+    ConcurrentLeg(spark, "mopso-kmeans")(
+      Init.kmeansCenters(features, k, maxIter, seed)) { kmeans =>
       try body(kmeans)
       catch {
-        case NonFatal(e) =>
+        case NonFatal(e) if !e.isInstanceOf[TimeoutException] =>
           Try(kmeans())
           throw e
       }
-    } finally if (!owner.compareAndSet(null, Thread.currentThread()))
-      owner.get.join()
-  }
+    }
 
   private def distributedGlobal(cfg: MopsoConfig): Boolean =
     cfg.scope == ScopeGlobal && cfg.numPartitions > 1

@@ -16,15 +16,18 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
 
   override def afterAll(): Unit = super.afterAll()
 
-  /** Spark jobs submitted while `f` runs. The listener bus is drained on
+  /** Spark jobs submitted while `f` runs, only those whose job group
+    * begins with `group` when it is given. The listener bus is drained on
     * both sides, so no earlier job is counted and no job of `f` missed.
     */
-  def jobsDuring(f: => Any): Int = {
+  def jobsDuring(f: => Any, group: Option[String] = None): Int = {
     val sc = spark.sparkContext
     val n = new AtomicInteger()
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        if (group.forall(g => Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith(g)))) n.incrementAndGet()
     }
     Bridge.drainListenerBus(sc)
     sc.addSparkListener(counter)

@@ -1,13 +1,10 @@
 package graft.mopso
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -186,59 +183,92 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
     assert(c1s != c2s)
   }
 
-  /** `f`'s result and the number of Spark jobs the K-Means leg started
-    * meanwhile.
-    */
-  private def withLegJobs[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val legJobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .exists(_.startsWith("mopso-kmeans"))) legJobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val out = try f finally {
-      Bridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    (out, legJobs.get)
-  }
-
   /** Runs `f`, which must throw `E`, and checks what the failed run
-    * leaves: the K-Means leg's thread has stopped, nothing the run or the
-    * leg persisted is still persisted, and once the listener bus has
-    * caught up no job is active. Returns the exception and the number of
-    * jobs the leg started.
+    * leaves: no thread of the K-Means leg still runs the leg's code when
+    * `f` returns, nothing the run or the leg persisted is still persisted,
+    * and once the listener bus has caught up no job is active. Returns the
+    * exception and the number of jobs the leg started.
     */
   private def failedRunLeavesNothing[E <: Throwable: ClassTag](
       f: => Any): (E, Int) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val (e, legJobs) = withLegJobs(intercept[E](f))
-    val legThreads = Thread.getAllStackTraces.keySet.asScala
-      .filter(t => t.getName.startsWith("mopso-kmeans") && t.isAlive)
-    assert(legThreads.isEmpty, "the leg's thread outlived the run")
+    var e: Option[E] = None
+    var legBusy: Set[Thread] = Set.empty
+    val legJobs = jobsDuring({
+      e = Some(intercept[E](f))
+      legBusy = Thread.getAllStackTraces.asScala.collect {
+        case (t, stack) if t.getName.startsWith("mopso-kmeans") &&
+            stack.exists(_.getClassName.startsWith("graft.")) => t
+      }.toSet
+    }, group = Some("mopso-kmeans"))
+    assert(legBusy.isEmpty, "the leg still ran when the run returned")
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
     assert(sc.statusTracker.getActiveJobIds().isEmpty)
-    (e, legJobs)
+    (e.get, legJobs)
   }
 
   test("a throw after the blocks are built releases every persisted RDD") {
-    // Spark's K-Means rejects K = 1 on the leg; the run sees it at the
-    // join, after the blocks, the init and the loop
-    val (e, _) = failedRunLeavesNothing[IllegalArgumentException] {
-      Mopso.run(spark, data, cfg.copy(iterMax = 1, kOverride = Some(1)),
-        seed = 7L)
+    // the run's own jobs are cancelled from its first maximin-init job on,
+    // after the rows and the blocks are persisted; the K-Means leg runs in
+    // a job group of its own and is let finish
+    val sc = spark.sparkContext
+    val group = "spec-after-blocks"
+    val canceller = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group) &&
+            e.stageInfos.exists(_.name.contains("Init.scala")))
+          sc.cancelJobGroupAndFutureJobs(group)
     }
-    assert(e.getMessage.toLowerCase.contains("k"))
+    sc.setJobGroup(group, "a run cancelled after its blocks")
+    sc.addSparkListener(canceller)
+    val (e, _) = try failedRunLeavesNothing[SparkException] {
+      Mopso.run(spark, data, cfg, seed = 7L)
+    } finally {
+      sc.removeSparkListener(canceller)
+      sc.clearJobGroup()
+    }
+    assert(e.getMessage.toLowerCase.contains("cancel"))
+  }
+
+  test("K below 2 and PartByIdRange without an id fail before the run") {
+    val input = data
+    var noId: IllegalArgumentException = null
+    val noIdJobs = jobsDuring {
+      noId = intercept[IllegalArgumentException] {
+        Mopso.run(spark, input.drop("id"), cfg, seed = 7L)
+      }
+    }
+    assert(noId.getMessage.contains("PartByIdRange needs an id column"))
+    assert(noIdJobs === 0)
+    Seq(cfg.copy(kOverride = Some(1)) -> "kOverride = 1",
+        cfg.copy(kOverride = Some(0)) -> "kOverride = 0").foreach {
+      case (c, named) =>
+        var e: IllegalArgumentException = null
+        val jobs = jobsDuring {
+          e = intercept[IllegalArgumentException] {
+            Mopso.run(spark, input, c, seed = 7L)
+          }
+        }
+        assert(e.getMessage.contains("K must be at least 2"))
+        assert(e.getMessage.contains(named))
+        assert(jobs === 1, "only the profile job runs")
+    }
+    val oneLabel = spark.createDataFrame(spark.sparkContext.parallelize(
+      (1 to 10).map(i => (Seq(i.toDouble, 0.0), 3)), 2))
+      .toDF("features", "label")
+    val e = intercept[IllegalArgumentException] {
+      Mopso.run(spark, oneLabel, MopsoConfig.avg(2), seed = 7L)
+    }
+    assert(e.getMessage.contains("got 1 distinct labels"))
   }
 
   test("a run that throws while the leg runs stops and releases the leg") {
     // the jobs of a whole K-Means baseline on this input and seed
-    val (_, fullLeg) = withLegJobs(
-      Mopso.run(spark, data, cfg.copy(iterMax = 0), seed = 7L))
+    val fullLeg = jobsDuring(
+      Mopso.run(spark, data, cfg.copy(iterMax = 0), seed = 7L),
+      group = Some("mopso-kmeans"))
     // L = -1 makes the blocks job throw while K-Means is under way; the
     // leg then runs to its end instead of being cancelled mid-fit
     val (_, legJobs) = failedRunLeavesNothing[SparkException] {

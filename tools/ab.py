@@ -2,14 +2,14 @@
 """Same-session A/B of two git refs on one perfbench workload.
 
 Usage:
-  python3 tools/ab.py REF_A REF_B --workload mopso_avg|query_serve --pairs N
-                      [--seed0 S] [--seconds 12] [--trace-runs]
-                      [--workdir DIR] [--json FILE] [--save DIR] [--keep]
+  python3 tools/ab.py REF_A REF_B --workload W --pairs N
+                      [--seed0 S] [--trace-runs] [--save DIR]
 
 Each ref is exported with ``git archive`` into its own directory under a
-fresh temporary directory (in ``--workdir`` if given), so both sides build
-and run from committed files only, each with its own ``.bench_build/`` and
-``.bench_work/``. Pair ``i`` runs ``perfbench/run.py --trace 0`` once per
+fresh temporary directory, so both sides build and run from committed files
+only, each with its own ``.bench_build/`` and ``.bench_work/``. The workload
+must be one that REF_A's ``BENCHMARK.json`` lists, and every run lasts its
+``run_seconds``. Pair ``i`` runs ``perfbench/run.py --trace 0`` once per
 side with seed ``seed0 + i``; even pairs run A first, odd pairs B first, so
 a drift of the host over the session falls on both sides alike.
 
@@ -18,22 +18,20 @@ end-to-end metric of BENCHMARK.json the median and quartiles of each side,
 the change of the medians, how many pairs B won, and whether the gap of the
 medians exceeds A's interquartile range. ``--trace-runs`` adds one
 ``--trace 1`` run per side after the pairs and prints both sides of every
-per-layer metric. ``--json`` writes all of it. ``--save DIR`` copies each
+per-layer metric. ``--save DIR`` copies each
 run's ``jvm.log`` and its ``*-out`` output directories (``mopso_avg``'s
 reports) to ``DIR/pair<i>-seed<s>-<side>/``, so that the outputs of the two
 sides can be compared after the session. The temporary directory is
-removed at the end unless ``--keep``. Nothing under the repository's
+removed at the end. Nothing under the repository's
 ``perfbench/`` is touched: the runs use the exported copies.
 """
 import argparse
 import json
-import os
 import shutil
 import statistics
 import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -58,13 +56,10 @@ def export(ref, dest):
 
 def run_once(checkout, workload, seed, seconds, trace):
     """One perfbench run in `checkout`: (metrics {name: value}, failed)."""
-    env = dict(os.environ)
-    env.pop("CARGO_TARGET_DIR", None)  # each checkout builds in its own dir
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
            "--trace", str(trace)]
-    t0 = time.time()
-    p = subprocess.run(cmd, cwd=checkout, env=env, text=True,
+    p = subprocess.run(cmd, cwd=checkout, text=True,
                        capture_output=True, timeout=RUN_TIMEOUT_S)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
@@ -73,7 +68,7 @@ def run_once(checkout, workload, seed, seconds, trace):
                          f"with {p.returncode}")
     res = json.loads(lines[-1])
     metrics = {k: v["value"] for k, v in res["metrics"].items()}
-    return metrics, res["failed"], time.time() - t0
+    return metrics, res["failed"]
 
 
 def save_outputs(checkout, workload, dest):
@@ -115,7 +110,7 @@ def summary(runs, bench):
         med_a, med_b = statistics.median(side["A"]), statistics.median(side["B"])
         qa, qb = quartiles(side["A"]), quartiles(side["B"])
         out.append({
-            "metric": name, "unit": m["unit"], "better": m.get("better"),
+            "metric": name,
             "a_median": med_a, "a_q1": qa[0], "a_q3": qa[1],
             "b_median": med_b, "b_q1": qb[0], "b_q3": qb[1],
             "change_pct": (med_b - med_a) / med_a * 100 if med_a else None,
@@ -129,26 +124,25 @@ def main():
         description="Alternating same-session perfbench A/B of two git refs.")
     ap.add_argument("ref_a")
     ap.add_argument("ref_b")
-    ap.add_argument("--workload", required=True,
-                    choices=["mopso_avg", "query_serve"])
+    ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, default=101)
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("--trace-runs", action="store_true")
-    ap.add_argument("--workdir", default=None)
-    ap.add_argument("--json", default=None)
     ap.add_argument("--save", default=None)
-    ap.add_argument("--keep", action="store_true")
     a = ap.parse_args()
     if a.pairs < 1:
         raise SystemExit("ab: --pairs must be at least 1")
 
-    tmp = Path(tempfile.mkdtemp(prefix="ab-", dir=a.workdir))
+    tmp = Path(tempfile.mkdtemp(prefix="ab-"))
     try:
         sides = {"A": tmp / "a", "B": tmp / "b"}
         shas = {"A": export(a.ref_a, sides["A"]),
                 "B": export(a.ref_b, sides["B"])}
         bench = json.loads((sides["A"] / "BENCHMARK.json").read_text())
+        workloads = [w["name"] for w in bench["workloads"]]
+        if a.workload not in workloads:
+            raise SystemExit(f"ab: --workload must be one of {workloads}")
+        seconds = bench["run_seconds"]
         print(f"A = {a.ref_a} ({shas['A'][:12]}), "
               f"B = {a.ref_b} ({shas['B'][:12]}), workload {a.workload}, "
               f"{a.pairs} pairs from seed {a.seed0}", flush=True)
@@ -158,14 +152,13 @@ def main():
             seed = a.seed0 + i
             order = ("A", "B") if i % 2 == 0 else ("B", "A")
             for pos, s in enumerate(order):
-                metrics, failed, wall = run_once(
-                    sides[s], a.workload, seed, a.seconds, 0)
+                metrics, failed = run_once(
+                    sides[s], a.workload, seed, seconds, 0)
                 if a.save:
                     save_outputs(sides[s], a.workload,
                                  Path(a.save) / f"pair{i}-seed{seed}-{s}")
-                runs.append({"pair": i, "seed": seed, "first": order[0],
-                             "position": pos, "side": s, "failed": failed,
-                             "wall_s": round(wall, 1), "metrics": metrics})
+                runs.append({"pair": i, "side": s, "failed": failed,
+                             "metrics": metrics})
                 print(f"pair {i:2d} seed {seed} {s} "
                       f"({'first' if pos == 0 else 'second'}): failed={failed} "
                       + " ".join(f"{k}={v:.4g}" for k, v in metrics.items()),
@@ -183,27 +176,17 @@ def main():
         print("failed runs: " +
               str(sum(1 for r in runs if r["failed"])) + f" of {len(runs)}")
 
-        traced = {}
         if a.trace_runs:
+            traced = {}
             for s in ("A", "B"):
-                traced[s], _, _ = run_once(sides[s], a.workload, a.seed0,
-                                           a.seconds, 1)
+                traced[s], _ = run_once(sides[s], a.workload, a.seed0,
+                                        seconds, 1)
             print("\nper-layer metric (one --trace 1 run each)   A   B")
             for name in sorted(set(traced["A"]) | set(traced["B"])):
                 print(f"{name:<40} {traced['A'].get(name, float('nan')):10.4g}"
                       f" {traced['B'].get(name, float('nan')):10.4g}")
-
-        if a.json:
-            Path(a.json).write_text(json.dumps({
-                "ref_a": a.ref_a, "sha_a": shas["A"], "ref_b": a.ref_b,
-                "sha_b": shas["B"], "workload": a.workload,
-                "seconds": a.seconds, "runs": runs, "summary": rows,
-                "traced": traced}, indent=1))
     finally:
-        if a.keep:
-            print(f"kept {tmp}")
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
