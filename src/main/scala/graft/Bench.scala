@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.{Curation, Dedup, QualityModel, Similarity}
+import graft.operators.Clustering
+
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -15,12 +18,69 @@ import org.apache.spark.sql.SparkSession
   * under-measure expression-heavy queries.
   */
 object Bench {
+  /** An artifact build timed as its own row by Bench and ScaleBench:
+    * `invalidate` drops the per-JVM memo, then `write` exports the
+    * artifact under `artifactRoot(dir)/<sub>` and returns its named
+    * phases (only s14 reports any). `servedBy` is the query that reads
+    * the artifact.
+    */
+  private[graft] final case class Build(name: String, servedBy: String,
+      sub: String, invalidate: String => Unit,
+      write: (SparkSession, String, String) => Seq[(String, Double)]) {
+    def path(dir: String): String = s"${Similarity.artifactRoot(dir)}/$sub"
+    def run(s: SparkSession, dir: String): Seq[(String, Double)] = {
+      invalidate(dir)
+      write(s, dir, path(dir))
+    }
+  }
+
+  private def noPhases(w: (SparkSession, String, String) => Unit)
+      : (SparkSession, String, String) => Seq[(String, Double)] =
+    (s, dir, path) => { w(s, dir, path); Nil }
+
+  /** The six builds, in record order. p7 first: its weights table feeds
+    * the p11 LM fit, so each later row times only its own work.
+    */
+  private[graft] val builds: Seq[Build] = Seq(
+    Build("p7_model_build", "p7_quality_score", "p7_model",
+      QualityModel.invalidate, noPhases(QualityModel.writeServedModel)),
+    Build("p11_lm_build", "p11_pipeline_learned", "p11_lm",
+      Dedup.invalidateLm, noPhases(Dedup.writeP11LmModel)),
+    // d11's corpus signature store: sign + band + rank + closure
+    Build("d11_index_build", "d11_incremental_dedup", "dedup_index",
+      Dedup.invalidateDedupIndex, noPhases(Dedup.writeDedupIndex)),
+    // p12's induced-domain centroids: the seeded k-means fit + export
+    Build("p12_centroid_build", "p12_cluster_budget", "p12_centroids",
+      Curation.invalidateCentroids, noPhases(Curation.writeClusterCentroids)),
+    // s9's three-table IVFADC index: quantizer fits + code encoding
+    Build("s9_index_build", "s9_ann_ivfadc", "ivfadc",
+      Similarity.invalidateIvfAdcBuild, noPhases(Similarity.writeIvfAdcIndex)),
+    // s14's graph index at the production auto layout: graph build +
+    // closure + export
+    Build("s14_index_build", "s14_graph_assign", "s14_graph_full",
+      Clustering.invalidateKnnGraphIndex, Clustering.writeKnnGraphIndex))
+
+  private[graft] def build(name: String): Build = builds.find(_.name == name)
+    .getOrElse(throw new NoSuchElementException(s"no build row $name"))
+
+  /** A driver's positive whole-number env knob, `default` when unset; a
+    * bad value throws naming the knob and the value.
+    */
+  private[graft] def envInt(name: String, default: Int): Int =
+    intOf(name, sys.env.get(name), default)
+
+  private[graft] def intOf(name: String, raw: Option[String],
+      default: Int): Int =
+    raw.fold(Option(default))(_.trim.toIntOption.filter(_ > 0)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$name must be a positive whole number, got '${raw.get}'"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shared factory: bench measures the exact session config the engine
     // ships (incl. the object-hash fallback threshold — see GraftSession)
-    val spark = graft.core.GraftSession.local("graft-bench", cpus.toInt)
+    val spark = graft.core.GraftSession.local("graft-bench",
+      envInt("SPARK_GRAFT_CPUS", 32))
 
     def runOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
@@ -44,13 +104,11 @@ object Bench {
       // conservative); -1 marks a query that never succeeded
       n -> (if (ok.isEmpty) -1.0 else ok(ok.length / 2))
     }
-    // the p7 BUILD face as its own row (VERDICT r12 next-6): the
-    // p7_quality_score rows above serve from the artifact the warmup
-    // pass wrote (writeServedModel memoizes per dir — the production
-    // build-once/serve-many split); this row invalidates the per-JVM
-    // memos FIRST so the timing covers the full train (LR fit) +
-    // export cost, not just the re-export of a cached model
-    def buildRow(name: String)(body: => Unit): (String, Double) =
+    // each artifact's BUILD face as its own row (VERDICT r12 next-6):
+    // the serving rows above read the artifact the warmup pass wrote;
+    // a build row drops the per-JVM memo first, so it times the full
+    // fit + export, not the re-export of a cached artifact
+    def buildRow(name: String)(body: => Any): (String, Double) =
       name -> {
         val t0 = System.nanoTime()
         try { body; (System.nanoTime() - t0) / 1e9 }
@@ -59,53 +117,8 @@ object Bench {
           -1.0
         }
       }
-    val results = timed :+
-      buildRow("p7_model_build") {
-        graft.functions.QualityModel.invalidate(sfDir)
-        graft.functions.QualityModel.writeServedModel(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/p7_model")
-      } :+
-      // p11's second learned gate, same discipline: the pipeline rows
-      // above serve from the artifact the warmup pass wrote; this row
-      // invalidates the memo first so it times the full LM fit + export
-      buildRow("p11_lm_build") {
-        graft.functions.Dedup.invalidateLm(sfDir)
-        graft.functions.Dedup.writeP11LmModel(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/p11_lm")
-      } :+
-      // d11's corpus signature store: the serving rows above hit the
-      // artifact the warmup pass wrote; this row times the full
-      // sign + band + rank + closure build of the base corpus
-      buildRow("d11_index_build") {
-        graft.functions.Dedup.invalidateDedupIndex(sfDir)
-        graft.functions.Dedup.writeDedupIndex(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/dedup_index")
-      } :+
-      // p12's induced-domain centroids: the serving rows above assign
-      // from the artifact the warmup pass wrote; this row times the
-      // full seeded k-means fit + export
-      buildRow("p12_centroid_build") {
-        graft.functions.Curation.invalidateCentroids(sfDir)
-        graft.functions.Curation.writeClusterCentroids(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/p12_centroids")
-      } :+
-      // s9's three-table IVFADC index, same discipline: quantizer fits
-      // + code encoding + parquet export in one timed row, so the s9
-      // rows above are pure from-disk serving
-      buildRow("s9_index_build") {
-        graft.functions.Similarity.invalidateIvfAdcBuild(sfDir)
-        graft.functions.Similarity.writeIvfAdcIndex(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/ivfadc")
-      } :+
-      // s14's two-table graph index (planes + pre-signed component
-      // rows), same discipline: the s14 row above serves against the
-      // holdout store its warmup pass wrote; this row times the full
-      // graph build + closure + export at the production auto layout
-      buildRow("s14_index_build") {
-        graft.operators.Clustering.invalidateKnnGraphIndex(sfDir)
-        graft.operators.Clustering.writeKnnGraphIndex(spark, sfDir,
-          s"${graft.functions.Similarity.artifactRoot(sfDir)}/s14_graph_full")
-      }
+    val results =
+      timed ++ builds.map(b => buildRow(b.name)(b.run(spark, sfDir)))
 
     // Locale.ROOT: the f-interpolator is locale-sensitive and would emit
     // comma decimals (invalid JSON) under e.g. de_DE defaults

@@ -36,19 +36,26 @@ import graft.sources.Tables
   * would triple a multi-minute run for noise that matters at the 0.1s
   * scale, not here).
   *
-  * Usage: `runMain graft.ScaleBench [srcDir] [mult] [workDir] [set]`
-  * — defaults `/root/testdata/sf0.1`, 10, `/tmp/graft_scale`, `full`.
-  * `set=linear` drops the queries with Θ(n²) COMPUTE (c19's exact
-  * all-pairs Conn — shuffle-bounded but still quadratic work) for the
-  * larger multipliers where only the scalable forms are the point.
+  * Usage: `runMain graft.ScaleBench [src] [mult] [work] [case] [eps|indep]`
+  * — defaults `/root/testdata/sf0.1`, 10, `/tmp/graft_scale`, `full`,
+  * `eps`. A case is one row of [[cases]] (a named comparison that
+  * writes its own `metric` record) or a query-set run writing a
+  * `scale_total` record: `full` (every query of [[scaleSet]]), `linear`
+  * (drops the queries with Θ(n²) COMPUTE — c19's exact all-pairs Conn,
+  * mm10's in-bucket verification — and what `full` runs from ×100 up),
+  * `only:a,b` (an explicit query list) and `onlye:a,b` (the same list
+  * over the documents and embeddings facts alone). `indep` switches the
+  * embedding copies to independent per-dimension perturbation
+  * ([[IndepAmp]]). The record goes to `SPARK_GRAFT_SCALE_OUT`, else to
+  * the case's default file (`_indep` before `.json` under `indep`).
   */
 object ScaleBench {
 
   private val CopyOffset = 100000000L
 
   /** Wall-clock of a thunk — the one timing helper every comparison
-    * mode shares (a per-mode copy invites unit drift that would skew
-    * cross-mode record comparisons).
+    * case shares (a per-case copy invites unit drift that would skew
+    * cross-case record comparisons).
     */
   private def timed[A](f: => A): (Double, A) = {
     val t0 = System.nanoTime()
@@ -210,7 +217,7 @@ object ScaleBench {
 
   /** Builds the scaled dataset dir (idempotent: skips when present).
     * `only` restricts to a table subset — the cheap-metrics `layout`
-    * mode needs just the embeddings fact, not a full x1000 star schema.
+    * case needs just the embeddings fact, not a full x1000 star schema.
     */
   def materialize(spark: SparkSession, src: String, mult: Int,
       work: String, only: Option[Set[String]] = None,
@@ -226,57 +233,6 @@ object ScaleBench {
         df.write.mode("overwrite").parquet(dest)
       }
     }
-  }
-
-  /** The q3 broadcast→shuffle mitigation, measured: bucket lineitem and
-    * orders on the order key (one-time ingest cost, reported separately),
-    * run the SAME q3 plan over the bucketed tables, and time it against
-    * the plain-parquet form in the same session. Bucketing satisfies the
-    * big-big join's required distribution, so neither fact side shuffles
-    * — the co-located-join pattern ScaleTechniquesSpec proves
-    * exchange-free, here demonstrated at scale. Returns the timing
-    * entries; asserts both forms agree before trusting either number.
-    */
-  private def q3BucketCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    val db = "graft_bucket"
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db " +
-      s"LOCATION '$work/bucket_warehouse'")
-    spark.sql(s"USE $db")
-    // always rebuild: a warehouse surviving a fact regeneration would
-    // otherwise time stale bucketed data (ADVICE r7)
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS o_b")
-    val t0 = System.nanoTime()
-    Tables.lineitem(spark, work).write
-      .bucketBy(32, "l_orderkey").sortBy("l_orderkey").saveAsTable("li_b")
-    Tables.orders(spark, work).write
-      .bucketBy(32, "o_orderkey").sortBy("o_orderkey").saveAsTable("o_b")
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    import graft.operators.Relational
-    def run(li: DataFrame, o: DataFrame): (Double, Array[(String, Double, Long)]) = {
-      val df = Relational.q3Core(li, o,
-        Tables.customer(spark, work), Tables.nation(spark, work))
-      val t = System.nanoTime()
-      val rows = df.collect().map(r => // 25 rows
-        (r.getString(0), r.getDouble(1), r.getLong(2)))
-      ((System.nanoTime() - t) / 1e9, rows)
-    }
-    def plain() = run(Tables.lineitem(spark, work), Tables.orders(spark, work))
-    def bucketed() = run(spark.table("li_b"), spark.table("o_b"))
-    // one untimed pass each: JIT/codegen + page cache, fair to both forms
-    plain(); bucketed()
-    val (plainSec, plainRows) = plain()
-    val (bucketSec, bucketRows) = bucketed()
-    // keys and counts must match exactly; the revenue sums ride different
-    // aggregation orders (shuffle-hash vs colocated SMJ), so the rounded
-    // cent may legitimately differ by one ulp-flip — tolerate 1 cent
-    require(plainRows.length == bucketRows.length &&
-      plainRows.zip(bucketRows).forall { case ((n1, r1, c1), (n2, r2, c2)) =>
-        n1 == n2 && c1 == c2 && math.abs(r1 - r2) <= 0.011
-      }, "bucketed q3 diverged from the plain plan")
-    Seq("q3_plain" -> plainSec, "q3_bucketed" -> bucketSec,
-      "q3_bucket_build" -> buildSec)
   }
 
   /** The m1 superlinearity mitigation, measured: the reference's
@@ -327,184 +283,6 @@ object ScaleBench {
       rows ++ Seq(
         "m1_parts8_pair_ops" -> n * n / 8.0,
         "m1_parts8_sample01" -> m1TimeRun(spark, work, 8, 0.1))
-    }
-  }
-
-  /** The vocab pipeline at corpus scale (VERDICT r7 §next-7): t6+t10
-    * chained, but with a PRODUCTION-sized vocabulary (50k entries — the
-    * fixture queries use 20 to keep oracles readable) so the broadcast
-    * leg is measured at its real size. Three timings: induction alone
-    * (one corpus scan → TakeOrderedAndProject of per-mapper partials),
-    * application alone against the materialized vocab (broadcast join +
-    * doc_id agg), and the un-cached end-to-end chain (what a one-shot
-    * pipeline pays). Sanity: apply output row count equals the doc
-    * count and OOV ratios stay in [0, 1].
-    */
-  private def vocabChainCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.functions.TextAnalysis.tokensCol
-    val VocabBig = 50000
-    def induced = Tables.documents(spark, work)
-      .select(explode(tokensCol(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("tok"))
-      .limit(VocabBig)
-    def applied(vocab: DataFrame) = Tables.documents(spark, work)
-      .select(col("doc_id"), explode(tokensCol(col("text"))).as("tok"))
-      .join(broadcast(vocab.withColumn("in_vocab", lit(1))),
-        Seq("tok"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("in_vocab").isNull, 1).otherwise(0)).as("n_oov"))
-      .select(col("doc_id"),
-        round(col("n_oov") / col("n_tokens"), 6).as("oov_ratio"))
-    // warmup: JIT + page cache, fair to all three timings
-    applied(induced.select(col("tok"))).write
-      .format("noop").mode("overwrite").save()
-    val (tInduce, vocab) = timed {
-      val v = induced.select(col("tok")).cache()
-      v.count()
-      v
-    }
-    val (tApply, nRows) = timed {
-      val out = applied(vocab).cache()
-      val n = out.count()
-      val bad = out.where(col("oov_ratio") < 0 || col("oov_ratio") > 1).count()
-      out.unpersist()
-      require(bad == 0, "oov_ratio out of [0,1]")
-      n
-    }
-    require(nRows == Tables.documents(spark, work).count(),
-      "apply lost documents")
-    vocab.unpersist()
-    val (tChain, _) = timed {
-      applied(induced.select(col("tok"))).write
-        .format("noop").mode("overwrite").save()
-    }
-    Seq("vocab_induce" -> tInduce, "vocab_apply" -> tApply,
-      "vocab_chained_e2e" -> tChain)
-  }
-
-  /** The BPE trainer at production-shaped merge depth (VERDICT r8
-    * §next-2): the fixture queries train M=32 merges to keep the oracle
-    * CTE chain readable; a real tokenizer runs tens of thousands. This
-    * mode times the full trainer at M=1000 (and M=4000 below x100)
-    * against the scaled corpus, recording the merge count actually
-    * reached (early stop is live semantics now — the count IS the
-    * result if the vocabulary exhausts first). The vocabulary-bound
-    * claim is the point: x10→x100 is 10× the corpus but the same
-    * distinct-word table, so the per-merge cost — and hence the whole
-    * loop beyond the initial scan — should barely move.
-    */
-  private def bpeDepthCompare(spark: SparkSession, work: String,
-      mult: Int): Seq[(String, Double)] = {
-    import graft.functions.Bpe
-    val depths = if (mult >= 100) Seq(1000) else Seq(1000, 4000)
-    val scaledRows = depths.flatMap { m =>
-      val t0 = System.nanoTime()
-      val (merges, words) = Bpe.train(spark, work, m)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(words.count() > 0, "trainer lost the word table")
-      Seq(s"bpe_m$m" -> sec, s"bpe_m${m}_merges" -> merges.length.toDouble)
-    }
-    scaledRows ++ zipfDepthRows(spark, work, mult)
-  }
-
-  /** BPE at PRODUCTION depth (VERDICT r9 §next-4): the scaled TPC-H-ish
-    * corpus exhausts its mergeable pairs at ~90–180 merges — two orders
-    * of magnitude short of a 30k-merge production run — so the per-merge
-    * cost curve was never pinned in the regime that matters. This
-    * generates a vocabulary-RICH synthetic corpus (Zipf-tailed rank
-    * distribution over syllable-composed word types: rank spelled in
-    * base-8 syllables, so frequent words are short and the type set has
-    * deep shared substructure for merges to consume) and runs the FULL
-    * trainer — pre-tokenize, word-count contraction, merge loop — to
-    * ≥1k ACTUAL merges with no early stop. Corpus tokens grow with
-    * `mult`; the word TABLE stays vocabulary-bound, which is exactly the
-    * claim the depth rows measure (per-merge cost flat across the
-    * decade). Two depths pin the curve's slope, not just one point. The
-    * driver-gate oracle is untouched (M=32 on the fixture corpus).
-    */
-  private def zipfDepthRows(spark: SparkSession, work: String,
-      mult: Int): Seq[(String, Double)] = {
-    import graft.functions.Bpe
-    val zdir = work + "_zipf"
-    writeZipfCorpus(spark, zdir, nDocs = 2000L * mult)
-    // 4000 added r11 (VERDICT r10 §next-5): the ~20k-type vocabulary
-    // sustains it (each multi-syllable type ultimately collapses to one
-    // symbol, so available merges ≈ the type count), pinning the
-    // per-merge curve 4× deeper — 30k is then one extrapolation step
-    Seq(250, 1000, 4000).flatMap { m =>
-      val t0 = System.nanoTime()
-      val (merges, words) = Bpe.train(spark, zdir, m)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(words.count() > 0, "trainer lost the zipf word table")
-      require(merges.length == m,
-        s"zipf corpus exhausted at ${merges.length} < $m merges — " +
-          "not the production-depth regime this mode exists to pin")
-      Seq(s"bpezipf_m$m" -> sec,
-        s"bpezipf_m${m}_merges" -> merges.length.toDouble)
-    }
-  }
-
-  /** Zipf vocabulary constants: ~[[ZipfVocab]] word types, log-uniform
-    * rank sampling (density ∝ 1/rank — Zipf s≈1), [[ZipfWordsPerDoc]]
-    * tokens per document.
-    */
-  private val ZipfVocab = 20000.0
-  private val ZipfWordsPerDoc = 100
-
-  /** The corpus generator: fully distributed (spark.range + per-position
-    * hash sampling, no driver loop, no RNG — xxhash64 keyed by (doc,
-    * position) is the deterministic seed), written as a documents table
-    * so [[graft.functions.Bpe.train]] runs its production path on it.
-    */
-  private def writeZipfCorpus(spark: SparkSession, dir: String,
-      nDocs: Long, vocab: Double = ZipfVocab): Unit = {
-    val syls = array(Seq("ba", "ce", "di", "fo", "gu", "he", "ki", "lo")
-      .map(lit): _*)
-    // rank → base-8 digits → syllables: rank 1 = "ce", rank 9 = "cece" …
-    def wordOf(rank: org.apache.spark.sql.Column) =
-      concat_ws("", transform(
-        regexp_extract_all(conv(rank.cast("string"), 10, 8),
-          lit("."), lit(0)),
-        d => element_at(syls, ascii(d) - 47)))
-    // u log-uniform in [0,1) → rank = floor(V^u) ∈ [1, V): P(r) ∝ 1/r
-    def rankAt(i: org.apache.spark.sql.Column) = floor(pow(lit(vocab),
-      pmod(xxhash64(col("id"), i, lit("zipfbpe")), lit(1000000L))
-        / lit(1000000.0))).cast("long")
-    spark.range(nDocs)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(1), lit(ZipfWordsPerDoc)),
-          i => wordOf(rankAt(i)))).as("text"))
-      .write.mode("overwrite").parquet(dir + "/documents.parquet")
-  }
-
-  /** BPE at FULL production depth — 30k real merges (VERDICT r12
-    * next-7, carried from r11): the 20k-type zipf corpus exhausts
-    * around its type count, so this mode generates a 50k-type corpus
-    * (available merges ≈ the type count — each multi-syllable type
-    * ultimately collapses to one symbol) and runs the trainer to
-    * m = 30000 with no early stop, recording total seconds and two
-    * interior checkpoints so the per-merge cost curve is pinned IN the
-    * production regime rather than extrapolated from 4k. The
-    * vocabulary-bound claim is the point: per-merge cost should hold
-    * the ~0.18 s/merge slope the 250/1000/4000 rows measured.
-    */
-  private def bpe30kRows(spark: SparkSession, work: String,
-      mult: Int): Seq[(String, Double)] = {
-    import graft.functions.Bpe
-    val zdir = work + "_zipf50k"
-    writeZipfCorpus(spark, zdir, nDocs = 2000L * mult, vocab = 50000.0)
-    Seq(1000, 30000).flatMap { m =>
-      val t0 = System.nanoTime()
-      val (merges, words) = Bpe.train(spark, zdir, m)
-      val sec = (System.nanoTime() - t0) / 1e9
-      require(words.count() > 0, "trainer lost the 50k-zipf word table")
-      require(merges.length == m,
-        s"50k-type corpus exhausted at ${merges.length} < $m merges")
-      Seq(s"bpezipf50k_m$m" -> sec,
-        s"bpezipf50k_m${m}_merges" -> merges.length.toDouble)
     }
   }
 
@@ -706,8 +484,8 @@ object ScaleBench {
     * a quadratic stall (> ~1.5e9 pairs), because the count already IS
     * the verdict.
     */
-  private def connLshCompare(spark: SparkSession, work: String,
-      mult: Int): Seq[(String, Double)] = {
+  private def connLshCompare(spark: SparkSession,
+      work: String): Seq[(String, Double)] = {
     import graft.operators.Clustering
     val tables = Clustering.LshTables
     val pinned = Clustering.LshPlanes
@@ -808,50 +586,6 @@ object ScaleBench {
       "pq_ivfadc_hard_rr2auto_recall" -> hard(2),
       "pq_flat_sec" -> tFlat, "pq_ivfadc_sec" -> tAdc,
       "pq_hard_sec" -> tHard)
-  }
-
-  /** d9b's pipeline-ORDER mitigation, measured (round 11): the scaled
-    * fixture's ε-copies make every window a corpus-global duplicate, so
-    * acting on spans over the RAW corpus explodes the cut-index to its
-    * W × positions bound (125.6s and a 32 GiB heap at x100). The
-    * engine's stated production order runs document dedup FIRST; this
-    * mode times span removal over the d6 near-dup group REPRESENTATIVES
-    * (exact dedup alone cannot catch the suffix-perturbed copies — the
-    * honest leg is the group closure) against the raw-corpus leg, plus
-    * the structural quantity the explode rides: the summed
-    * duplicated-window position mass before/after. What remains after
-    * dedup is within-corpus repeated PASSAGES — d9b's actual job.
-    */
-  private def d9bOrderCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.functions.Dedup
-    val docs = Tables.documents(spark, work)
-      .select(col("doc_id"), col("text"))
-    val n = docs.count()
-    def timeIt(in: org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      Dedup.spanRemoval(in).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def dupWinMass(in: org.apache.spark.sql.DataFrame): Long =
-      Dedup.substringSpanProfile(in)
-        .agg(coalesce(sum(col("n_dup_windows")), lit(0L)))
-        .head().getLong(0)
-    // dedup-first leg: d6's transitive near-dup groups, one
-    // representative (the group minimum) per component
-    val reps = Dedup.d6DedupGroups(spark, work)
-      .where(col("doc_id") === col("group_id"))
-      .select(col("doc_id"))
-      .join(docs, Seq("doc_id"))
-      .localCheckpoint(eager = true) // consumed by profile + removal
-    val nReps = reps.count()
-    Seq(
-      "d9b_n_docs" -> n.toDouble,
-      "d9b_n_reps" -> nReps.toDouble,
-      "d9b_dupwin_raw" -> dupWinMass(docs).toDouble,
-      "d9b_dupwin_reps" -> dupWinMass(reps).toDouble,
-      "d9b_sec_raw" -> timeIt(docs),
-      "d9b_sec_reps" -> timeIt(reps))
   }
 
   /** Persisted-index serving at decade scale (round 11): write the
@@ -978,72 +712,6 @@ object ScaleBench {
       "pqdisk_drift_rbar" -> rbar) ++ staleRows
   }
 
-  /** The x1000 LAYERED answer, TIMED (VERDICT r12 next-3 — previously
-    * arithmetic only): the three mitigation FAMILIES of a 100 TB
-    * ingest, each timed against the FULL x1000 fixture. (1) dedup
-    * first: the d6 transitive near-dup closure over all documents,
-    * recording the representative count as the collapse evidence;
-    * (2) CAPPED near-dup candidates over the embeddings — the
-    * materialized candidate count lands next to scale_layout.json's
-    * arithmetic prediction (ordered-pair units: clique m(m−1) + star
-    * 2(c−m); the emitted unordered rows count half), then the d7
-    * verified groups end-to-end; (3) ONE ANN serving leg from the
-    * persisted IVFADC index, build timed separately
-    * (build-once/serve-many). Each stage runs over the full corpus —
-    * these are independent family costs at x1000, summed as an upper
-    * bound; the dedup-first ORDERING claim itself (downstream stages
-    * run on survivors only) is what p10/p11's oracle-checked
-    * compositions and decade rows carry, and d9border measures its
-    * win directly. Only documents + embeddings materialize — the star
-    * schema isn't part of this claim and a x1000 lineitem would be
-    * 600M rows of noise.
-    */
-  /** d11 at depth: the SAME fixed 500-document arriving batch (the
-    * sf0.1 delta ids, present verbatim in every scaled copy-0) served
-    * against corpus stores one and two decades apart. The build row
-    * carries the corpus-sized cost (sign + band + rank + closure — the
-    * once-per-corpus work); the serve row's only corpus-dependent term
-    * is the single streaming scan of the band store, so it should move
-    * by far less than the 10× corpus growth between rows — THAT gap is
-    * the incremental claim, measured. A full-delta serve row (the 10%
-    * batch, growing with the corpus) rides along for reference.
-    */
-  private def d11DeepRows(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.functions.{Dedup, Similarity}
-    val nDocs = Tables.documents(spark, work).count()
-    val path = s"${Similarity.artifactRoot(work)}/dedup_index"
-    Dedup.invalidateDedupIndex(work)
-    val (tBuild, _) = timed(Dedup.writeDedupIndex(spark, work, path))
-    val delta = Tables.documents(spark, work)
-      .where(pmod(col("doc_id"), lit(Dedup.DeltaMod))
-        === Dedup.DeltaResidue)
-      .select(col("doc_id"), col("text"))
-    val fixed = delta.where(col("doc_id") < 5000)
-    // untimed warmup of the serving plan (JIT + store page cache), then
-    // the timed fixed-batch serve — the cross-decade comparison row
-    Dedup.assignAgainstIndex(spark, work, path, fixed)
-      .write.format("noop").mode("overwrite").save()
-    val (tFixed, _) = timed {
-      Dedup.assignAgainstIndex(spark, work, path, fixed)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // timed: ONE materialization (noop write), same as every decade
-    // row; the matched count re-executes the plan and is NOT timed
-    val (tFull, _) = timed {
-      Dedup.assignAgainstIndex(spark, work, path, delta)
-        .write.format("noop").mode("overwrite").save()
-    }
-    val nFull = Dedup.assignAgainstIndex(spark, work, path, delta)
-      .where(col("n_matches") > 0).count()
-    Seq(
-      "d11_n_docs" -> nDocs.toDouble,
-      "d11_index_build_sec" -> tBuild,
-      "d11_serve_batch500_sec" -> tFixed,
-      "d11_serve_fulldelta_sec" -> tFull,
-      "d11_fulldelta_matched" -> nFull.toDouble)
-  }
-
   /** The d11 backfill boundary, measured (the q3 bucketing pattern
     * applied to the dedup store): at 10%-of-corpus deltas the broadcast
     * of the delta band table stops being the right plan, so save the
@@ -1055,10 +723,10 @@ object ScaleBench {
     */
   private def d11BucketCompare(spark: SparkSession,
       work: String): Seq[(String, Double)] = {
-    import graft.functions.{Dedup, Similarity}
-    val path = s"${Similarity.artifactRoot(work)}/dedup_index"
-    Dedup.invalidateDedupIndex(work)
-    val (tBuild, _) = timed(Dedup.writeDedupIndex(spark, work, path))
+    import graft.functions.Dedup
+    val build = Bench.build("d11_index_build")
+    val path = build.path(work)
+    val (tBuild, _) = timed(build.run(spark, work))
     val delta = Tables.documents(spark, work)
       .where(pmod(col("doc_id"), lit(Dedup.DeltaMod))
         === Dedup.DeltaResidue)
@@ -1107,11 +775,9 @@ object ScaleBench {
   private def s14BucketCompare(spark: SparkSession,
       work: String): Seq[(String, Double)] = {
     import graft.operators.Clustering
-    import graft.functions.Similarity
-    val path = s"${Similarity.artifactRoot(work)}/s14_graph_full"
-    Clustering.invalidateKnnGraphIndex(work)
-    val (tBuild, _) =
-      timed(Clustering.writeKnnGraphIndex(spark, work, path))
+    val build = Bench.build("s14_index_build")
+    val path = build.path(work)
+    val (tBuild, _) = timed(build.run(spark, work))
     val delta = Tables.labeledPoints(spark, work)
       .where(pmod(col("id"), lit(Clustering.S14Mod)) ===
         lit(Clustering.S14Res))
@@ -1201,232 +867,6 @@ object ScaleBench {
     Seq("s13rank_graph_build" -> tGraph) ++ rows
   }
 
-  /** Sampled neighbor recall of the CAPPED production graph vs both the
-    * exact top-L and the uncapped chain (VERDICT r15 next-1's "measured
-    * recall" requirement): every ~step-th id (hash-sampled, ~500
-    * queries) gets its exact top-L from the broadcast O(s·n) ranking —
-    * the denominator that stays linear at decades where the full
-    * exact pass is the quadratic stall — and the capped/uncapped
-    * LSH-fed top-L at the auto layout, query side pruned BEFORE the
-    * bucket join. Records recall-vs-exact for both chains plus the
-    * capped chain's edge overlap with the uncapped one (what the cap
-    * actually discards), with per-leg wall clock.
-    */
-  private def graphRecallCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    val n = Tables.labeledPoints(spark, work).count()
-    // env overrides so the recall of a STEERED layout (r20: the x1000
-    // store certifies at 28 planes / cap 256 / hash prefix) is
-    // measurable against the same exact denominator as the auto one
-    val numPlanes = sys.env.get("SPARK_GRAFT_RECALL_PLANES")
-      .map(_.trim.toInt).getOrElse(Clustering.lshPlanesFor(n))
-    val capN = sys.env.get("SPARK_GRAFT_RECALL_CAP")
-      .map(_.trim.toInt).getOrElse(Clustering.GraphBuildCap)
-    val hashOrder = sys.env.get("SPARK_GRAFT_RECALL_HASH").contains("1")
-    val step = math.max(1L, n / 500L)
-    val xiF = Some(Clustering.sampledId(col("xi"), step))
-    val (tEx, (exact, nExact)) =
-      timed(Clustering.sampledExactNeighbors(spark, work, step))
-    def leg(df: org.apache.spark.sql.DataFrame) =
-      timed(df.select(col("xi"), col("yi")).localCheckpoint(eager = true))
-    val (tU, unc) = leg(Clustering.lshRankedNeighbors(spark, work,
-      numPlanes, Clustering.LshTables, xiFilter = xiF))
-    val (tC, cap) = leg(Clustering.cappedGraphAt(spark, work,
-      numPlanes, Clustering.LshTables, capN,
-      xiFilter = xiF, hashOrder = hashOrder)._1)
-    val nU = unc.count().toDouble
-    def hits(a: org.apache.spark.sql.DataFrame,
-        b: org.apache.spark.sql.DataFrame): Double =
-      a.join(b, Seq("xi", "yi"), "left_semi").count().toDouble
-    Seq(
-      "graphrecall_n_points" -> n.toDouble,
-      "graphrecall_planes" -> numPlanes.toDouble,
-      "graphrecall_cap" -> capN.toDouble,
-      "graphrecall_hash_order" -> (if (hashOrder) 1.0 else 0.0),
-      // distinct xi, not nExact/L: a tiny corpus or tie filtering can
-      // hand a sampled query fewer than L exact neighbors (ADVICE r16)
-      "graphrecall_n_queries" ->
-        exact.select(col("xi")).distinct().count().toDouble,
-      "graphrecall_exact_sec" -> tEx,
-      "graphrecall_uncapped_sec" -> tU,
-      "graphrecall_capped_sec" -> tC,
-      "graphrecall_uncapped_vs_exact" -> hits(unc, exact) / nExact,
-      "graphrecall_capped_vs_exact" -> hits(cap, exact) / nExact,
-      "graphrecall_capped_vs_uncapped" -> hits(cap, unc) / nU)
-  }
-
-  /** Adversarial mega-bucket probe for the capped generator (VERDICT
-    * r15 next-6): a synthetic corpus whose every point lands in ONE
-    * bucket per table, at 10⁵ and 10⁶ members — far past any
-    * data-derived bucket mass — timing the whole capped chain. The two
-    * suspects are the per-bucket row_number sort (a single task sorts
-    * the whole corpus once per table) and the result-sized pair dedup
-    * (n·tables·cap rows before DISTINCT); if the single-task sort is
-    * the wall, the cap selection moves to the TopKByKey aggregate
-    * (min-cap-by-id is exactly its shape). Emits rows/sec so the two
-    * sizes expose the scaling exponent directly.
-    */
-  private def megaBucketProbe(spark: SparkSession): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    Seq(100000, 1000000).flatMap { n =>
-      // collinear ε-clones: every dot product positive ⇒ one bucket per
-      // table; distances distinct so the ranking is total
-      val pc = spark.range(n.toLong).select(col("id"),
-        array((0 until 4).map(d =>
-          lit(1.0) + col("id") * lit(1e-12) * lit(d + 1)): _*)
-          .as("features"),
-        lit(0).as("cluster"))
-      val planes = (0 until
-        Clustering.LshPlanes * Clustering.LshTables)
-        .map(i => Array.fill(4)(1.0 + i * 1e-9)).toSeq
-      val (t, cnt) = timed {
-        Clustering.lshRankedNeighborsCapped(pc, planes,
-          Clustering.LshPlanes, Clustering.LshTables,
-          Clustering.GraphBuildCap).count()
-      }
-      Seq(s"megabucket_${n}_sec" -> t,
-        s"megabucket_${n}_graph_rows" -> cnt.toDouble)
-    }
-  }
-
-  /** Graph-store staleness curve (VERDICT r14 next-3 — the d11/s9
-    * protocol, applied to neighborhood state): build the index on a
-    * base split, append the held-out fraction in four sequential
-    * batches against the FROZEN planes, then compare the resulting
-    * store-wide component partition against a fresh full-corpus
-    * rebuild. Drift is the Rand and adjusted-Rand index between the
-    * two partitions, computed from contingency COUNTS (three grouped
-    * aggregates — never a pair enumeration), plus each store's
-    * component count: appended points inherit through bucket
-    * collisions but never refine the base neighborhoods or the
-    * layout, so agreement decays as the appended fraction grows — the
-    * rebuild cadence is the point on this curve a deployment
-    * tolerates, exactly as measured for d11/s9.
-    */
-  /** Capped-vs-uncapped SERVE parity and cost at a decade (VERDICT r16
-    * next-1 verification leg + next-8 recall geometry): build the full
-    * auto-layout store once, then serve the 1/8 delta batch through
-    * (a) the default face — the physically capped bucketed store — and
-    * (b) the uncapped plain explode (exactly the join that died on
-    * disk spill at x1000). Three timed passes each after a warm pass
-    * (the warm-pair protocol); ONE untimed joined pass measures the
-    * assignment delta: the fraction of batch vectors whose component /
-    * neighbor changes under the prefix. A capped bucket always keeps a
-    * non-empty prefix, so the singleton sets must be IDENTICAL — the
-    * mode asserts that invariant rather than measuring it.
-    */
-  private def s14CapCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    import graft.functions.Similarity
-    val path = s"${Similarity.artifactRoot(work)}/s14_graph_hold"
-    Clustering.invalidateKnnGraphIndex(work)
-    // ADVICE r17: build on the =!= S14Res HOLDOUT (the s14GraphAssign
-    // shape) — a full-corpus store lets every probe self-match at
-    // distance 0, so the parity delta would partly measure
-    // self-matches instead of novel-point serving
-    val pts = Tables.labeledPoints(spark, work)
-      .select(col("id"), col("features"))
-    val base = pts.where(pmod(col("id"), lit(Clustering.S14Mod)) =!=
-      lit(Clustering.S14Res))
-    val (tBuild, _) = timed(Clustering.writeKnnGraphIndexOf(spark, base,
-      Clustering.lshPlanesFor(base.count()), path,
-      s"$work->$path->cap_holdout"))
-    val delta = pts
-      .where(pmod(col("id"), lit(Clustering.S14Mod)) ===
-        lit(Clustering.S14Res))
-    def run(capped: Boolean): Long =
-      Clustering.assignFromGraphIndex(delta, path,
-        useBucketed = capped, capped = capped).count()
-    // one joined pass: capped-vs-uncapped assignment deltas on `batch`
-    // — factored so the r2dist-ordered export and the stitched
-    // deployment re-measure the identical quantity
-    def diffs(batch: DataFrame): (Long, Long, Long, Long) = {
-      val c = Clustering.assignFromGraphIndex(batch, path)
-        .select(col("id"), col("neighbor").as("cn"),
-          col("component").as("cc"))
-      val u = Clustering.assignFromGraphIndex(batch, path,
-          useBucketed = false, capped = false)
-        .select(col("id"), col("neighbor").as("un"),
-          col("component").as("uc"))
-      val r = c.join(u, "id").agg(
-        count(lit(1)).as("n"),
-        sum(when(col("cc") =!= col("uc"), 1L).otherwise(0L)).as("cdiff"),
-        sum(when(!(col("cn") <=> col("un")), 1L).otherwise(0L)).as("ndiff"),
-        sum(when(col("cn").isNull =!= col("un").isNull, 1L).otherwise(0L))
-          .as("singdiff")).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    }
-    run(capped = true); run(capped = false) // warm: JIT + page cache
-    val cs = (1 to 3).map(_ => timed(run(capped = true)))
-    val us = (1 to 3).map(_ => timed(run(capped = false)))
-    val (n0, cd0, nd0, sd0) = diffs(delta)
-    require(sd0 == 0L,
-      s"capped serve changed the singleton set ($sd0 rows) — " +
-        "a non-empty bucket must keep a non-empty prefix")
-    // phase 2 (VERDICT r18 next-2, the re-opened r16-#8 swap): rebuild
-    // the serving export with the (r2dist, nid) prefix — keep the rows
-    // whose own rank-2 distance is smallest, i.e. the dense-mass
-    // members — and re-measure the SAME parity against the SAME
-    // uncapped baseline (order-independent by construction)
-    val storeOrder = spark.read.parquet(s"$path/store_meta")
-      .collect()(0).getString(3)
-    Clustering.exportBucketedStore(spark, path, Clustering.GraphBuildCap,
-      order = "r2dist")
-    run(capped = true) // warm the re-exported table
-    val cs2 = (1 to 3).map(_ => timed(run(capped = true)))
-    val (n2, cd2, nd2, sd2) = diffs(delta)
-    require(sd2 == 0L, s"r2dist-ordered serve changed the singleton set")
-    // phase 3 (VERDICT r18 next-7): the parity a STITCHED deployment
-    // sees. Restore the build's hash-order export, append HALF the
-    // delta with
-    // stitch on (the map repairs the chain breaks the holdout build
-    // severed), then measure capped-vs-uncapped on the OTHER half —
-    // novel points, both faces canonicalized through the map — to test
-    // the r18 claim that the component-level delta largely collapses
-    // into the merges the map repairs.
-    Clustering.exportBucketedStore(spark, path, Clustering.GraphBuildCap,
-      order = storeOrder)
-    val half = pmod(xxhash64(col("id"), lit("s14caphalf")), lit(2L))
-    val halfA = delta.where(half === 0L)
-    val halfB = delta.where(half === 1L)
-    (0 until 2).foreach { b =>
-      Clustering.appendToGraphIndex(
-        halfA.where(pmod(xxhash64(col("id"), lit("s14batch")), lit(2L))
-          === lit(b.toLong)), path, stitch = true)
-    }
-    val mapRows = Clustering.readComponentMap(spark, path).count()
-    val (n3, cd3, nd3, _) = diffs(halfB)
-    // a tiny delta can leave a half/batch empty — 0/0 would land NaN
-    // in the JSON record and break downstream parsing (ADVICE r19)
-    def frac(c: Long, n: Long): Double =
-      if (n == 0L) 0.0 else c.toDouble / n
-    Seq(
-      "s14cap_index_build" -> tBuild,
-      "s14cap_serve_capped" -> cs.map(_._1).sorted.apply(1),
-      "s14cap_serve_uncapped" -> us.map(_._1).sorted.apply(1),
-      "s14cap_n_batch" -> n0.toDouble,
-      "s14cap_component_diff_frac" -> frac(cd0, n0),
-      "s14cap_neighbor_diff_frac" -> frac(nd0, n0),
-      "s14cap_serve_capped_r2" -> cs2.map(_._1).sorted.apply(1),
-      "s14cap_component_diff_frac_r2" -> frac(cd2, n2),
-      "s14cap_neighbor_diff_frac_r2" -> frac(nd2, n2),
-      "s14cap_stitch_map_rows" -> mapRows.toDouble,
-      "s14cap_n_batch_stitched" -> n3.toDouble,
-      "s14cap_component_diff_frac_stitched" -> frac(cd3, n3),
-      "s14cap_neighbor_diff_frac_stitched" -> frac(nd3, n3))
-  }
-
-  /** `stitch = false` is the frozen-base staleness protocol (the r15–17
-    * records); `stitch = true` re-runs the IDENTICAL protocol with the
-    * append-time stitch on (VERDICT r17 next-1's verification leg) —
-    * same fresh baseline, same fractions, same batch split — plus the
-    * per-fraction stitch-map size, so the two records differ only in
-    * the repair under measurement. The stale partition reads
-    * [[Clustering.storeComponents]] (raw labels ∘ stitch map; the
-    * identity when no map exists, so the frozen numbers are unchanged).
-    */
   /** (rand, ari) agreement of two labelings joined as (`a`, `b`)
     * columns — contingency COUNTS only (three grouped aggregates),
     * never a pair enumeration.
@@ -1451,8 +891,9 @@ object ScaleBench {
     (rand, ari)
   }
 
-  /** d11 lexical-store staleness (VERDICT r18 next-6 — the s14stale
-    * protocol shape on the signature store). The store is build-once /
+  /** d11 lexical-store staleness (VERDICT r18 next-6 — the graph
+    * store's staleness protocol shape on the signature store), at
+    * 12/25/50% arriving. The store is build-once /
     * serve-forever and serving never mutates it, so the lexical
     * analogue of the graph family's chain breaks is arrival↔arrival
     * duplication the frozen base cannot link: two arriving near-dups
@@ -1478,10 +919,7 @@ object ScaleBench {
     val fresh = spark.read.parquet(freshPath)
       .select(col("doc_id"), col("group_id").as("fresh_g"))
     val nFreshComp = fresh.select(col("fresh_g")).distinct().count()
-    val pcts = sys.env.get("SPARK_GRAFT_STALE_PCTS")
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(Seq(12, 25, 50))
-    val rows = pcts.flatMap { pct =>
+    val rows = Seq(12, 25, 50).flatMap { pct =>
       val arrF = pmod(xxhash64(col("doc_id"), lit("d11stale")),
         lit(100L)) < lit(pct.toLong)
       val path = s"${Similarity.artifactRoot(work)}/d11_stale$pct"
@@ -1530,514 +968,181 @@ object ScaleBench {
       "d11stale_fresh_components" -> nFreshComp.toDouble) ++ rows
   }
 
-  /** [[graft.operators.Clustering.StitchFidelityMax]] calibration
-    * sweep (VERDICT r19 next-5): the refusal bound today rests on two
-    * endpoints — faithful stores certify ≈ 1.0 and stitch soundly, the
-    * x1000 catastrophe certifies ~255 and percolates (ARI 0.005). This
-    * mode fills the curve between them with CONTROLLED starvation:
-    * build the 12%-holdout base store at a decade that certifies
-    * faithful (x100 measures 1.0), then per inflation factor copy the
-    * store, multiply the stored r2dist of a hash-chosen HALF of the
-    * tier-0 rows by the factor (exactly the starved shape — thresholds
-    * wider than their true neighborhoods, read by BOTH gate legs:
-    * the c-side threshold and the rank-1 witness), re-derive the
-    * serving face from the rewritten points, DELETE the certificate
-    * (the sweep measures what stitching WOULD do at that inflation —
-    * the production gate refuses ≥ 2), append the arrivals in four
-    * stitched waves, and measure ARI vs the fresh full-corpus rebuild.
-    * Factor 1 is the control: byte-identical protocol, no inflation —
-    * it must reproduce the validated stitched band.
+  /** What a case measures over: the session, the unscaled source, the
+    * work root, the scaled dir under it, and the multiplier.
     */
-  private def fidelSweepCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    import graft.functions.Similarity
-    val pts = Tables.labeledPoints(spark, work)
-      .select(col("id"), col("features"))
-    val n = pts.count()
-    Clustering.invalidateKnnGraphIndex(work)
-    val freshPath = s"${Similarity.artifactRoot(work)}/s14_stale_fresh"
-    val reuseFresh = sys.env.get("SPARK_GRAFT_STALE_REUSE").contains("1") &&
-      new java.io.File(s"$freshPath/store_meta").exists()
-    val (tFresh, _) =
-      if (reuseFresh) (0.0, ())
-      else timed(Clustering.writeKnnGraphIndexOf(spark, pts,
-        Clustering.lshPlanesFor(n), freshPath, s"$work->stale_fresh"))
-    val fresh = spark.read.parquet(s"$freshPath/points")
-      .select(col("id"), col("component").as("fresh_c"))
-    val pct = 12
-    val arrF = pmod(xxhash64(col("id"), lit("s14stale")), lit(100L)) <
-      lit(pct.toLong)
-    val base = pts.where(!arrF)
-    val basePath = s"${Similarity.artifactRoot(work)}/s14_fidel_base"
-    val (tBase, _) = timed(Clustering.writeKnnGraphIndexOf(spark, base,
-      Clustering.lshPlanesFor(base.count()), basePath,
-      s"$work->fidel_base"))
-    val baseCert = spark.read
-      .parquet(s"$basePath/stitch_fidelity").collect()(0)
-    val arrivals = pts.where(arrF)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(basePath).getFileSystem(conf)
-    val factors = sys.env.get("SPARK_GRAFT_SWEEP_FACTORS")
-      .map(_.split(",").toSeq.map(_.trim.toDouble))
-      .getOrElse(Seq(1.0, 2.0, 8.0, 32.0))
-    val rows = factors.flatMap { f =>
-      val tag = f.toInt
-      val path = s"${Similarity.artifactRoot(work)}/s14_fidel_x$tag"
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(basePath), fs,
-        new org.apache.hadoop.fs.Path(path), false, conf)
-      if (f != 1.0) {
-        // ×f on a hash-half of the tier-0 thresholds (+∞ and NULL pass
-        // through arithmetic unchanged); points/ is the source of
-        // truth, so the serving face is re-derived from it afterwards
-        val inflated = spark.read.parquet(s"$path/points")
-          .withColumn("r2dist",
-            when(pmod(xxhash64(col("id"), lit("fidelsweep")), lit(2L))
-                === lit(0L) && col("tier") === lit(0),
-              col("r2dist") * lit(f))
-            .otherwise(col("r2dist")))
-        inflated.write.mode("overwrite")
-          .parquet(s"$path/points_inflated")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/points"), true)
-        fs.rename(
-          new org.apache.hadoop.fs.Path(s"$path/points_inflated"),
-          new org.apache.hadoop.fs.Path(s"$path/points"))
-        // cap AND order from store_meta (ADVICE r20): letting cap
-        // default to GraphBuildCap would silently re-export a
-        // cap-steered base store at the wrong cap and overwrite its
-        // store_meta with it
-        val meta = spark.read.parquet(s"$path/store_meta").collect()(0)
-        Clustering.exportBucketedStore(spark, path,
-          cap = meta.getInt(0), order = meta.getString(3))
-      }
-      // the sweep bypasses the production gate on purpose: it measures
-      // what the stitch WOULD do at this inflation
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/stitch_fidelity"),
-        true)
-      val (tApp, _) = timed {
-        (0 until 4).foreach { b =>
-          Clustering.appendToGraphIndex(
-            arrivals.where(pmod(xxhash64(col("id"), lit("s14batch")),
-              lit(4L)) === lit(b.toLong)), path, stitch = true)
-        }
-      }
-      val mapRows = Clustering.readComponentMap(spark, path).count()
-      val joint = Clustering.storeComponents(spark, path)
-        .select(col("id"), col("component").as("stale_c"))
-        .join(fresh, "id").persist()
-      val (rand, ari) = randAri(joint, "stale_c", "fresh_c")
-      val nComp = joint.select(col("stale_c")).distinct().count()
-      joint.unpersist()
-      Seq(s"fidelsweep_x${tag}_ari" -> ari,
-        s"fidelsweep_x${tag}_rand" -> rand,
-        s"fidelsweep_x${tag}_components" -> nComp.toDouble,
-        s"fidelsweep_x${tag}_map_rows" -> mapRows.toDouble,
-        s"fidelsweep_x${tag}_append_sec" -> tApp)
-    }
-    Seq("fidelsweep_fresh_build_sec" -> tFresh,
-      "fidelsweep_base_build_sec" -> tBase,
-      "fidelsweep_base_cert_p50" -> baseCert.getDouble(0),
-      "fidelsweep_base_cert_p90" -> baseCert.getDouble(1)) ++ rows
-  }
+  private[graft] final case class Scaled(spark: SparkSession, src: String,
+      root: String, work: String, mult: Int)
 
-  /** Probe-only (planes, cap) fidelity landscape of the scaled corpus
-    * — no store builds. SPARK_GRAFT_PROBE_PLANES / _CAPS override the
-    * default grid (auto..auto+16 step 4 x cap {64, 128, 256}).
+  /** One named case: the `metric` its record carries, its default record
+    * file, the fact tables it materializes (`None`: every table), and the
+    * measurement, which returns the record's fields between `unit` and
+    * `src` as raw JSON.
     */
-  private def fidelProbeCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    val pts = Tables.labeledPoints(spark, work)
-      .select(col("id"), col("features"))
-    val auto = Clustering.lshPlanesFor(pts.count())
-    val planes = sys.env.get("SPARK_GRAFT_PROBE_PLANES")
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(Seq(0, 4, 8, 12, 16).map(auto + _))
-    val caps = sys.env.get("SPARK_GRAFT_PROBE_CAPS")
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(Seq(Clustering.GraphBuildCap, 128, 256))
-    val grid = for (c <- caps; p <- planes) yield (p, c)
-    val pairRows =
-      if (!sys.env.get("SPARK_GRAFT_PROBE_PAIRS").contains("1")) Seq.empty
-      else Clustering.cappedPairMassSweep(spark, pts, grid).map {
-        case (p, c, m) => s"fidelprobe_c${c}_p${p}_pairs" -> m.toDouble
-      }
-    Clustering.fidelityProbeSweep(spark, pts, grid).flatMap {
-      case (p, c, cert) => Seq(
-        s"fidelprobe_c${c}_p${p}_p50" -> cert.p50,
-        s"fidelprobe_c${c}_p${p}_p90" -> cert.p90,
-        s"fidelprobe_c${c}_p${p}_frac" -> cert.fracAbove)
-    } ++ pairRows :+ ("fidelprobe_auto_planes" -> auto.toDouble)
+  private[graft] final case class Case(metric: String, file: String,
+      tables: Option[Set[String]], run: Scaled => Seq[(String, String)])
+
+  /** A comparison case: its record carries the measured map as `queries`. */
+  private def curve(metric: String, file: String,
+      tables: Option[Set[String]])(f: Scaled => Seq[(String, Double)]) =
+    Case(metric, file, tables, x => Seq("queries" -> json(f(x).map {
+      case (k, v) => k -> fmt(v) })))
+
+  private val embeddingsOnly = Some(Set("embeddings"))
+  private val documentsOnly = Some(Set("documents"))
+
+  /** The comparison cases by name. A case is kept while a scaladoc
+    * outside this file cites a record it wrote, so every such record
+    * stays reproducible; SCALE.md's retired-case table lists the records
+    * of the deleted cases and the commit that wrote each one.
+    */
+  private[graft] val cases: Map[String, Case] = Map(
+    "connlsh" -> curve("connlsh_layout", "scale_connlsh.json", None)(
+      x => connLshCompare(x.spark, x.work)),
+    "ivfauto" -> curve("ivfauto_curve", "scale_ivfauto.json", None)(
+      x => ivfAutoCompare(x.spark, x.work)),
+    "layout" -> curve("layout_probe", "scale_layout.json", embeddingsOnly)(
+      x => layoutProbe(x.spark, x.work)),
+    "pq" -> curve("pq_curve", "scale_pq.json", None)(
+      x => pqCompare(x.spark, x.work)),
+    "pqdisk" -> curve("pqdisk", "scale_pqdisk.json", None)(
+      x => pqDiskCompare(x.spark, x.work)),
+    "trunc" -> curve("trunc_curve", "scale_trunc.json", embeddingsOnly)(
+      x => truncCompare(x.spark, x.work)),
+    "d11bucket" -> curve("d11_bucket_compare", "scale_d11bucket.json",
+      documentsOnly)(x => d11BucketCompare(x.spark, x.work)),
+    "d11stale" -> curve("d11_staleness", "scale_d11stale.json",
+      documentsOnly)(x => d11StaleCompare(x.spark, x.work)),
+    // m1 reads labeledPoints, which derive from the embeddings fact
+    "m1part" -> curve("m1_partition_compare", "scale_m1part.json",
+      embeddingsOnly)(x => m1PartitionCompare(x.spark, x.work, x.mult)),
+    "s13rank" -> curve("s13_rank_table", "scale_s13rank.json",
+      embeddingsOnly)(x => s13RankCompare(x.spark, x.work)),
+    "s14bucket" -> curve("s14_bucket_compare", "scale_s14bucket.json",
+      embeddingsOnly)(x => s14BucketCompare(x.spark, x.work)))
+
+  /** mm10: the scaled fixture replicates container params verbatim, so
+    * in-bucket pair verification goes quadratic at x100 (SCALE.md §R8).
+    * `linear` drops these, and so does `full` from ×100 up — a `full` run
+    * at x100 would otherwise hang on them (their measured mitigations
+    * c19→LSH-fed and mm10→mm10b stay in).
+    */
+  private val quadraticCompute = Set("c19_conn_topk", "mm10_audio_neardup")
+
+  /** The positional arguments, each checked before any Spark work. */
+  private[graft] final case class Args(src: String, mult: Int,
+      root: String, perturb: String, bench: Case) {
+    def work: String = s"$root/x$mult" + (if (perturb == "indep") "i" else "")
+    /** The indep fixture gets its OWN default record file — without this
+      * an indep run would clobber the eps-decade record (the
+      * commit-2369f0b incident class).
+      */
+    def outFile: String =
+      if (perturb == "indep") bench.file.stripSuffix(".json") + "_indep.json"
+      else bench.file
   }
 
-  private def s14StaleCompare(spark: SparkSession,
-      work: String, stitch: Boolean = false): Seq[(String, Double)] = {
-    import graft.operators.Clustering
-    import graft.functions.Similarity
-    val pts = Tables.labeledPoints(spark, work)
-      .select(col("id"), col("features"))
-    val n = pts.count()
-    def c2(cnt: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (cnt * (cnt - 1) / 2).cast("double")
-    def sumPairs(df: DataFrame, keys: Seq[String]): Double =
-      df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("m"))
-        .agg(coalesce(sum(c2(col("m"))), lit(0.0))).collect()(0).getDouble(0)
-    // SPARK_GRAFT_STALE_PHASE (VERDICT r18 next-4): run ONE protocol
-    // phase in THIS JVM against on-disk state — `fresh` (full-corpus
-    // baseline build), `base` (holdout store build), `append` (the
-    // arrival waves; SPARK_GRAFT_STALE_BATCHES subsets them for
-    // one-JVM-per-wave, the production ingest shape), `ari` (the
-    // contingency aggregates over the two persisted stores), or `all`
-    // (default — the single-JVM protocol, fine through x100). The
-    // x1000 protocol exceeds ANY single JVM by measured lifetime walls
-    // (block-manager, driver heap, disk — SCALE.md §r18); per-phase
-    // JVMs are both the mitigation and how a real deployment ingests.
-    val phase = sys.env.getOrElse("SPARK_GRAFT_STALE_PHASE", "all")
-    require(Set("all", "fresh", "base", "append", "ari")(phase),
-      s"unknown SPARK_GRAFT_STALE_PHASE $phase")
-    def in(p: String) = phase == "all" || phase == p
-    // the fresh baseline: ONE full-corpus rebuild shared by every
-    // fraction (planes re-derived from the whole corpus).
-    // SPARK_GRAFT_STALE_REUSE=1 reuses an EXISTING fresh store on disk
-    // (store_meta present) instead of rebuilding; the record then shows
-    // fresh_build_sec = 0, the honesty flag that this process did not
-    // pay the build. The fresh store is never appended to, so reuse is
-    // safe; stale stores are always rebuilt (appends mutate them).
-    Clustering.invalidateKnnGraphIndex(work)
-    val freshPath = s"${Similarity.artifactRoot(work)}/s14_stale_fresh"
-    val reuseFresh = sys.env.get("SPARK_GRAFT_STALE_REUSE").contains("1") &&
-      new java.io.File(s"$freshPath/store_meta").exists()
-    val (tFresh, _) =
-      if (!in("fresh") || reuseFresh) (0.0, ())
-      else timed(Clustering.writeKnnGraphIndexOf(spark, pts,
-        Clustering.lshPlanesFor(n), freshPath, s"$work->stale_fresh"))
-    if (phase == "fresh")
-      return Seq("s14stale_fresh_build_sec" -> tFresh,
-        "s14stale_fresh_components" ->
-          spark.read.parquet(s"$freshPath/points")
-            .select(col("component")).distinct().count().toDouble)
-    val pcts = sys.env.get("SPARK_GRAFT_STALE_PCTS")
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(Seq(12, 25, 50))
-    val batches = sys.env.get("SPARK_GRAFT_STALE_BATCHES")
-      .map(_.split(",").toSeq.map(_.trim.toInt))
-      .getOrElse(0 until 4)
-    val rows = pcts.flatMap { pct =>
-      val arrF = pmod(xxhash64(col("id"), lit("s14stale")), lit(100L)) <
-        lit(pct.toLong)
-      val base = pts.where(!arrF)
-      val stalePath = s"${Similarity.artifactRoot(work)}/s14_stale$pct" +
-        (if (stitch) "st" else "")
-      val (tBuild, _) =
-        if (!in("base")) (0.0, ())
-        else timed(Clustering.writeKnnGraphIndexOf(spark, base,
-          Clustering.lshPlanesFor(base.count()), stalePath,
-          s"$work->stale$pct->stitch=$stitch"))
-      val arrivals = pts.where(arrF)
-      val (tAppend, _) =
-        if (!in("append")) (0.0, ())
-        else timed {
-          batches.foreach { b =>
-            Clustering.appendToGraphIndex(
-              arrivals.where(pmod(xxhash64(col("id"), lit("s14batch")),
-                lit(4L)) === lit(b.toLong)), stalePath, stitch = stitch)
-          }
-        }
-      val buildRows =
-        Seq(s"s14stale${pct}_base_build_sec" -> tBuild,
-          s"s14stale${pct}_append_sec" -> tAppend)
-      if (!in("ari")) buildRows
-      else {
-        val fresh = spark.read.parquet(s"$freshPath/points")
-          .select(col("id"), col("component").as("fresh_c"))
-        val mapRows =
-          if (stitch)
-            Clustering.readComponentMap(spark, stalePath).count()
-          else 0L
-        val joint = Clustering.storeComponents(spark, stalePath)
-          .select(col("id"), col("component").as("stale_c"))
-          .join(fresh, "id").persist()
-        val nTot = joint.count().toDouble
-        val sumAb = sumPairs(joint, Seq("stale_c", "fresh_c"))
-        val sumA = sumPairs(joint, Seq("stale_c"))
-        val sumB = sumPairs(joint, Seq("fresh_c"))
-        val nStaleComp = joint.select(col("stale_c")).distinct().count()
-        joint.unpersist()
-        val totPairs = nTot * (nTot - 1) / 2
-        val rand = (totPairs + 2 * sumAb - sumA - sumB) / totPairs
-        val expAb = sumA * sumB / totPairs
-        val ari = if ((sumA + sumB) / 2 == expAb) 1.0
-          else (sumAb - expAb) / ((sumA + sumB) / 2 - expAb)
-        buildRows ++
-          Seq(s"s14stale${pct}_rand" -> rand,
-            s"s14stale${pct}_ari" -> ari,
-            s"s14stale${pct}_components" -> nStaleComp.toDouble) ++
-          (if (stitch) Seq(s"s14stale${pct}_map_rows" -> mapRows.toDouble)
-          else Seq.empty)
-      }
-    }
-    // the ari phase re-emits the fresh component count (its record is
-    // the one the staleness table reads); build seconds only when this
-    // JVM actually built
-    val freshRows =
-      if (phase == "all" || phase == "ari")
-        Seq("s14stale_fresh_build_sec" -> tFresh,
-          "s14stale_fresh_components" ->
-            spark.read.parquet(s"$freshPath/points")
-              .select(col("component")).distinct().count().toDouble)
-      else Seq.empty
-    freshRows ++ rows
+  private[graft] def parse(args: Array[String]): Args = {
+    def arg(i: Int, default: String) = args.lift(i).getOrElse(default)
+    val multRaw = arg(1, "10")
+    val mult = multRaw.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"mult must be a positive whole number, got '$multRaw'"))
+    val name = arg(3, "full")
+    val perturb = arg(4, "eps")
+    require(perturb == "eps" || perturb == "indep",
+      s"unknown perturbation '$perturb'; valid: eps, indep")
+    val bench = cases.getOrElse(name, querySetCase(name, mult))
+    Args(arg(0, "/root/testdata/sf0.1"), mult, arg(2, "/tmp/graft_scale"),
+      perturb, bench)
   }
 
-  private def layeredCompare(spark: SparkSession,
-      work: String): Seq[(String, Double)] = {
-    import graft.functions.{Dedup, Similarity}
-    val nDocs = Tables.documents(spark, work).count()
-    val e = Tables.embeddings(spark, work)
-    val nVecs = e.count()
-    // layer 1: dedup first
-    val (tDedup, nReps) = timed {
-      Dedup.queries("d6_dedup_groups")(spark, work)
-        .where(col("doc_id") === col("group_id")).count()
-    }
-    // layer 2: capped candidate emission (count vs the layout-probe
-    // prediction), then the verified semantic groups
-    val predicted = Similarity.nearDupCandidatePairsCapped(spark, work)
-    val buckets = e
-      .select(col("vec_id").as("doc_id"),
-        Similarity.bucketExpr(spark, work, Similarity.NearDupPlanes)
-          .as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-    val (tCand, nCand) = timed(Dedup.pairsFromBuckets(buckets).count())
-    val (tD7, _) = timed {
-      Dedup.queries("d7_semantic_groups")(spark, work)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // layer 3: persisted-index serving
-    val idx = work + "_ivfadc_idx"
-    val (tBuild, _) = timed(Similarity.writeIvfAdcIndex(spark, work, idx))
-    val nlist = Similarity.ivfCellsFor(nVecs)
-    val np = Similarity.ivfProbesFor(nlist)
-    val rr = Similarity.pqRerankFor(nVecs, nlist, np)
-    val q = e.where(Similarity.querySampleFilter(
-        math.max(1L, nVecs / 200L)))
-      .select(col("vec_id"), col("features"))
-      .localCheckpoint(eager = true)
-    val nQ = q.count()
-    val (tServe, nServed) = timed(
-      Similarity.serveIvfAdcFromIndex(spark, work, idx, q, np, rr)
-        .count())
-    require(nServed == nQ * 5, s"served $nServed rows for $nQ queries")
-    Seq(
-      "layered_n_docs" -> nDocs.toDouble,
-      "layered_n_vecs" -> nVecs.toDouble,
-      "layered_dedup_sec" -> tDedup,
-      "layered_n_reps" -> nReps.toDouble,
-      "layered_cand_pairs_predicted" -> predicted.toDouble,
-      "layered_cand_pairs_emitted_ordered" -> (2.0 * nCand),
-      "layered_cand_sec" -> tCand,
-      "layered_neardup_groups_sec" -> tD7,
-      "layered_index_build_sec" -> tBuild,
-      "layered_nlist" -> nlist.toDouble,
-      "layered_np" -> np.toDouble,
-      "layered_rr" -> rr.toDouble,
-      "layered_queries" -> nQ.toDouble,
-      "layered_serve_sec" -> tServe,
-      "layered_e2e_sec" -> (tDedup + tD7 + tBuild + tServe))
+  /** The query-set runs, which write a `scale_total` record. An
+    * explicit list (`only:`/`onlye:`) leaves the quadratic-compute risk
+    * to the caller; `onlye:` materializes only the documents and
+    * embeddings facts, for doc/vector-only sets at multipliers where
+    * scaling the relational facts would dwarf the run.
+    */
+  private def querySetCase(name: String, mult: Int): Case = {
+    val explicit = name.startsWith("only:") || name.startsWith("onlye:")
+    val set =
+      if (explicit) {
+        val names = name.dropWhile(_ != ':').drop(1).split(",").toSeq
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        require(unknown.isEmpty, s"unknown query ${unknown.mkString(", ")}")
+        names
+      } else if (name == "linear" || (name == "full" && mult >= 100))
+        scaleSet.filterNot(quadraticCompute)
+      else if (name == "full") scaleSet
+      else throw new IllegalArgumentException(s"unknown case '$name'; " +
+        "valid: " + (cases.keys.toSeq.sorted ++ Seq("full", "linear",
+          "only:<query,...>", "onlye:<query,...>")).mkString(", "))
+    if (name == "full" && mult >= 100)
+      System.err.println(s"[scale] mult=$mult: dropping " +
+        quadraticCompute.mkString(", ") + " (quadratic compute)")
+    Case("scale_total", "scale_out.json",
+      if (name.startsWith("onlye:")) Some(Set("documents", "embeddings"))
+      else None,
+      x => querySweep(x, set, explicit))
   }
 
   def main(args: Array[String]): Unit = {
-    val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val mult = if (args.length > 1) args(1).toInt else 10
-    val work0 = if (args.length > 2) args(2) else "/tmp/graft_scale"
-    // `indep` (5th arg) switches the embedding copies to independent
-    // per-dim perturbation ([[IndepAmp]]) under a distinct work dir
-    val perturb = if (args.length > 4) args(4) else "eps"
-    val work = s"$work0/x$mult" + (if (perturb == "indep") "i" else "")
-    // mm10: the scaled fixture replicates container params verbatim, so
-    // in-bucket pair verification goes quadratic at x100 (SCALE.md §R8).
-    // These are dropped in `linear` mode AND unconditionally at mult ≥
-    // 100 — a default `full` run at x100 would otherwise hang on them
-    // (their measured mitigations c19→LSH-fed and mm10→mm10b stay in)
-    val quadraticCompute = Set("c19_conn_topk", "mm10_audio_neardup")
-    val mode = if (args.length > 3) args(3) else "full"
-    val set =
-      // explicit query list (`only:a,b`) — focused mitigation runs; the
-      // caller owns the quadratic-compute risk here
-      // `onlye:` = the same explicit list, materializing ONLY the
-      // documents/embeddings fixtures — for doc/vector-only sets at
-      // multipliers where scaling the fact tables would dwarf the run
-      if (mode.startsWith("only:") || mode.startsWith("onlye:")) {
-        val names = mode.dropWhile(_ != ':').drop(1).split(",").toSeq
-        names.foreach(n => require(SparkEntry.queries.contains(n),
-          s"unknown query $n"))
-        names
-      } else if (mode == "linear" || mult >= 100) {
-        if (mode != "linear")
-          System.err.println(s"[scale] mult=$mult: dropping " +
-            quadraticCompute.mkString(", ") + " (quadratic compute)")
-        scaleSet.filterNot(quadraticCompute)
-      } else scaleSet
+    val a = parse(args)
     val spark = graft.core.GraftSession.local("graft-scale", 32)
+    try run(spark, a, sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", a.outFile))
+    finally spark.stop()
+  }
 
-    materialize(spark, src, mult, work,
-      only = if (mode == "layout" || mode == "trunc")
-          Some(Set("embeddings"))
-        else if (mode == "layered" || mode.startsWith("onlye:"))
-          Some(Set("documents", "embeddings"))
-        else if (mode == "d11deep" || mode == "d11bucket" ||
-            mode == "d11stale")
-          Some(Set("documents"))
-        else if (mode == "s14bucket" || mode == "s13rank" ||
-            mode == "s14stale" || mode == "s14stitch" ||
-            mode == "graphrecall" || mode == "s14cap" ||
-            mode == "fidelsweep" || mode == "fidelprobe" ||
-            mode == "m1part") // m1 reads labeledPoints = embeddings only
-          Some(Set("embeddings"))
-        // bpe30k / megabucket generate their own corpora — no fixture
-        else if (mode == "bpe30k" || mode == "megabucket") Some(Set.empty)
-        else None,
-      perturb = perturb)
+  /** Materializes the case's facts, runs it, and writes its one-line
+    * record to stdout and to `out`.
+    */
+  private[graft] def run(spark: SparkSession, a: Args, out: String): Unit = {
+    materialize(spark, a.src, a.mult, a.work, a.bench.tables, a.perturb)
+    val line = json(Seq("metric" -> str(a.bench.metric),
+      "mult" -> a.mult.toString, "unit" -> str("sec")) ++
+      a.bench.run(Scaled(spark, a.src, a.root, a.work, a.mult)) :+
+      ("src" -> str(a.src)))
+    println(line)
+    java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
 
-    if (mode == "q3bucket" || mode == "m1part" || mode == "vocab" ||
-        mode == "bpe" || mode == "bpe30k" || mode == "connlsh" ||
-        mode == "ivfauto" || mode == "layout" || mode == "pq" ||
-        mode == "d9border" || mode == "pqdisk" || mode == "layered" ||
-        mode == "d11deep" || mode == "d11bucket" || mode == "trunc" ||
-        mode == "d11stale" ||
-        mode == "s14bucket" || mode == "s13rank" || mode == "s14stale" ||
-        mode == "s14stitch" || mode == "graphrecall" ||
-        mode == "megabucket" || mode == "s14cap" ||
-        mode == "fidelsweep" || mode == "fidelprobe") {
-      // comparison-only modes over the scaled facts
-      val (metric, results, defaultOut) =
-        if (mode == "q3bucket")
-          ("q3_bucket_compare", q3BucketCompare(spark, work),
-            "scale_q3bucket.json")
-        else if (mode == "vocab")
-          ("vocab_chain", vocabChainCompare(spark, work),
-            "scale_vocab.json")
-        else if (mode == "bpe")
-          ("bpe_depth", bpeDepthCompare(spark, work, mult),
-            "scale_bpe.json")
-        else if (mode == "bpe30k")
-          ("bpe_30k", bpe30kRows(spark, work, mult),
-            "scale_bpe30k.json")
-        else if (mode == "connlsh")
-          ("connlsh_layout", connLshCompare(spark, work, mult),
-            "scale_connlsh.json")
-        else if (mode == "ivfauto")
-          ("ivfauto_curve", ivfAutoCompare(spark, work),
-            "scale_ivfauto.json")
-        else if (mode == "layout")
-          ("layout_probe", layoutProbe(spark, work),
-            "scale_layout.json")
-        else if (mode == "pq")
-          ("pq_curve", pqCompare(spark, work),
-            "scale_pq.json")
-        else if (mode == "d9border")
-          ("d9b_order", d9bOrderCompare(spark, work),
-            "scale_d9b.json")
-        else if (mode == "pqdisk")
-          ("pqdisk", pqDiskCompare(spark, work),
-            "scale_pqdisk.json")
-        else if (mode == "layered")
-          ("layered_x1000", layeredCompare(spark, work),
-            "scale_x1000.json")
-        else if (mode == "d11deep")
-          ("d11_deep", d11DeepRows(spark, work),
-            "scale_d11deep.json")
-        else if (mode == "d11bucket")
-          ("d11_bucket_compare", d11BucketCompare(spark, work),
-            "scale_d11bucket.json")
-        else if (mode == "d11stale")
-          ("d11_staleness", d11StaleCompare(spark, work),
-            "scale_d11stale.json")
-        else if (mode == "s14bucket")
-          ("s14_bucket_compare", s14BucketCompare(spark, work),
-            "scale_s14bucket.json")
-        else if (mode == "s13rank")
-          ("s13_rank_table", s13RankCompare(spark, work),
-            "scale_s13rank.json")
-        else if (mode == "graphrecall")
-          ("graph_recall", graphRecallCompare(spark, work),
-            "scale_graphrecall.json")
-        else if (mode == "megabucket")
-          ("megabucket_probe", megaBucketProbe(spark),
-            "scale_megabucket.json")
-        else if (mode == "s14stale")
-          ("s14_staleness", s14StaleCompare(spark, work),
-            "scale_s14stale.json")
-        else if (mode == "s14stitch")
-          ("s14_staleness_stitch",
-            s14StaleCompare(spark, work, stitch = true),
-            "scale_s14stitch.json")
-        else if (mode == "s14cap")
-          ("s14_cap_parity", s14CapCompare(spark, work),
-            "scale_s14cap.json")
-        else if (mode == "fidelsweep")
-          ("fidelity_sweep", fidelSweepCompare(spark, work),
-            "scale_fidelsweep.json")
-        else if (mode == "fidelprobe")
-          ("fidelity_probe", fidelProbeCompare(spark, work),
-            "scale_fidelprobe.json")
-        else if (mode == "trunc")
-          ("trunc_curve", truncCompare(spark, work),
-            "scale_trunc.json")
-        else
-          ("m1_partition_compare", m1PartitionCompare(spark, work, mult),
-            "scale_m1part.json")
-      def fmt(v: Double): String =
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val line = s"""{"metric":"$metric","mult":$mult,""" +
-        s""""unit":"sec","queries":$qs,"src":"$src"}"""
-      println(line)
-      // the indep fixture gets its OWN default record file — without
-      // this an un-env-var'd indep run would clobber the eps-decade
-      // ledger (the commit-2369f0b incident class)
-      val outDefault =
-        if (perturb == "indep")
-          defaultOut.stripSuffix(".json") + "_indep.json"
-        else defaultOut
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(sys.env.getOrElse(
-          "SPARK_GRAFT_SCALE_OUT", outDefault)),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      spark.stop()
-      return
-    }
-    // count only the tables this mode materialized (`onlye:` skips the
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def str(s: String): String = "\"" + s + "\""
+  private def json(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** Times each query of `set` once through the noop sink after one
+    * untimed warmup, plus the artifact builds its serving rows read.
+    */
+  private def querySweep(x: Scaled, set: Seq[String],
+      explicit: Boolean): Seq[(String, String)] = {
+    val Scaled(spark, src, root, work, mult) = x
+    // count only the tables this run materialized (`onlye:` skips the
     // relational facts — counting them would fail on the missing paths)
     val rows = factTables
-      .filter(t => new java.io.File(s"$work/$t.parquet", "_SUCCESS")
-        .exists())
-      .map(t => t -> Tables.table(spark, work, t).count()).toMap
+      .filter(t => new java.io.File(s"$work/$t.parquet", "_SUCCESS").exists())
+      .map(t => t -> Tables.table(spark, work, t).count())
 
     // free disk under the work volume, GB — logged around every timed
     // row at the third decade (VERDICT r16 next-7: the x1000 serve
     // failure was detected as spill death with 6.7 GB of artifacts
     // resident; the record must let a quadratic-join wall and a plain
     // disk-exhaustion wall be told apart)
-    def diskFreeGb: Double =
-      new java.io.File(work0).getUsableSpace / 1e9
     val diskRows = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    def logDisk(key: String, what: String): Unit = if (mult >= 1000) {
+      val free = new java.io.File(root).getUsableSpace / 1e9
+      diskRows += (key -> free)
+      System.err.println(f"[scale] disk free $what: $free%.1f GB")
+    }
+    val s14Build = Bench.build("s14_index_build")
     // the warm pass rides timeOne too — label its disk rows apart so
     // the timed row's before/after keys stay unique in the record
     var warming = true
     def timeOne(name: String, dir: String = work): Double = {
       val tag = if (warming) s"warm_$name" else name
-      if (mult >= 1000) {
-        val free = diskFreeGb
-        diskRows += (s"${tag}_disk_free_gb_before" -> free)
-        System.err.println(
-          f"[scale] disk free before $tag: $free%.1f GB")
-      }
+      logDisk(s"${tag}_disk_free_gb_before", s"before $tag")
       val t0 = System.nanoTime()
       // s12's registered face pins the oracle's 4×8 layout; the decade
       // row times the production auto-layout build (the c21/connlsh
@@ -2061,24 +1166,15 @@ object ScaleBench {
               .where(pmod(col("id"),
                 lit(graft.operators.Clustering.S14Mod)) ===
                 lit(graft.operators.Clustering.S14Res)),
-            s"${graft.functions.Similarity.artifactRoot(dir)}/s14_graph_full")
+            s14Build.path(dir))
         case _ => SparkEntry.queries(name)(spark, dir)
       }).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[scale] $name failed: ${e.getMessage}")
-        if (mult >= 1000) {
-          val free = diskFreeGb
-          diskRows += (s"${tag}_disk_free_gb_after" -> free)
-          System.err.println(
-            f"[scale] disk free after FAILED $tag: $free%.1f GB")
-        }
+        logDisk(s"${tag}_disk_free_gb_after", s"after FAILED $tag")
         return -1.0
       }
-      if (mult >= 1000) {
-        val free = diskFreeGb
-        diskRows += (s"${tag}_disk_free_gb_after" -> free)
-        System.err.println(f"[scale] disk free after $tag: $free%.1f GB")
-      }
+      logDisk(s"${tag}_disk_free_gb_after", s"after $tag")
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -2092,14 +1188,10 @@ object ScaleBench {
     // JIT cost (ADVICE r15) — warm with the first NON-artifact query
     // in the set, pre-building the src store only when the whole set
     // is artifact-backed, and LOG a failed warm pass either way
-    val artifactBacked = Set("s14_graph_assign")
     val warmT =
-      if ((mode.startsWith("only:") || mode.startsWith("onlye:")) &&
-          mult >= 100) {
-        val w = set.find(!artifactBacked.contains(_)).getOrElse {
-          graft.operators.Clustering.invalidateKnnGraphIndex(src)
-          graft.operators.Clustering.writeKnnGraphIndex(spark, src,
-            s"${graft.functions.Similarity.artifactRoot(src)}/s14_graph_full")
+      if (explicit && mult >= 100) {
+        val w = set.find(_ != s14Build.servedBy).getOrElse {
+          s14Build.run(spark, src)
           set.head
         }
         timeOne(w, src)
@@ -2110,56 +1202,18 @@ object ScaleBench {
         "[scale] WARMUP PASS FAILED — timed rows may carry JIT/codegen cost")
     // artifact-backed rows: build each store BEFORE its serving query is
     // timed (the graft.Bench build-row discipline), so the decade rows
-    // separate the once-per-corpus build from the per-batch serve
-    // ordered: the p7 weights table is an input to the p11 LM fit, so
-    // p7_model_build runs first and each later row times only its own
-    // work (r13's p7_quality_score decade rows included the build; from
-    // r14 the serve rows are pure serving — noted in SCALE.md)
-    val s14BuildPhases =
-      scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val buildRows: Seq[(String, Double)] =
-      Seq(
-        "p7_model_build" -> (set.contains("p7_quality_score"), () => {
-          graft.functions.QualityModel.invalidate(work)
-          graft.functions.QualityModel.writeServedModel(spark, work,
-            s"${graft.functions.Similarity.artifactRoot(work)}/p7_model")
-        }),
-        "p11_lm_build" -> (set.contains("p11_pipeline_learned"), () => {
-          graft.functions.Dedup.invalidateLm(work)
-          graft.functions.Dedup.writeP11LmModel(spark, work,
-            s"${graft.functions.Similarity.artifactRoot(work)}/p11_lm")
-        }),
-        "d11_index_build" -> (set.contains("d11_incremental_dedup"), () => {
-          graft.functions.Dedup.invalidateDedupIndex(work)
-          graft.functions.Dedup.writeDedupIndex(spark, work,
-            s"${graft.functions.Similarity.artifactRoot(work)}/dedup_index")
-        }),
-        "p12_centroid_build" -> (set.contains("p12_cluster_budget"), () => {
-          graft.functions.Curation.invalidateCentroids(work)
-          graft.functions.Curation.writeClusterCentroids(spark, work,
-            s"${graft.functions.Similarity.artifactRoot(work)}/p12_centroids")
-        }),
-        "s9_index_build" -> (set.contains("s9_ann_ivfadc"), () => {
-          graft.functions.Similarity.invalidateIvfAdcBuild(work)
-          graft.functions.Similarity.writeIvfAdcIndex(spark, work,
-            s"${graft.functions.Similarity.artifactRoot(work)}/ivfadc")
-        }),
-        "s14_index_build" -> (set.contains("s14_graph_assign"), () => {
-          graft.operators.Clustering.invalidateKnnGraphIndex(work)
-          // per-phase wall clock into the record (VERDICT r17 next-4:
-          // name the phase carrying the build's above-linear residual)
-          s14BuildPhases ++= graft.operators.Clustering
-            .writeKnnGraphIndex(spark, work,
-              s"${graft.functions.Similarity.artifactRoot(work)}/s14_graph_full")
-            .map { case (k, v) => s"s14_build_$k" -> v }
-        })).collect { case (name, (true, build)) =>
-          if (mult >= 1000)
-            diskRows += (s"${name}_disk_free_gb_before" -> diskFreeGb)
-          val (t, _) = timed(build())
-          if (mult >= 1000)
-            diskRows += (s"${name}_disk_free_gb_after" -> diskFreeGb)
-          name -> t
-        }
+    // separate the once-per-corpus build from the per-batch serve; s14's
+    // per-phase wall clock joins the record (VERDICT r17 next-4: name
+    // the phase carrying the build's above-linear residual)
+    val buildPhases = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    val buildRows = Bench.builds.filter(b => set.contains(b.servedBy)).map { b =>
+      logDisk(s"${b.name}_disk_free_gb_before", s"before ${b.name}")
+      val (t, phases) = timed(b.run(spark, work))
+      logDisk(s"${b.name}_disk_free_gb_after", s"after ${b.name}")
+      buildPhases ++= phases.map { case (k, v) =>
+        s"${b.name.takeWhile(_ != '_')}_build_$k" -> v }
+      b.name -> t
+    }
     val timedSet = set.map(n => n -> timeOne(n)) ++ buildRows
     // VERDICT r9 §next-8: the m1 partition-scaling mitigation (8·mult
     // partitions holds per-partition size constant — O(n·nᵤ) instead of
@@ -2170,24 +1224,9 @@ object ScaleBench {
       (if (set.contains("m1_mopso_archive"))
         timedSet :+ ("m1_mopso_archive_scaledparts" ->
           m1TimeRun(spark, work, 8 * mult))
-      else timedSet) ++ s14BuildPhases ++ diskRows
-
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val rj = rows.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val line = s"""{"metric":"scale_total","value":${fmt(total)},""" +
-      s""""unit":"sec","mult":$mult,"queries":$qs,"rows":$rj,"src":"$src"}"""
-    println(line)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",
-          if (perturb == "indep") "scale_out_indep.json"
-          else "scale_out.json")),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
+      else timedSet) ++ buildPhases ++ diskRows
+    Seq("value" -> fmt(results.map(_._2).filter(_ >= 0).sum),
+      "queries" -> json(results.map { case (k, v) => k -> fmt(v) }),
+      "rows" -> json(rows.sortBy(_._1).map { case (k, v) => k -> v.toString }))
   }
 }

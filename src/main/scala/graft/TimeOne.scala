@@ -6,9 +6,9 @@ package graft
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
+    val passes = Bench.envInt("SPARK_GRAFT_PASSES", 3)
     val spark = graft.core.GraftSession.local("graft-timeone", 32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     args.foreach { n =>
       val times = (0 to passes).map { _ =>
         val t0 = System.nanoTime()

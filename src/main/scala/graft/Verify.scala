@@ -13,11 +13,11 @@ object Verify {
     // iteration on one operator (the driver always passes two args)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the shared engine session factory: every conf the queries rely on
     // (UTC, shuffle=cores, AQE, the object-hash fallback threshold) in
     // one place, so the gate runs what the engine ships
-    val spark = graft.core.GraftSession.local("graft-verify", cpus.toInt)
+    val spark = graft.core.GraftSession.local("graft-verify",
+      Bench.envInt("SPARK_GRAFT_CPUS", 4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

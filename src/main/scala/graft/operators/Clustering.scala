@@ -676,8 +676,8 @@ object Clustering {
     * prefix); 2 allows the tight mode's own observed spread (the x100
     * tier-0 p90/p10 = 2.0) and excludes the starved regime by orders
     * of magnitude (x1000 measured ~255 at the auto layout). The
-    * r20 synthetic starvation sweep (`scale_fidelsweep_x100.json` +
-    * `_hi.json`, ScaleBench mode `fidelsweep`) probes the constant
+    * r20 synthetic starvation sweep (the fidelity-sweep records of
+    * commit bfe4fa6) probes the constant
     * between those endpoints and found something STRONGER than a
     * calibration curve: stitched ARI stays FLAT at 0.961 from ×2
     * through ×512 — threshold inflation alone cannot percolate a
@@ -710,8 +710,8 @@ object Clustering {
     * up (cost ∝ occupancy), so the bound exists to cap the RECALL
     * price (each added plane prunes candidates; the steer takes the
     * NEAREST certifying layout and the build record prices the pair
-    * mass of both). 16 because the x1000 landscape
-    * (`scale_fidelprobe_x1000.json`) puts certification at 28–32
+    * mass of both). 16 because the x1000 landscape (the fidelity-probe
+    * record of commit 3e4af8f) puts certification at 28–32
     * planes from an auto of 16.
     */
   val MaxSteerRise = 16
@@ -727,8 +727,8 @@ object Clustering {
   val MaxSteerDrop = 2
 
   /** Largest serve-cap multiplier the steer may apply when planes
-    * alone cannot certify. The x1000 probe landscape
-    * (`scale_fidelprobe_x1000.json`) showed fidelity improves
+    * alone cannot certify. The x1000 probe landscape (the
+    * fidelity-probe record of commit 3e4af8f) showed fidelity improves
     * monotonically in BOTH axes but planes saturate (cap 64: p90
     * 131→5 over 16→32 planes, still > 2) while doubling the cap
     * halves the prefix stride directly (cap 128 @ 32 planes: p90
@@ -827,48 +827,6 @@ object Clustering {
     * of both layouts lands in the phase record (`steer_pairs_*`) so
     * the pruning price is part of the build's own evidence.
     */
-  /** Probe-only fidelity sweep over arbitrary (planes, cap) points —
-    * the steer's instrument exposed standalone for ScaleBench's
-    * `fidelprobe` mode: maps the certification landscape of a corpus
-    * without paying a single store build (each probe is
-    * O(sample·occupancy), the sampled-recall shape).
-    */
-  /** Capped pair mass per (planes, cap) grid point over an arbitrary
-    * corpus — the pruning-price leg of the probe landscape (bucket
-    * histograms only, no pairs).
-    */
-  private[graft] def cappedPairMassSweep(s: SparkSession,
-      corpus: DataFrame, points: Seq[(Int, Int)]): Seq[(Int, Int, Long)] = {
-    val pc = corpus.select(col("id"), col("features"),
-      lit(0).as("cluster")).persist()
-    try points.map { case (p, cap) =>
-      (p, cap, cappedPairMassOf(pc,
-        planeRowsOf(corpus, p, LshTables), p, cap))
-    } finally pc.unpersist()
-  }
-
-  private[graft] def fidelityProbeSweep(s: SparkSession,
-      corpus: DataFrame, points: Seq[(Int, Int)],
-      sampleTarget: Long = 512L): Seq[(Int, Int, StitchFidelity)] = {
-    val pc = corpus.select(col("id"), col("features"),
-      lit(0).as("cluster")).persist()
-    try {
-      val n = pc.count()
-      points.zipWithIndex.map { case ((p, cap), i) =>
-        // see the steer walk's shuffle-file pacing note
-        if (i > 0) { System.gc(); Thread.sleep(2000) }
-        val t0 = System.nanoTime()
-        val cert = stitchFidelityProbe(s, pc,
-          planeRowsOf(corpus, p, LshTables), p, cap, n, sampleTarget)
-        System.err.println(f"[graft] fidelity probe: $p planes cap " +
-          f"$cap -> p50 ${cert.p50}%.2f p90 ${cert.p90}%.2f " +
-          f"frac_above ${cert.fracAbove}%.2f (n=${cert.n}, " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s)")
-        (p, cap, cert)
-      }
-    } finally pc.unpersist()
-  }
-
   private def steerCertifiedLayout(s: SparkSession, corpus: DataFrame,
       autoPlanes: Int, cap0: Int,
       phase: (String, Double) => Unit,
@@ -2358,7 +2316,7 @@ object Clustering {
     * transitive across appends, and a full rebuild drops the map
     * (fresh labels reuse the id space). Repair cost is append-scale:
     * the stitch rides the serve probe's own candidate join plus one
-    * component-graph closure. Measured (`scale_s14stale_stitch_x*`):
+    * component-graph closure. Measured (`scale_s14stitch_x*`):
     * the x100 ARI collapse the frozen store suffers under long-chain
     * arrivals recovers at stitch-on. The REVISED cadence rule:
     * chain breaks — the dominant staleness term, scaling with

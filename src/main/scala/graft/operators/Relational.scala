@@ -84,9 +84,9 @@ object Relational {
     q3Core(Tables.lineitem(s, dir), Tables.orders(s, dir),
       Tables.customer(s, dir), Tables.nation(s, dir))
 
-  /** The q3 plan over caller-supplied inputs — ScaleBench feeds BUCKETED
-    * lineitem/orders tables through the same plan to measure the
-    * co-located-join mitigation of the big-big shuffle at x100.
+  /** The q3 plan over caller-supplied inputs: BUCKETED lineitem/orders
+    * tables run the same plan, the co-located-join mitigation of the
+    * big-big shuffle (measured at x100, SCALE.md round 7).
     */
   def q3Core(li: DataFrame, o: DataFrame, c: DataFrame,
       n: DataFrame): DataFrame =

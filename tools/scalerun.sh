@@ -3,6 +3,12 @@
 # replicating build.sbt's forked-run JVM flags. Usage:
 #   tools/scalerun.sh [-mMEM] <mainClass> [args...]
 # e.g. tools/scalerun.sh graft.ScaleBench /root/testdata/sf0.1 10 /tmp/graft_scale full
+#      tools/scalerun.sh -m8g graft.ScaleBench /root/testdata/sf0.01 2 /tmp/graft_scale layout
+# ScaleBench takes <src> <mult> <work> <case> [eps|indep]. A case is one of
+# connlsh d11bucket d11stale ivfauto layout m1part pq pqdisk s13rank
+# s14bucket trunc, or a query set: full, linear, only:<q,...>,
+# onlye:<q,...>. Its one-line record goes to $SPARK_GRAFT_SCALE_OUT, else
+# to the case's default scale_*.json in the working directory.
 set -euo pipefail
 MEM="${SPARK_DRIVER_MEM:-24g}"
 if [[ "${1:-}" == -m* ]]; then MEM="${1#-m}"; shift; fi
