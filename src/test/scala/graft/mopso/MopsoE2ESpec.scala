@@ -216,20 +216,26 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
     val group = "spec-after-blocks"
     val canceller = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group) &&
-            e.stageInfos.exists(_.name.contains("Init.scala")))
-          sc.cancelJobGroupAndFutureJobs(group)
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group))
+          .foreach { g =>
+            if (e.stageInfos.exists(_.name.contains("Init.scala")))
+              sc.cancelJobGroupAndFutureJobs(g)
+          }
     }
-    sc.setJobGroup(group, "a run cancelled after its blocks")
     sc.addSparkListener(canceller)
-    val (e, _) = try failedRunLeavesNothing[SparkException] {
-      Mopso.run(spark, data, cfg, seed = 7L)
-    } finally {
-      sc.removeSparkListener(canceller)
-      sc.clearJobGroup()
-    }
-    assert(e.getMessage.toLowerCase.contains("cancel"))
+    // the partition blocks, then the neighbor rows of the no-collect
+    // global path; a cancelled group stays cancelled, so each run has its
+    // own
+    try Seq(cfg, MopsoConfig.particle.copy(numPartitions = 8,
+        globalExactDistributed = true)).zipWithIndex.foreach { case (c, i) =>
+      sc.setJobGroup(s"$group-$i", "a run cancelled after its blocks")
+      val (e, _) = try failedRunLeavesNothing[SparkException] {
+        Mopso.run(spark, data, c, seed = 7L)
+      } finally sc.clearJobGroup()
+      assert(e.getMessage.toLowerCase.contains("cancel"))
+    } finally sc.removeSparkListener(canceller)
   }
 
   test("K below 2 and PartByIdRange without an id fail before the run") {
@@ -340,13 +346,26 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a seeded iterMax = 0 run submits a fixed number of Spark jobs") {
-    // the profile, the rows and blocks, the maximin init, the initial
-    // fitness job, the histograms and the K-Means leg's jobs; 44 before
-    // the profile replaced the 3-job SQL aggregate and the 4 bounds jobs
-    // went (avg does not clamp positions)
+    // per fitness scope: the profile, the rows and the evaluation data,
+    // the maximin init, the initial fitness job, the histograms and the
+    // K-Means leg's jobs; the Avg run took 44 before the profile replaced
+    // the 3-job SQL aggregate and the 4 bounds jobs went (avg does not
+    // clamp positions)
     val input = data
-    val jobs = jobsDuring(Mopso.run(spark, input, cfg.copy(iterMax = 0),
-      seed = 42L))
-    assert(jobs === 38)
+    val pins = Seq(
+      "avg" -> (cfg, 38),
+      "labelPartition(4)" -> (MopsoConfig.labelPartition(4), 37),
+      "particle" -> (MopsoConfig.particle, 36),
+      "single" -> (MopsoConfig.single, 39),
+      "particle, globalExactDistributed, 8 partitions" ->
+        (MopsoConfig.particle.copy(numPartitions = 8,
+          globalExactDistributed = true), 40),
+      "avg, fitnessSampleFraction = 0.5" ->
+        (cfg.copy(fitnessSampleFraction = 0.5), 39))
+    val got = pins.map { case (name, (c, _)) =>
+      name -> jobsDuring(Mopso.run(spark, input, c.copy(iterMax = 0),
+        seed = 42L))
+    }
+    assert(got === pins.map { case (name, (_, jobs)) => name -> jobs })
   }
 }
