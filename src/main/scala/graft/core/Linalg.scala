@@ -80,39 +80,48 @@ object Linalg {
   // cross-validation twins (identical fold order → bit-identical results,
   // LinalgColSpec).
 
-  /** Sign-LSH bucket id: bit i set iff dot(features, planes(i)) > 0 —
-    * the one shared definition of the hyperplane-sign fold (Similarity
-    * s2/s4 buckets and the GlobalNeighbors candidate generator). Routed
-    * through the native [[graft.functions.SignBuckets]] single-table
-    * form: the compositional when/dot chain inlines one DotProduct
-    * subtree per plane, which stops JIT-compiling past ~64 inlined dots
-    * (the r16 scan-stage cliff — SCALE.md §r16); the native expression
-    * is layout-size-independent and bit-identical (spec-pinned) ON
-    * WELL-FORMED vectors. Ragged-input semantics (ADVICE r16/r17): the
-    * composed twin mapped a dimension-mismatched vector to bucket 0
-    * (`when(NULL > 0, …).otherwise(0)` sums to 0) — a silent wrong
-    * answer that collided corrupt rows into a real bucket; the RAW
-    * native expression returns NULL, the fold-expression family
-    * convention — but every bucket consumer (Similarity's band joins,
+  /** Sign-LSH buckets of one point for `numTables` tables of `numPlanes`
+    * planes each (table t reads planes t·numPlanes until (t+1)·numPlanes):
+    * bit i of table t's bucket is set iff dot(features, plane) > 0. The
+    * one shared definition of the hyperplane-sign fold (Similarity s2/s4
+    * buckets, the GlobalNeighbors candidate generator, the graph store's
+    * signatures), routed through ONE native
+    * [[graft.functions.SignBuckets]] expression: the compositional
+    * when/dot chain inlines one DotProduct subtree per plane, which stops
+    * JIT-compiling past ~64 inlined dots and de-optimizes the whole scan
+    * stage ~100× per row (the r16 scan-stage cliff — SCALE.md §r16); the
+    * native expression is layout-size-independent and bit-identical
+    * (spec-pinned) ON WELL-FORMED vectors.
+    *
+    * Ragged input (ADVICE r16/r17): the raw native expression maps a
+    * dimension-mismatched vector to NULL, the fold-expression family
+    * convention, and every bucket consumer (Similarity's band joins,
     * GlobalNeighbors, the graph chain's posexplode) would then silently
-    * DROP the row from candidate generation, an unflagged data loss.
-    * This shared entry point therefore FAILS LOUDLY on a
-    * dimension-mismatched vector (`raise_error` naming both sizes —
-    * the `Clustering.lshSigsCol` convention, now uniform across every
-    * sign-bucket surface; spec-pinned in LinalgColSpec). A NULL vector
-    * still maps to NULL: absence is a modeled state, raggedness is
-    * corruption.
+    * DROP the row from candidate generation, an unflagged data loss (the
+    * composed twin mapped it to bucket 0, colliding corrupt rows into a
+    * real bucket). This entry point therefore FAILS LOUDLY on a
+    * dimension-mismatched vector (`raise_error` naming both sizes;
+    * spec-pinned in LinalgColSpec and PipelineSpec). A NULL vector still
+    * maps to NULL: absence is a modeled state, raggedness is corruption.
     */
-  def signBucketCol(features: Column, planes: Seq[Array[Double]]): Column = {
-    require(planes.nonEmpty && planes.length < 63,
-      s"signBucket needs 1..62 planes, got ${planes.length}")
+  def signBucketsCol(features: Column, planes: Seq[Array[Double]],
+      numPlanes: Int, numTables: Int): Column = {
+    require(planes.nonEmpty && planes.length == numPlanes * numTables,
+      s"expected ${numPlanes * numTables} plane rows, got ${planes.length}")
     val dim = planes.head.length
     when(features.isNotNull && size(features) =!= lit(dim),
       raise_error(concat(
-        lit(s"signBucketCol: expected dimension $dim, got "),
+        lit(s"signBucketsCol: expected dimension $dim, got "),
         size(features).cast("string"))))
-      .otherwise(element_at(graft.functions.VectorExpressions
-        .signBuckets(features, planes, planes.length), 1))
+      .otherwise(graft.functions.VectorExpressions
+        .signBuckets(features, planes, numPlanes))
+  }
+
+  /** The single-table [[signBucketsCol]]: one bucket id over all `planes`. */
+  def signBucketCol(features: Column, planes: Seq[Array[Double]]): Column = {
+    require(planes.nonEmpty && planes.length < 63,
+      s"signBucket needs 1..62 planes, got ${planes.length}")
+    element_at(signBucketsCol(features, planes, planes.length, 1), 1)
   }
 
   /** The pre-r16 compositional formulation, kept as the cross-validation

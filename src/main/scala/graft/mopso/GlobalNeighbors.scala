@@ -145,14 +145,12 @@ object GlobalNeighbors {
     * merged in partition-id order (deterministic).
     */
   def evaluate(nbrRows: RDD[(Array[Double], Int, Array[Array[Double]])],
-      positions: Array[Array[Array[Double]]], l: Int): Array[Array[Double]] = {
-    val sc = nbrRows.sparkContext
-    val bc = sc.broadcast(positions)
-    val partials = try nbrRows.mapPartitionsWithIndex { (pid, it) =>
-      val searches = bc.value.map(new CenterSearch(_))
+      positions: Array[Array[Array[Double]]], l: Int): Array[Array[Double]] =
+    Evaluator.partialsJob(nbrRows, positions) { (ps, it) =>
+      val searches = ps.map(new CenterSearch(_))
       val weights = FitnessKernel.rankWeights(l)
       val guesses = Array.fill(searches.length)(1)
-      val acc = Array.fill(searches.length)(Array(0.0, 0.0))
+      val acc = Array.fill(searches.length)((0.0, 0.0))
       it.foreach { case (feat, _, nbrs) =>
         var p = 0
         while (p < searches.length) {
@@ -160,53 +158,20 @@ object GlobalNeighbors {
             FitnessKernel.rowPartial(feat, nbrs, searches(p), weights,
               guesses(p))
           guesses(p) = own
-          acc(p)(0) += dev
-          acc(p)(1) += conn
+          acc(p) = (acc(p)._1 + dev, acc(p)._2 + conn)
           p += 1
         }
       }
-      Iterator.single((pid, acc))
-    }.collect()
-    finally bc.destroy()
-    val fits = Array.fill(positions.length)(Array(0.0, 0.0))
-    partials.sortBy(_._1).foreach { case (_, arr) =>
-      var p = 0
-      while (p < arr.length) {
-        fits(p)(0) += arr(p)(0); fits(p)(1) += arr(p)(1); p += 1
-      }
+      Iterator.single(acc)
     }
-    fits
-  }
 
   /** Distributed (label, cluster) histograms for the E1 purity eval —
-    * one job for ALL center sets, mirroring the ScopePartition shape.
+    * one job for ALL center sets, each partition's rows as one block.
     */
   def histograms(nbrRows: RDD[(Array[Double], Int, Array[Array[Double]])],
-      centerSets: Array[Array[Array[Double]]]): Array[Map[(Int, Int), Long]] = {
-    val sc = nbrRows.sparkContext
-    val bc = sc.broadcast(centerSets)
-    val parts = try nbrRows.mapPartitions { it =>
-      val searches = bc.value.map(new CenterSearch(_))
-      val guesses = Array.fill(searches.length)(1)
-      val maps = Array.fill(searches.length)(
-        scala.collection.mutable.Map.empty[(Int, Int), Long])
-      it.foreach { case (feat, lab, _) =>
-        var i = 0
-        while (i < searches.length) {
-          guesses(i) = searches(i).nearest(feat, guesses(i))
-          val key = (lab, guesses(i))
-          maps(i)(key) = maps(i).getOrElse(key, 0L) + 1L
-          i += 1
-        }
-      }
-      Iterator.single(maps.map(_.toMap))
-    }.collect()
-    finally bc.destroy()
-    val merged = Array.fill(centerSets.length)(
-      scala.collection.mutable.Map.empty[(Int, Int), Long])
-    parts.foreach(_.zipWithIndex.foreach { case (h, i) =>
-      h.foreach { case (k, n) => merged(i)(k) = merged(i).getOrElse(k, 0L) + n }
-    })
-    merged.map(_.toMap)
-  }
+      centerSets: Array[Array[Array[Double]]]): Array[Map[(Int, Int), Long]] =
+    Evaluator.blockHistograms(nbrRows.mapPartitions { it =>
+      val rows = it.toArray
+      Iterator.single(EvalBlock(rows.map(_._1), rows.map(_._2), Array.empty))
+    }, centerSets)
 }

@@ -5,7 +5,6 @@ import java.util.concurrent.TimeoutException
 import scala.util.{Random, Try}
 import scala.util.control.NonFatal
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,7 +19,9 @@ import graft.mopso.Config._
 final case class EvalBlock(
     points: Array[Array[Double]],
     labels: Array[Int],
-    neighbors: Array[Array[Int]]) extends Serializable
+    neighbors: Array[Array[Int]]) extends Serializable {
+  def partData: PartData = PartData(points, neighbors)
+}
 
 final case class MopsoResult(
     archive: Array[ArchiveEntry],
@@ -47,25 +48,18 @@ final case class MopsoResult(
 /** The single parameterized MOPSO driver loop (SURVEY §3: the reference's
   * three mains become one loop; variant = [[MopsoConfig]]).
   *
-  * Execution model per scope:
-  *  - [[ScopePartition]] (Avg/labelPartition): data stays partitioned and
-  *    cached; each iteration broadcasts the 50-particle swarm (50·K·F
-  *    doubles) and runs EXACTLY ONE distributed job that evaluates every
-  *    particle's rate-scaled partial fitness per partition; the driver sums
-  *    partials in partition order (Spark_MOPSO_Avg.scala:211-245). Data
-  *    never moves — this is the shape that scales to 1000 executors.
-  *  - [[ScopeGlobal]] + distributed (Particle): the whole dataset is
-  *    broadcast once and particles are farmed out per iteration
-  *    (Spark_MOPSO_Particle.scala:108-109,175-188) — faithful to the
-  *    reference but memory-bound by design; documented small-data-only.
-  *  - [[ScopeGlobal]] local (Single): pure driver loop, the behavioral
-  *    oracle for tests.
+  * Execution model: `run` reads the fitness scope once, to build its
+  * [[Evaluator]]: [[Evaluator.PartitionBlocks]] (Avg/labelPartition),
+  * [[Evaluator.NeighborRows]] (`globalExactDistributed`) or
+  * [[Evaluator.WholeBlock]] (Particle/Single). The loop, the purity and
+  * the silhouette ask the evaluator, never the scope.
   *
   * Execution order of one run. The serial path:
   *  1. the input profile: K, N and F in one job ([[profile]]), which also
   *     rejects ragged `features`; `numPartitions = 0` resolves here;
-  *  1. the rows and the evaluation blocks (plus the feature bounds, only
-  *     when `clampPosition` reads them);
+  *  1. the rows and the evaluator's build, one job that also counts the
+  *     evaluated rows (plus the feature bounds, only when `clampPosition`
+  *     reads them);
   *  1. the maximin swarm init (K−1 jobs);
   *  1. the loop: one fitness job per iteration;
   *  1. the join of the K-Means leg;
@@ -82,7 +76,6 @@ object Mopso {
   def run(spark: SparkSession, data: DataFrame, cfg0: MopsoConfig,
       seed: Long): MopsoResult = {
     val t0 = System.nanoTime()
-    val sc = spark.sparkContext
     val rng = new Random(seed)
     require(cfg0.numPartitions >= 0, "numPartitions must be 0 (sized by " +
       s"partitionsFor) or positive, got ${cfg0.numPartitions}")
@@ -115,36 +108,26 @@ object Mopso {
           base.repartitionByRange(cfg.numPartitions, col("id"))
       }
 
-      // persisted through init: the maximin loop runs K−1 jobs over this RDD
-      // and would otherwise repeat the parquet scan + repartition shuffle
-      // per job; released once the swarm is initialized
+      // persisted through init, whose K−1 maximin jobs would otherwise
+      // each repeat the scan + repartition shuffle; released after it
       val rowsRDD: RDD[(Array[Double], Int)] = partitioned
         .select(col("features"), col("label")).rdd
         .map(r => (r.getSeq[Double](0).toArray, r.getInt(1)))
         .persist(StorageLevel.MEMORY_AND_DISK)
 
-      var blocksRDD: RDD[EvalBlock] = null
-      var globalBlock: EvalBlock = null
-      var nbrRows: RDD[(Array[Double], Int, Array[Array[Double]])] = null
-      var globalBC: Broadcast[EvalBlock] = null
       // every exit releases what the run persisted or broadcast, a throw too
       try {
-        // A4 feature bounds in ONE pass (the reference scans once per
-        // feature, Spark_MOPSO_Avg.scala:1239-1252), only for the position
-        // clamp, their one reader; the shared helper returns (pos, mn, mx),
-        // the reference's (max, min) tuple order is restored here
+        // A4 feature bounds in ONE pass (the reference scans per feature,
+        // Spark_MOPSO_Avg.scala:1239-1252), only for the position clamp;
+        // (pos, mn, mx) rows back to the reference's (max, min) order
         val bounds: Array[(Double, Double)] =
           if (!cfg.clampPosition) Array.empty
           else graft.operators.Clustering.featureBoundsDf(base)
             .collect().map(r => (r.getDouble(2), r.getDouble(1)))
 
-        // evaluation blocks: per-partition for ScopePartition, one global
-        // block otherwise; neighbor lists precomputed once (see
-        // FitnessKernel)
-        // §7.4.6: optional seeded Bernoulli sample of the evaluation rows —
-        // deterministic per (seed, row index), applied before block
-        // building so the neighbor graphs shrink quadratically with the
-        // fraction
+        // §7.4.6: optional seeded Bernoulli sample of the evaluation rows,
+        // deterministic per (seed, row index), taken before the evaluator's
+        // build so the neighbor graphs shrink quadratically
         val evalRDD: RDD[(Array[Double], Int)] =
           if (cfg.fitnessSampleFraction >= 1.0) rowsRDD
           else rowsRDD.mapPartitionsWithIndex { (pid, it) =>
@@ -152,213 +135,93 @@ object Mopso {
             it.filter(_ => r.nextDouble() < cfg.fitnessSampleFraction)
           }
 
-        cfg.scope match {
+        // the one place the run reads its fitness scope
+        val scope: Evaluator = cfg.scope match {
           case ScopeGlobal if cfg.globalExactDistributed =>
-            // no-collect exact global path: neighbor features gathered once
-            // through the bounded top-k aggregate, rows stay distributed
-            nbrRows = GlobalNeighbors.build(spark, evalRDD, cfg.lIndex)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            nbrRows.count() // materialize while rowsRDD is still cached
+            new Evaluator.NeighborRows(spark, evalRDD, cfg.lIndex)
           case ScopePartition =>
-            blocksRDD = evalRDD.mapPartitions { it =>
-              val rows = it.toArray
-              if (rows.isEmpty) Iterator.empty
-              else {
-                val pts = rows.map(_._1)
-                Iterator.single(
-                  EvalBlock(pts, rows.map(_._2),
-                    FitnessKernel.buildNeighbors(pts, cfg.lIndex)))
-              }
-            }.persist(StorageLevel.MEMORY_AND_DISK)
-            blocksRDD.count() // materialize once before the loop
+            new Evaluator.PartitionBlocks(evalRDD, cfg.lIndex)
           case ScopeGlobal =>
-            val rows = evalRDD.collect()
-            val pts = rows.map(_._1)
-            globalBlock = EvalBlock(pts, rows.map(_._2),
-              FitnessKernel.buildNeighbors(pts, cfg.lIndex))
+            new Evaluator.WholeBlock(evalRDD, cfg.lIndex,
+              distributed = cfg.numPartitions > 1)
         }
-        if (globalBlock != null && distributedGlobal(cfg))
-          globalBC = sc.broadcast(globalBlock)
-
-        // rate denominator = the EVALUATED population (== N unless sampling);
-        // cheap on the cached blocks
-        val evalTotal: Long = cfg.scope match {
-          case _ if cfg.fitnessSampleFraction >= 1.0 => total
-          case ScopePartition =>
-            blocksRDD.map(_.points.length.toLong).sum().toLong
-          case ScopeGlobal if cfg.globalExactDistributed => nbrRows.count()
-          case ScopeGlobal => globalBlock.points.length.toLong
-        }
-
-        def evaluate(
-            positions: Array[Array[Array[Double]]]): Array[Array[Double]] =
-          cfg.scope match {
-            case ScopePartition =>
-              val bc = sc.broadcast(positions)
-              val partials = try blocksRDD
-                .mapPartitionsWithIndex { (pid, it) =>
-                  it.map { block =>
-                    (pid, bc.value.map(pos =>
-                      FitnessKernel.partitionPartial(block.toPartData, pos,
-                        cfg.lIndex, evalTotal)))
-                  }
-                }.collect()
-              finally bc.destroy()
-              val fits = Array.fill(positions.length)(Array(0.0, 0.0))
-              // driver merge in partition order (Spark_MOPSO_Avg.scala:230-245)
-              partials.sortBy(_._1).foreach { case (_, arr) =>
-                var p = 0
-                while (p < arr.length) {
-                  fits(p)(0) += arr(p)._1; fits(p)(1) += arr(p)._2; p += 1
-                }
-              }
-              fits
-            case ScopeGlobal if cfg.globalExactDistributed =>
-              GlobalNeighbors.evaluate(nbrRows, positions, cfg.lIndex)
-            case ScopeGlobal if distributedGlobal(cfg) =>
-              val posBC = sc.broadcast(positions)
-              val blockBC = globalBC
-              val out = try sc
-                .parallelize(positions.indices.toSeq,
-                  math.min(positions.length,
-                    math.max(sc.defaultParallelism, 1)))
-                .map { i =>
-                  val (dev, conn) = FitnessKernel.devConn(
-                    blockBC.value.toPartData, posBC.value(i), cfg.lIndex)
-                  (i, Array(dev, conn))
-                }.collect()
-              finally posBC.destroy()
-              out.sortBy(_._1).map(_._2)
-            case ScopeGlobal =>
-              positions.map { pos =>
-                val (dev, conn) =
-                  FitnessKernel.devConn(globalBlock.toPartData, pos, cfg.lIndex)
-                Array(dev, conn)
-              }
+        try {
+          // I3 swarm init (batched maximin) + I4 velocities
+          val initPositions =
+            Init.maximinBatch(rowsRDD.map(_._1), k, cfg.numParticles, seed)
+          var particles: Array[Particle] = initPositions.map { pos =>
+            Particle(pos,
+              Swarm.initVelocity(k, numFeatures, cfg.vMin, cfg.vMax, rng),
+              Array(0.0, 0.0), pos, Array(0.0, 0.0), Array(0.0))
           }
 
-        // I3 swarm init (batched maximin) + I4 velocities
-        val initPositions =
-          Init.maximinBatch(rowsRDD.map(_._1), k, cfg.numParticles, seed)
-        var particles: Array[Particle] = initPositions.map { pos =>
-          Particle(pos,
-            Swarm.initVelocity(k, numFeatures, cfg.vMin, cfg.vMax, rng),
-            Array(0.0, 0.0), pos, Array(0.0, 0.0), Array(0.0))
-        }
+          rowsRDD.unpersist() // init done; the evaluator carries the loop
 
-        rowsRDD.unpersist() // init done; blocksRDD/globalBlock carry the loop
-
-        // initial fitness; pbest = current (Spark_MOPSO_Avg.scala:158-174)
-        val initFits = evaluate(particles.map(_.position))
-        particles = particles.zip(initFits).map { case (p, f) =>
-          p.copy(fitness = f, bestPosition = p.position, bestFitness = f)
-        }
-
-        // archive bootstrap: whole swarm, then non-dominated filter
-        // (Spark_MOPSO_Avg.scala:176-189); crowding arrays shared by reference
-        var archive = Archive.update(
-          particles.map(p => ArchiveEntry(p.position, p.fitness, p.crowding)),
-          cfg.repository, cfg.crowding)
-
-        var iter = 1
-        while (iter <= cfg.iterMax) {
-          val w = Swarm.weight(cfg.wSchedule, iter, cfg.iterMax, cfg.wMax,
-            cfg.wMin)
-          val gbest = Archive.leader(archive, cfg.leader, cfg.crowding, rng)
-          particles = particles.map(
-            Swarm.updateVelocityPosition(_, gbest.position, bounds, w, cfg,
-              rng))
-          val fits = evaluate(particles.map(_.position))
-          particles = particles.zip(fits).map { case (p, f) =>
-            Swarm.pbestUpdate(p, f, cfg.pbest, rng)
+          // initial fitness; pbest = current (Spark_MOPSO_Avg.scala:158-174)
+          val initFits = scope.evaluate(particles.map(_.position))
+          particles = particles.zip(initFits).map { case (p, f) =>
+            p.copy(fitness = f, bestPosition = p.position, bestFitness = f)
           }
-          archive = Archive.update(
-            archive ++ particles.map(p =>
-              ArchiveEntry(p.position, p.fitness, p.crowding)),
+
+          // archive bootstrap: whole swarm, then non-dominated filter
+          // (Spark_MOPSO_Avg.scala:176-189); crowding arrays shared by
+          // reference
+          var archive = Archive.update(particles.map(p =>
+            ArchiveEntry(p.position, p.fitness, p.crowding)),
             cfg.repository, cfg.crowding)
-          iter += 1
-        }
 
-        // E1 purity for every archive entry + the kmeans baseline in ONE job:
-        // per partition, per center set, a (label, cluster) histogram; driver
-        // merges and takes the majority cluster per label
-        // (Spark_MOPSO_Avg.scala:325-389 runs K filter+assignment jobs per
-        // entry instead)
-        // I1 K-Means baseline (the reference's own comparison eval,
-        // Spark_MOPSO_Avg.scala:361-389): the leg's result, joined here
-        val kmeans = kmeansCenters()
-        val centerSets = archive.map(_.position) :+ kmeans
-        val hists: Array[Map[(Int, Int), Long]] = cfg.scope match {
-          case ScopePartition =>
-            val bc = sc.broadcast(centerSets)
-            val parts = try blocksRDD.mapPartitions { it =>
-              it.map(block => bc.value.map(cs => histogram(block, cs)))
-            }.collect()
-            finally bc.destroy()
-            val merged = Array.fill(centerSets.length)(
-              scala.collection.mutable.Map.empty[(Int, Int), Long])
-            parts.foreach { arr =>
-              arr.zipWithIndex.foreach { case (h, i) =>
-                h.foreach { case (key, n) =>
-                  merged(i)(key) = merged(i).getOrElse(key, 0L) + n
-                }
-              }
+          var iter = 1
+          while (iter <= cfg.iterMax) {
+            val w = Swarm.weight(cfg.wSchedule, iter, cfg.iterMax, cfg.wMax,
+              cfg.wMin)
+            val gbest = Archive.leader(archive, cfg.leader, cfg.crowding, rng)
+            particles = particles.map(
+              Swarm.updateVelocityPosition(_, gbest.position, bounds, w, cfg,
+                rng))
+            val fits = scope.evaluate(particles.map(_.position))
+            particles = particles.zip(fits).map { case (p, f) =>
+              Swarm.pbestUpdate(p, f, cfg.pbest, rng)
             }
-            merged.map(_.toMap)
-          case ScopeGlobal if cfg.globalExactDistributed =>
-            GlobalNeighbors.histograms(nbrRows, centerSets)
-          case ScopeGlobal =>
-            centerSets.map(cs => histogram(globalBlock, cs))
-        }
-        // under sampling, purity/validity are measured on the evaluated sample
-        val purities = hists.map(h => purityOf(h, evalTotal))
-        val validity = hists.map(h => majorityValid(h, k))
+            archive = Archive.update(
+              archive ++ particles.map(p =>
+                ArchiveEntry(p.position, p.fitness, p.crowding)),
+              cfg.repository, cfg.crowding)
+            iter += 1
+          }
 
-        // optional E3 final-result selection: exact silhouette per entry over
-        // the collected dataset (the reference also collects here,
-        // Spark_MOPSO_Avg.scala:618 — small-data-only, hence the flag).
-        // With silhouetteSimplified the selection is FULLY DISTRIBUTED: all
-        // archive entries scored by one aggregate pass over the original
-        // DataFrame (Eval.simplifiedSilhouetteDf, the c20 shape) — no
-        // collect at any data size.
-        val (sils, bestCenters) =
-          if (cfg.withSilhouette && cfg.silhouetteSimplified) {
-            val ss = Eval.simplifiedSilhouetteDf(
-              data.select(col("features")), archive.map(_.position).toSeq)
-            val best = archive(ss.indexOf(ss.max)).position
-            (Some(ss), Some(best.sortBy((c: Array[Double]) => c(0))))
-          } else if (cfg.withSilhouette) {
-            val block =
-              if (globalBlock != null) globalBlock
-              else if (blocksRDD != null) {
-                // serve from the still-cached partition blocks — rowsRDD was
-                // unpersisted after init and would recompute the scan+shuffle
-                val blocks = blocksRDD.collect()
-                EvalBlock(blocks.flatMap(_.points), blocks.flatMap(_.labels),
-                  Array.empty)
-              } else {
-                // no-collect global path: the silhouette flag is the one
-                // (small-data-only, reference-faithful) consumer that still
-                // materializes the points
-                val rows = nbrRows.map(r => (r._1, r._2)).collect()
-                EvalBlock(rows.map(_._1), rows.map(_._2), Array.empty)
-              }
-            val (ss, best) = Eval.selectBestBySilhouette(archive, block,
-              cfg.silhouetteSimplified)
-            (Some(ss), Some(best))
-          } else (None, None)
+          // E1 purity for every archive entry + the I1 K-Means baseline
+          // (the leg's result, Spark_MOPSO_Avg.scala:361-389) in ONE job
+          // (Spark_MOPSO_Avg.scala:325-389 runs K jobs per entry); under
+          // sampling, measured on the evaluated sample
+          val kmeans = kmeansCenters()
+          val hists = scope.histograms(archive.map(_.position) :+ kmeans)
+          val purities = hists.map(h => purityOf(h, scope.n))
+          val validity = hists.map(h => majorityValid(h, k))
 
-        MopsoResult(archive, kmeans,
-          purities.dropRight(1), validity.dropRight(1),
-          purities.last, validity.last,
-          sils, bestCenters,
-          k, numFeatures, total, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        rowsRDD.unpersist()
-        if (blocksRDD != null) blocksRDD.unpersist()
-        if (nbrRows != null) nbrRows.unpersist()
-        if (globalBC != null) globalBC.destroy()
-      }
+          // optional E3 final-result selection: exact silhouette per entry
+          // over the evaluator's points (the reference also collects,
+          // Spark_MOPSO_Avg.scala:618 — small-data-only, hence the flag),
+          // or with silhouetteSimplified one aggregate pass over the input
+          // (Eval.simplifiedSilhouetteDf, the c20 shape), no collect
+          val (sils, bestCenters) =
+            if (cfg.withSilhouette && cfg.silhouetteSimplified) {
+              val ss = Eval.simplifiedSilhouetteDf(
+                data.select(col("features")), archive.map(_.position).toSeq)
+              val best = archive(ss.indexOf(ss.max)).position
+              (Some(ss), Some(best.sortBy((c: Array[Double]) => c(0))))
+            } else if (cfg.withSilhouette) {
+              val (ss, best) =
+                Eval.selectBestBySilhouette(archive, scope.points())
+              (Some(ss), Some(best))
+            } else (None, None)
+
+          MopsoResult(archive, kmeans,
+            purities.dropRight(1), validity.dropRight(1),
+            purities.last, validity.last,
+            sils, bestCenters,
+            k, numFeatures, total, (System.nanoTime() - t0) / 1e9)
+        } finally scope.release()
+      } finally rowsRDD.unpersist()
     }
   }
 
@@ -420,23 +283,6 @@ object Mopso {
       }
     }
 
-  private def distributedGlobal(cfg: MopsoConfig): Boolean =
-    cfg.scope == ScopeGlobal && cfg.numPartitions > 1
-
-  private def histogram(block: EvalBlock,
-      centers: Array[Array[Double]]): Map[(Int, Int), Long] = {
-    val (clusters, _) =
-      FitnessKernel.assign(block.points, centers, block.neighbors)
-    val m = scala.collection.mutable.Map.empty[(Int, Int), Long]
-    var i = 0
-    while (i < block.labels.length) {
-      val key = (block.labels(i), clusters(i))
-      m(key) = m.getOrElse(key, 0L) + 1
-      i += 1
-    }
-    m.toMap
-  }
-
   /** Purity = Σ_label max_cluster count / N (E1). */
   private def purityOf(hist: Map[(Int, Int), Long], total: Long): Double = {
     if (total == 0) return 0.0
@@ -466,9 +312,5 @@ object Mopso {
       .zipWithIndex
       .map { case ((f1, f2, p), i) => (i + 1, f1, f2, p) }
       .toSeq.toDF("rank", "dev", "conn", "purity")
-  }
-
-  implicit private class EvalBlockOps(val b: EvalBlock) extends AnyVal {
-    def toPartData: PartData = PartData(b.points, b.neighbors)
   }
 }

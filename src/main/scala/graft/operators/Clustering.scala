@@ -518,36 +518,6 @@ object Clustering {
       .select(col("features")).collect()
       .map(_.getSeq[Double](0).toArray).toSeq
 
-  /** All tables' sign buckets for one point, computed in a single
-    * projection (each point needs every table's bucket anyway) — ONE
-    * native [[graft.functions.SignBuckets]] expression, not
-    * numPlanes·numTables inlined dot subtrees: the compositional array
-    * blows past the JIT's method limit once the auto layout grows the
-    * plane count, de-optimizing the whole scan stage ~100× per row
-    * (measured, SCALE.md §r16 — the real x1000 stall behind the r15
-    * DNF narrative's candidate-mass half).
-    */
-  private def lshSigsCol(planes: Seq[Array[Double]],
-      numPlanes: Int, numTables: Int): Column = {
-    require(planes.length == numPlanes * numTables,
-      s"expected ${numPlanes * numTables} plane rows, got ${planes.length}")
-    val dim = planes.head.length
-    val f = col("features")
-    // ragged guard (ADVICE r16): the native SignBuckets maps a
-    // dimension-mismatched vector to NULL (the fold-expression family
-    // convention), and the downstream posexplode would then silently
-    // drop the row from BOTH candidate generation and the orphan leg —
-    // an unflagged singleton with no diagnostic. A wrong-dimension
-    // vector in the graph chain is corrupt input; fail the job loudly
-    // instead (one size() comparison per row, branch-free otherwise)
-    when(f.isNotNull && size(f) =!= lit(dim),
-      raise_error(concat(
-        lit(s"lshSigsCol: expected dimension $dim, got "),
-        size(f).cast("string"))))
-      .otherwise(graft.functions.VectorExpressions
-        .signBuckets(f, planes, numPlanes))
-  }
-
   /** The shared ranking tail (the c19 shape): candidate rows with
     * columns (xi, xv, cx, yi, yv, cy) through the L-bounded aggregate —
     * map-side combine prunes every mapper to ≤L pairs per point, so the
@@ -615,8 +585,8 @@ object Clustering {
     // across both fidelity-probe legs and the build chain (VERDICT r20
     // next-4) instead of re-running the signing scan per consumer.
     val b = signed
-      .getOrElse(pc.withColumn("sigs",
-        lshSigsCol(planes, numPlanes, numTables)))
+      .getOrElse(pc.withColumn("sigs", Linalg.signBucketsCol(
+        col("features"), planes, numPlanes, numTables)))
       .select(col("id"), col("features"), col("cluster"), col("sigs"),
         posexplode(col("sigs")).as(Seq("tbl", "bucket")))
     val x0 = b.select(col("tbl"), col("bucket"), col("id").as("xi"),
@@ -802,8 +772,8 @@ object Clustering {
     */
   private def cappedPairMassOf(pc: DataFrame,
       planes: Seq[Array[Double]], numPlanes: Int, cap: Int): Long =
-    pc.select(posexplode(lshSigsCol(planes, numPlanes, LshTables))
-        .as(Seq("tbl", "bucket")))
+    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
+        numPlanes, LshTables)).as(Seq("tbl", "bucket")))
       .groupBy(col("tbl"), col("bucket"))
       .agg(count(lit(1)).as("c"))
       .agg(coalesce(sum((col("c") - lit(1L)) *
@@ -1005,7 +975,8 @@ object Clustering {
     // orphan lineage used to re-sign the corpus; both now derive from
     // `base` (pre-signed and persisted when the s14 build passes it)
     val base = signed.getOrElse(
-      pc.withColumn("sigs", lshSigsCol(planes, numPlanes, numTables)))
+      pc.withColumn("sigs", Linalg.signBucketsCol(col("features"), planes,
+        numPlanes, numTables)))
     val b = base
       .select(col("id"), col("features"), col("cluster"),
         posexplode(col("sigs")).as(Seq("tbl", "bucket")))
@@ -1103,8 +1074,8 @@ object Clustering {
       dir: String, numPlanes: Int, numTables: Int, cap: Int): Long = {
     val pc = assigned(s, dir).select(col("features"))
     val planes = lshPlaneRows(s, dir, numPlanes, numTables)
-    pc.select(posexplode(lshSigsCol(planes, numPlanes, numTables))
-        .as(Seq("tbl", "bucket")))
+    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
+        numPlanes, numTables)).as(Seq("tbl", "bucket")))
       .groupBy(col("tbl"), col("bucket"))
       .agg(count(lit(1)).as("c"))
       .agg(coalesce(sum((col("c") - lit(1L)) *
@@ -1198,8 +1169,8 @@ object Clustering {
       numPlanes: Int, numTables: Int): Long = {
     val pc = assigned(s, dir).select(col("features"))
     val planes = lshPlaneRows(s, dir, numPlanes, numTables)
-    pc.select(posexplode(lshSigsCol(planes, numPlanes, numTables))
-        .as(Seq("tbl", "bucket")))
+    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
+        numPlanes, numTables)).as(Seq("tbl", "bucket")))
       .groupBy(col("tbl"), col("bucket"))
       .agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(col("c") * (col("c") - lit(1L))), lit(0L))
@@ -1534,7 +1505,8 @@ object Clustering {
     // When the steer already signed this layout, its frame is reused.
     val pc = signed0.getOrElse(
       corpus.select(col("id"), col("features"), lit(0).as("cluster"))
-        .withColumn("sigs", lshSigsCol(planes, numPlanes, LshTables))
+        .withColumn("sigs", Linalg.signBucketsCol(col("features"), planes,
+          numPlanes, LshTables))
         .persist())
     // the capped production chain + orphan fan-out — the same build the
     // s13 faces run (uncapped at any fixture whose buckets stay under
@@ -1695,7 +1667,8 @@ object Clustering {
       case prev =>
         prev.foreach(_._2.unpersist())
         val df = pc0.withColumn("sigs",
-          lshSigsCol(planesAt(p), p, LshTables)).persist()
+          Linalg.signBucketsCol(col("features"), planesAt(p), p, LshTables))
+          .persist()
         signedEntry = Some((p, df))
         df
     }
@@ -2251,7 +2224,8 @@ object Clustering {
       planeRows: Seq[Array[Double]], store: DataFrame): DataFrame = {
     val numPlanes = planeRows.length / LshTables
     assignFromSignedGraphStore(batch
-      .withColumn("sigs", lshSigsCol(planeRows, numPlanes, LshTables)),
+      .withColumn("sigs", Linalg.signBucketsCol(col("features"), planeRows,
+        numPlanes, LshTables)),
       store)
   }
 
@@ -2420,7 +2394,8 @@ object Clustering {
     // signed the batch twice — VERDICT r14 "What's wrong" #2); lazy
     // persist — topk's materialization below runs the signing job
     val signed = tracked(batch
-      .withColumn("sigs", lshSigsCol(planeRows, numPlanes, LshTables)),
+      .withColumn("sigs", Linalg.signBucketsCol(col("features"), planeRows,
+        numPlanes, LshTables)),
       eager = false)
     // ONE candidate join (the serve probe's shape) feeds the argmin,
     // the stitch gate, AND the appended rows' own r2dist — but it is

@@ -124,4 +124,24 @@ class ScaleBenchSpec extends AnyFunSuite with SparkTestBase {
       assert(queries.contains("\"connlsh_n_points\":"), lines.head)
     } finally deleteTree(root)
   }
+
+  test("d11bucket runs again in a work dir whose bucketed table survived") {
+    val root = Files.createTempDirectory("graft_scale_spec")
+    try {
+      // what an earlier JVM's run leaves: the table's directory, which the
+      // in-memory catalog of this one does not know
+      val table = root.resolve("work/x1/d11_bucket_warehouse/d11_bands_b")
+      Files.createDirectories(table)
+      Files.write(table.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+      val db = spark.catalog.currentDatabase
+      val out = root.resolve("scale_d11bucket.json")
+      ScaleBench.run(spark, ScaleBench.parse(
+        Array(sfDir, "1", root.resolve("work").toString, "d11bucket")),
+        out.toString)
+      val lines = Files.readAllLines(out).asScala.filter(_.trim.nonEmpty)
+      assert(lines.size === 1)
+      assert(lines.head.contains("\"metric\":\"d11_bucket_compare\""))
+      assert(spark.catalog.currentDatabase === db)
+    } finally deleteTree(root)
+  }
 }

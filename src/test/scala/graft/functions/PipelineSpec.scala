@@ -1361,7 +1361,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       if (t == null) Seq.empty
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("expected dimension 4, got 3")),
-      s"wanted the lshSigsCol dim guard, got: ${messages(ex)}")
+      s"wanted the signBucketsCol dim guard, got: ${messages(ex)}")
     assert(messages(exOrph).exists(_.contains("expected dimension 4, got 3")),
       "the orphan (slim) lineage must carry the same dim guard")
   }

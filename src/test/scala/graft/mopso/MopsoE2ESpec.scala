@@ -361,7 +361,7 @@ class MopsoE2ESpec extends AnyFunSuite with SparkTestBase {
         (MopsoConfig.particle.copy(numPartitions = 8,
           globalExactDistributed = true), 40),
       "avg, fitnessSampleFraction = 0.5" ->
-        (cfg.copy(fitnessSampleFraction = 0.5), 39))
+        (cfg.copy(fitnessSampleFraction = 0.5), 38))
     val got = pins.map { case (name, (c, _)) =>
       name -> jobsDuring(Mopso.run(spark, input, c.copy(iterMax = 0),
         seed = 42L))

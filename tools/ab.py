@@ -20,13 +20,18 @@ medians exceeds A's interquartile range. ``--trace-runs`` adds one
 ``--trace 1`` run per side after the pairs and prints both sides of every
 per-layer metric. ``--save DIR`` copies each
 run's ``jvm.log`` and its ``*-out`` output directories (``mopso_avg``'s
-reports) to ``DIR/pair<i>-seed<s>-<side>/``, so that the outputs of the two
-sides can be compared after the session. The temporary directory is
+reports) to ``DIR/pair<i>-seed<s>-<side>/`` and, after each pair, compares
+the two sides' reports line by line (report directories matched by path
+with the timestamp segment masked, the wall-clock ``elapsed sec:`` line
+skipped): it prints ``outputs identical`` or the first differing line, and
+after the pairs how many pairs had identical outputs. The temporary directory is
 removed at the end. Nothing under the repository's
 ``perfbench/`` is touched: the runs use the exported copies.
 """
 import argparse
+import itertools
 import json
+import re
 import shutil
 import statistics
 import subprocess
@@ -79,6 +84,39 @@ def save_outputs(checkout, workload, dest):
         shutil.copy(work / "jvm.log", dest)
     for out in work.glob("*-out"):
         shutil.copytree(out, dest / out.name)
+
+
+STAMP = re.compile(r"^\d{4}(-\d\d){5}$")
+
+
+def saved_reports(run_dir):
+    """{report: lines} of one saved run. A report is a directory under its
+    ``*-out`` directories that holds ``part-*`` files, named by its path
+    with a timestamp segment masked; its lines are those of its part files
+    in name order, without the wall-clock ``elapsed sec:`` line."""
+    reports = {}
+    for d in sorted({p.parent for p in run_dir.glob("*-out/**/part-*")}):
+        key = "/".join("<stamp>" if STAMP.match(seg) else seg
+                       for seg in d.relative_to(run_dir).parts)
+        reports.setdefault(key, []).extend(
+            line for p in sorted(d.glob("part-*"))
+            for line in p.read_text().splitlines()
+            if not line.startswith("elapsed sec:"))
+    return reports
+
+
+def compare_outputs(dir_a, dir_b):
+    """(identical, message) for the saved reports of a pair's two runs."""
+    ra, rb = saved_reports(dir_a), saved_reports(dir_b)
+    if not ra and not rb:
+        return False, "no saved outputs"
+    for key in sorted(set(ra) | set(rb)):
+        if key not in ra or key not in rb:
+            return False, f"{key} only in {'A' if key in ra else 'B'}"
+        for n, (x, y) in enumerate(itertools.zip_longest(ra[key], rb[key])):
+            if x != y:
+                return False, f"{key} line {n + 1}: A {x!r} B {y!r}"
+    return True, f"outputs identical ({len(ra)} reports)"
 
 
 def quartiles(xs):
@@ -148,21 +186,27 @@ def main():
               f"{a.pairs} pairs from seed {a.seed0}", flush=True)
 
         runs = []
+        identical = 0
         for i in range(a.pairs):
             seed = a.seed0 + i
             order = ("A", "B") if i % 2 == 0 else ("B", "A")
+            saved = {s: Path(a.save) / f"pair{i}-seed{seed}-{s}"
+                     for s in order} if a.save else {}
             for pos, s in enumerate(order):
                 metrics, failed = run_once(
                     sides[s], a.workload, seed, seconds, 0)
                 if a.save:
-                    save_outputs(sides[s], a.workload,
-                                 Path(a.save) / f"pair{i}-seed{seed}-{s}")
+                    save_outputs(sides[s], a.workload, saved[s])
                 runs.append({"pair": i, "side": s, "failed": failed,
                              "metrics": metrics})
                 print(f"pair {i:2d} seed {seed} {s} "
                       f"({'first' if pos == 0 else 'second'}): failed={failed} "
                       + " ".join(f"{k}={v:.4g}" for k, v in metrics.items()),
                       flush=True)
+            if a.save:
+                same, msg = compare_outputs(saved["A"], saved["B"])
+                identical += same
+                print(f"pair {i:2d} {msg}", flush=True)
 
         rows = summary(runs, bench)
         print("\nmetric        A median [q1-q3]            "
@@ -175,6 +219,8 @@ def main():
                   f"  {r['gap_exceeds_a_iqr']}")
         print("failed runs: " +
               str(sum(1 for r in runs if r["failed"])) + f" of {len(runs)}")
+        if a.save:
+            print(f"outputs identical in {identical} of {a.pairs} pairs")
 
         if a.trace_runs:
             traced = {}
