@@ -127,7 +127,11 @@ final case class MopsoConfig(
       */
     fitnessSampleFraction: Double = 1.0,
     /** Engine extension (VERDICT r1 §6): ScopeGlobal WITHOUT the driver
-      * collect ([[GlobalNeighbors]]; only the fp summation order differs).
+      * collect — global neighbor lists built once by the bounded top-k
+      * aggregate and stored per row ([[GlobalNeighbors]]); each iteration
+      * is one shuffle-free distributed job. Per-row terms are
+      * bit-identical to the collected kernel; only the cross-row fp
+      * summation order differs (deterministic partition-order merge).
       * Default false: the collected path stays byte-faithful to the
       * reference Particle/Single variants' pinned behavior.
       */

@@ -21,10 +21,10 @@ medians exceeds A's interquartile range. ``--trace-runs`` adds one
 per-layer metric. ``--save DIR`` copies each
 run's ``jvm.log`` and its ``*-out`` output directories (``mopso_avg``'s
 reports) to ``DIR/pair<i>-seed<s>-<side>/`` and, after each pair, compares
-the two sides' reports line by line (report directories matched by path
-with the timestamp segment masked, the wall-clock ``elapsed sec:`` line
-skipped): it prints ``outputs identical`` or the first differing line, and
-after the pairs how many pairs had identical outputs. The temporary directory is
+the reports both sides wrote line by line (report directories matched by
+path with the timestamp segment masked, the wall-clock ``elapsed sec:``
+line skipped): it prints ``outputs identical`` or the first differing
+line, and after the pairs how many pairs had identical outputs. The temporary directory is
 removed at the end. Nothing under the repository's
 ``perfbench/`` is touched: the runs use the exported copies.
 """
@@ -106,17 +106,19 @@ def saved_reports(run_dir):
 
 
 def compare_outputs(dir_a, dir_b):
-    """(identical, message) for the saved reports of a pair's two runs."""
+    """(identical, message) for the saved reports of a pair's two runs.
+    A timed run's unit count varies, so only the reports both sides wrote
+    are compared: the same report path is the same unit and seed."""
     ra, rb = saved_reports(dir_a), saved_reports(dir_b)
-    if not ra and not rb:
-        return False, "no saved outputs"
-    for key in sorted(set(ra) | set(rb)):
-        if key not in ra or key not in rb:
-            return False, f"{key} only in {'A' if key in ra else 'B'}"
+    common = sorted(set(ra) & set(rb))
+    if not common:
+        return False, "no report on both sides"
+    for key in common:
         for n, (x, y) in enumerate(itertools.zip_longest(ra[key], rb[key])):
             if x != y:
                 return False, f"{key} line {n + 1}: A {x!r} B {y!r}"
-    return True, f"outputs identical ({len(ra)} reports)"
+    return True, (f"outputs identical ({len(common)} reports on both "
+                  f"sides; A wrote {len(ra)}, B {len(rb)})")
 
 
 def quartiles(xs):
