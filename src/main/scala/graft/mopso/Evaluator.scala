@@ -37,6 +37,7 @@ private[mopso] object Evaluator {
     val n: Long = sized(blocks)(_.map(_.points.length.toLong).fold(0L)(_ + _))
 
     def evaluate(positions: Array[Array[Array[Double]]]) = {
+      // locals: a task closure over the fields would ship the evaluator
       val (lIdx, total) = (l, n)
       partialsJob(blocks, positions) { (ps, it) =>
         it.map(b => ps.map(FitnessKernel.partitionPartial(b.partData, _,
