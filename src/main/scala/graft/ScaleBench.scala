@@ -256,10 +256,10 @@ object ScaleBench {
     val cfg = MopsoConfig.avg(numPartitions = parts).copy(
       iterMax = 10, partitioning = Config.PartByIdRange,
       fitnessSampleFraction = sampleFraction)
-    val t0 = System.nanoTime()
-    val r = Mopso.run(spark, pts, cfg, seed = 42L)
-    require(r.archive.nonEmpty, s"empty archive at parts=$parts")
-    (System.nanoTime() - t0) / 1e9
+    timed {
+      val r = Mopso.run(spark, pts, cfg, seed = 42L)
+      require(r.archive.nonEmpty, s"empty archive at parts=$parts")
+    }._1
   }
 
   private def m1PartitionCompare(spark: SparkSession, work: String,
@@ -302,19 +302,36 @@ object ScaleBench {
     * Also rides the s4/d7 watch metrics (uncapped vs capped candidate
     * mass) and the capped d7 groups end-to-end time.
     */
+  /** The embedding-family rows `ivfauto` and `layout` both record: the
+    * vector count, the derived nlist, and s4/d7's fixed 8-plane
+    * near-dup buckets (layout fixed by the cosine threshold's recall
+    * needs, not free to grow like c21's) — the uncapped candidate mass
+    * next to the capped emission d7 rides, the layout worth WATCHING
+    * per decade.
+    */
+  private def embeddingWatchRows(spark: SparkSession, work: String,
+      n: Long, nlist: Int): Seq[(String, Double)] = {
+    import graft.functions.Similarity
+    Seq(
+      "ivf_n_vectors" -> n.toDouble,
+      "ivf_nlist" -> nlist.toDouble,
+      "s4_bucket_pairs" ->
+        Similarity.nearDupCandidatePairs(spark, work).toDouble,
+      "s4_bucket_pairs_capped" ->
+        Similarity.nearDupCandidatePairsCapped(spark, work).toDouble)
+  }
+
   private def ivfAutoCompare(spark: SparkSession,
       work: String): Seq[(String, Double)] = {
     import graft.functions.{Dedup, Similarity}
     val n = Tables.embeddings(spark, work).count()
     val nlist = Similarity.ivfCellsFor(n)
     val step = math.max(1L, n / 100L)
-    def timeRanked(np: Int): Double = {
-      val t0 = System.nanoTime()
+    def timeRanked(np: Int): Double = timed {
       Similarity.annIvfAutoRanked(spark, work, np,
           Similarity.querySampleFilter(step))
         .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    }._1
     // the nprobe grid (VERDICT r10 §next-1): the cheap point, the
     // engine's recall-targeted rule, √nlist and 2√nlist, the r10
     // constant-corpus-fraction rule, and nlist/2 — enough of the curve
@@ -337,23 +354,11 @@ object ScaleBench {
     // engine's nprobe rule is derived from
     val hardKq = Similarity.ivfRecallCurve(spark, work, hardQs, grid,
       trained = true)
-    def d7Timed(): Double = {
-      val t0 = System.nanoTime()
+    def d7Timed(): Double = timed {
       val groups = Dedup.queries("d7_semantic_groups")(spark, work)
       groups.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      "ivf_n_vectors" -> n.toDouble,
-      "ivf_nlist" -> nlist.toDouble,
-      // the embeddings-family fixed layout worth WATCHING per decade:
-      // s4/d7's 8-plane near-dup buckets (layout fixed by the cosine
-      // threshold's recall needs, not free to grow like c21's) — the
-      // uncapped candidate mass next to the capped emission d7 now rides
-      "s4_bucket_pairs" ->
-        Similarity.nearDupCandidatePairs(spark, work).toDouble,
-      "s4_bucket_pairs_capped" ->
-        Similarity.nearDupCandidatePairsCapped(spark, work).toDouble,
+    }._1
+    embeddingWatchRows(spark, work, n, nlist) ++ Seq(
       // the capped groups form end-to-end at the decade (the measured
       // mitigation, VERDICT r10 §next-2)
       "d7_groups_sec" -> d7Timed(),
@@ -392,11 +397,7 @@ object ScaleBench {
       df.select(col("qid"), col("nid")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     def timedPairs(df: => org.apache.spark.sql.DataFrame)
-        : (Set[(Long, Long)], Double) = {
-      val t0 = System.nanoTime()
-      val p = pairs(df)
-      (p, (System.nanoTime() - t0) / 1e9)
-    }
+        : (Set[(Long, Long)], Double) = timed(pairs(df)).swap
     // untimed warmup (JIT/codegen + page cache, fair to all settings)
     pairs(Similarity.truncatedTopK(e, 8, 5))
     val (exact, exactSec) =
@@ -409,9 +410,7 @@ object ScaleBench {
       Seq(s"prefix${m}_sec" -> sec, s"prefix${m}_recall" -> recall(got))
     }
     val rotPath = s"/tmp/graft_scale_rot/${new java.io.File(work).getName}"
-    val tFit = System.nanoTime()
-    Similarity.writeRotation(spark, work, rotPath)
-    val fitSec = (System.nanoTime() - tFit) / 1e9
+    val (fitSec, _) = timed(Similarity.writeRotation(spark, work, rotPath))
     val (rotGot, rotSec) = timedPairs(
       Similarity.serveRotated(spark, work, rotPath))
     // the build-time worth-it gauge: kept explained variance vs the
@@ -452,13 +451,8 @@ object ScaleBench {
           Clustering.LshPlanes, Clustering.LshTables).toDouble,
       s"connlsh_planes${scaled}_pairs" ->
         Clustering.lshCandidatePairCount(spark, work,
-          scaled, Clustering.LshTables).toDouble,
-      "ivf_n_vectors" -> n.toDouble,
-      "ivf_nlist" -> nlist.toDouble,
-      "s4_bucket_pairs" ->
-        Similarity.nearDupCandidatePairs(spark, work).toDouble,
-      "s4_bucket_pairs_capped" ->
-        Similarity.nearDupCandidatePairsCapped(spark, work).toDouble,
+          scaled, Clustering.LshTables).toDouble) ++
+      embeddingWatchRows(spark, work, n, nlist) ++ Seq(
       // r15: the graph build's capped-emission valve, measured as a
       // candidate-mass formula over the bucket histogram — the number
       // that decides whether the s12 chain survives the third decade
@@ -497,13 +491,11 @@ object ScaleBench {
     val scaled = Clustering.lshPlanesFor(n)
     def pairsOf(p: Int): Long =
       Clustering.lshCandidatePairCount(spark, work, p, tables)
-    def timeConn(p: Int): Double = {
-      val t0 = System.nanoTime()
+    def timeConn(p: Int): Double = timed {
       val v = Clustering.connLshValue(spark, work, p, tables).head()
       require(!v.isNullAt(0) && v.getDouble(0) > 0.0,
         s"degenerate conn_lsh at planes=$p")
-      (System.nanoTime() - t0) / 1e9
-    }
+    }._1
     val pairsPinned = pairsOf(pinned)
     val pairsScaled = pairsOf(scaled)
     val secScaled = timeConn(scaled)
@@ -666,17 +658,15 @@ object ScaleBench {
       val idxS = s"${idx}_stale$pct"
       val nb = base.count()
       val nlistS = Similarity.ivfCellsFor(nb)
-      val tS0 = System.nanoTime()
-      Similarity.writeIvfAdcIndexOf(spark, base, nlistS, idxS,
-        key = idxS)
-      Similarity.appendToIvfAdcIndex(spark, idxS,
-        de.where(arrF).select(col("vec_id"), col("features")))
-      val tStale = (System.nanoTime() - tS0) / 1e9
+      val (tStale, _) = timed {
+        Similarity.writeIvfAdcIndexOf(spark, base, nlistS, idxS,
+          key = idxS)
+        Similarity.appendToIvfAdcIndex(spark, idxS,
+          de.where(arrF).select(col("vec_id"), col("features")))
+      }
       // rebuilt: quantizers retrained on the full drifted corpus
       val idxR = s"${idx}_rebuilt$pct"
-      val tR0 = System.nanoTime()
-      Similarity.writeIvfAdcIndex(spark, dDir, idxR)
-      val tRebuild = (System.nanoTime() - tR0) / 1e9
+      val (tRebuild, _) = timed(Similarity.writeIvfAdcIndex(spark, dDir, idxR))
       val qd = de.where(arrF).where(Similarity.querySampleFilter(step))
         .select(col("vec_id"), col("features"))
       // serve each index at ITS OWN derived rule: the stale index has

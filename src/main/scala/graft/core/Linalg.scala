@@ -25,13 +25,6 @@ object Linalg {
     math.sqrt(s)
   }
 
-  def squaredDistance(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-    s
-  }
-
   /** Weight vector x/sum(x) (Spark_MOPSO_Avg.scala:1078-1085). */
   def weightsBySum(x: Array[Double]): Array[Double] = {
     val s = x.sum
@@ -154,9 +147,6 @@ object Linalg {
     */
   def euclidColBuiltin(a: Column, b: Column): Column =
     sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-
-  def squaredDistanceCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
 
   def dotColBuiltin(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)

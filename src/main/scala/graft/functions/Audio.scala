@@ -160,21 +160,15 @@ object Audio {
     */
   def wavMedia(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          (id, wavBytes(
-            sampleRate = SampleRates((id % 4).toInt),
-            channels = (1 + id % 2).toInt,
-            bits = if (id % 3 == 0) 8 else 16,
-            nFrames = (20 + id % 50).toInt,
-            listLen = if (id % 5 == 0) (3 + id % 7).toInt else 0,
-            fill = (f, c) => ((3 * id + 7 * f + 11 * c) % 256).toInt))
-        }
-      }
-      .toDF("id", "payload")
+    Multimodal.perDocument(s, dir)(_.map { id =>
+      (id, wavBytes(
+        sampleRate = SampleRates((id % 4).toInt),
+        channels = (1 + id % 2).toInt,
+        bits = if (id % 3 == 0) 8 else 16,
+        nFrames = (20 + id % 50).toInt,
+        listLen = if (id % 5 == 0) (3 + id % 7).toInt else 0,
+        fill = (f, c) => ((3 * id + 7 * f + 11 * c) % 256).toInt))
+    }).toDF("id", "payload")
   }
 
   val SampleRates: Seq[Int] = Seq(8000, 16000, 22050, 44100)
@@ -244,30 +238,24 @@ object Audio {
     */
   def audioPairMedia(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val gid = id % 125
-          val k = id / 125
-          val jit = ((k / 2) % 4).toInt
-          val narrow = k % 2 == 1
-          (id, wavBytes(
-            sampleRate = SampleRates((gid % 4).toInt),
-            channels = (1 + gid % 2).toInt,
-            bits = if (gid % 3 == 0) 8 else 16,
-            nFrames = (20 + gid % 50).toInt,
-            // jitter is CLAMPED, not wrapped: a wrap flips min/max by a
-            // whole period and breaks the within-class near-identity
-            fill = (f, c) => {
-              val v = ((3 * gid + 7 * f + 11 * c) % 256).toInt
-              if (narrow) 120 + math.min(v % 16 + jit, 15)
-              else math.min(v + jit, 255)
-            }))
-        }
-      }
-      .toDF("id", "payload")
+    Multimodal.perDocument(s, dir)(_.map { id =>
+      val gid = id % 125
+      val k = id / 125
+      val jit = ((k / 2) % 4).toInt
+      val narrow = k % 2 == 1
+      (id, wavBytes(
+        sampleRate = SampleRates((gid % 4).toInt),
+        channels = (1 + gid % 2).toInt,
+        bits = if (gid % 3 == 0) 8 else 16,
+        nFrames = (20 + gid % 50).toInt,
+        // jitter is CLAMPED, not wrapped: a wrap flips min/max by a
+        // whole period and breaks the within-class near-identity
+        fill = (f, c) => {
+          val v = ((3 * gid + 7 * f + 11 * c) % 256).toInt
+          if (narrow) 120 + math.min(v % 16 + jit, 15)
+          else math.min(v + jit, 255)
+        }))
+    }).toDF("id", "payload")
   }
 
   /** Per-channel statistic embedding over the near-dup fixture: emb =
@@ -335,19 +323,8 @@ object Audio {
     * keeps the same GROUPS at O(cap²+n) pairs per bucket.
     */
   def mm10AudioNeardup: Q = (s, dir) => {
-    val st = pairStats(s, dir, withRms = false)
-    val keys = Seq("sr", "ch", "bits", "nf")
-    val x = st.select(col("id").as("doc_a") +: col("emb").as("ea") +:
-      keys.map(col): _*)
-    val y = st.select(col("id").as("doc_b") +: col("emb").as("eb") +:
-      keys.map(col): _*)
-    x.join(y, keys)
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        graft.core.Linalg.cosineCol(col("ea"), col("eb")).as("cos"))
-      .where(col("cos") >= AudioNearDupCosine)
-      .select(col("doc_a"), col("doc_b"), round(col("cos"), 4).as("cos"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    Multimodal.blockedCosinePairs(pairStats(s, dir, withRms = false),
+      Seq("sr", "ch", "bits", "nf"), AudioNearDupCosine)
   }
 
   /** Width of the quantized channel-0 amplitude bins (8-bit units) for
@@ -438,21 +415,8 @@ object Audio {
           array(col("rbin"), col("mbin") + 1),
           array(col("rbin") + 1, col("mbin")),
           array(col("rbin") + 1, col("mbin") + 1))).as("probe"))
-    val buckets = probed
-      .groupBy(col("sr"), col("ch"), col("bits"), col("nf"), col("probe"))
-      .agg(array_sort(collect_list(col("id"))).as("ids"))
-      .where(size(col("ids")) > 1)
-    val cand = Dedup.pairsFromBuckets(buckets)
-      .withColumnRenamed("doc_a", "a").withColumnRenamed("doc_b", "b")
-    val verified = cand
-      .join(st.select(col("id").as("a"), col("emb").as("ea")), "a")
-      .join(st.select(col("id").as("b"), col("emb").as("eb")), "b")
-      .where(graft.core.Linalg.cosineCol(col("ea"), col("eb")) >=
-        AudioNearDupCosine)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    graft.core.Closure.components(allIds, verified)
-      .select(col("doc_id").as("id"), col("group_id"))
-      .orderBy(col("id"))
+    Multimodal.blockedCosineGroups(st, probed,
+      Seq("sr", "ch", "bits", "nf", "probe"), AudioNearDupCosine, allIds)
   }
 
   // ---- DuckDB oracles ------------------------------------------------------

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.ArtifactCache
 import graft.sources.Tables
+import graft.streaming.MicroBatch
 import graft.functions.TextAnalysis.{hash60, tokensCol}
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
@@ -90,7 +91,16 @@ object Curation {
   /** The p5 transform over any (doc_id, text) frame (spec feeds synthetic
     * corpora through both this and the Bloom twin).
     */
-  def decontaminate(docs: DataFrame): DataFrame = {
+  def decontaminate(docs: DataFrame): DataFrame =
+    sharedGrams(docs)((_, tr) => tr)
+
+  /** The overlap join p5 and p5b share: (train_doc, eval_doc, n_shared)
+    * over the eval side's and the train side's distinct grams, the eval
+    * side broadcast. `prefilter` narrows the train grams given the eval
+    * grams (p5b's Bloom filter; p5 keeps them all).
+    */
+  private def sharedGrams(docs: DataFrame)(
+      prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     // the doc_id range filters sit BEFORE gram building, so they push to
     // the parquet scan — the eval branch reads ~EvalDocs rows, not the
     // corpus, and neither branch tokenizes the other's rows
@@ -98,7 +108,7 @@ object Curation {
       .withColumnRenamed("doc_id", "eval_doc")
     val tr = distinctGrams(docs.where(col("doc_id") >= EvalDocs))
       .withColumnRenamed("doc_id", "train_doc")
-    tr.join(broadcast(ev), Seq("gram"))
+    prefilter(ev, tr).join(broadcast(ev), Seq("gram"))
       .groupBy(col("train_doc"), col("eval_doc"))
       .agg(count(lit(1)).as("n_shared"))
       .orderBy(col("train_doc"), col("eval_doc"))
@@ -121,36 +131,29 @@ object Curation {
     decontaminateBloom(Tables.documents(s, dir))
 
   /** The p5b transform over any (doc_id, text) frame. */
-  def decontaminateBloom(docs: DataFrame): DataFrame = {
-    val ev = distinctGrams(docs.where(col("doc_id") < EvalDocs))
-      .withColumnRenamed("doc_id", "eval_doc")
-    // capacity from the eval side's true gram count: one count() pre-job
-    // over the tiny side (an eval set, not a corpus — the third pass of
-    // the small gram pipeline costs ~nothing and keeps bits/gram fixed
-    // at any suite size; persist ev first if an eval suite ever isn't
-    // small). At [[BloomFppTarget]] each slot costs ~10 bits, so even
-    // 1M derived slots broadcast ~1.2 MB
-    val capacity = bloomCapacityOf(ev.count())
-    val bloom = ev.select(xxhash64(col("gram")).as("h"))
-      .stat.bloomFilter("h", capacity, BloomFppTarget)
-    val bloomBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
+  def decontaminateBloom(docs: DataFrame): DataFrame =
+    sharedGrams(docs) { (ev, tr) =>
+      // capacity from the eval side's true gram count: one count() pre-job
+      // over the tiny side (an eval set, not a corpus — the third pass of
+      // the small gram pipeline costs ~nothing and keeps bits/gram fixed
+      // at any suite size; persist ev first if an eval suite ever isn't
+      // small). At [[BloomFppTarget]] each slot costs ~10 bits, so even
+      // 1M derived slots broadcast ~1.2 MB
+      val capacity = bloomCapacityOf(ev.count())
+      val bloom = ev.select(xxhash64(col("gram")).as("h"))
+        .stat.bloomFilter("h", capacity, BloomFppTarget)
+      val bloomBytes = {
+        val bos = new java.io.ByteArrayOutputStream()
+        bloom.writeTo(bos)
+        bos.toByteArray
+      }
+      val mightContain = org.apache.spark.sql.graft.Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
+          org.apache.spark.sql.graft.Bridge.expression(lit(bloomBytes)),
+          org.apache.spark.sql.graft.Bridge.expression(
+            xxhash64(col("gram")))))
+      tr.where(mightContain)
     }
-    val mightContain = org.apache.spark.sql.graft.Bridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        org.apache.spark.sql.graft.Bridge.expression(lit(bloomBytes)),
-        org.apache.spark.sql.graft.Bridge.expression(
-          xxhash64(col("gram")))))
-    val tr = distinctGrams(docs.where(col("doc_id") >= EvalDocs))
-      .withColumnRenamed("doc_id", "train_doc")
-      .where(mightContain)
-    tr.join(broadcast(ev), Seq("gram"))
-      .groupBy(col("train_doc"), col("eval_doc"))
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy(col("train_doc"), col("eval_doc"))
-  }
 
   /** p5c: per-document contamination FRACTION — the graded form of
     * p5's boolean overlap report. p5 answers "which (train, eval)
@@ -646,12 +649,7 @@ object Curation {
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val cs = readCentroids(vecs.sparkSession, path)
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(assignWithCentroids(batch.toDF(), cs))
-      }
-      .start()
+    MicroBatch.serve(vecs)(assignWithCentroids(_, cs))(sink)
   }
 
   /** The GROUPED form of [[tokenBudgetSelect]]'s factored prefix sum:

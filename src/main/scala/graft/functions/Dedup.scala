@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{ArtifactCache, Closure}
 import graft.sources.Tables
+import graft.streaming.MicroBatch
 import graft.functions.TextAnalysis.{hash60, tokensCol}
 
 /** Deduplication operators (builder brief): exact hash dedup, MinHash
@@ -635,18 +636,27 @@ object Dedup {
     */
   def p10PipelineE2e: Q = (s, dir) => {
     val curated = curatedDocs(s, dir).persist()
-    val groups = dedupGroupsOf(curated)
-    val reps = curated
+    val out = dedupSpanBudget(curated)
+    curated.unpersist()
+    out.orderBy(col("doc_id"))
+  }
+
+  /** The production tail p10 and p11 share over a gated (doc_id, text)
+    * set: transitive near-dup groups, span removal over the group
+    * representatives, then the token-budget cut over the cleaned text.
+    * tokenBudgetSelect eagerly pins its range-partitioned input, so the
+    * whole upstream has materialized when this returns and the caller
+    * may unpersist the gated set.
+    */
+  private def dedupSpanBudget(gated: DataFrame): DataFrame = {
+    val groups = dedupGroupsOf(gated)
+    val reps = gated
       .join(groups.where(col("doc_id") === col("group_id"))
         .select(col("doc_id")), Seq("doc_id"))
       .select(col("doc_id"), col("text"))
     val cleaned = spanRemoval(reps)
       .select(col("doc_id"), col("clean_text").as("text"))
-    // tokenBudgetSelect eagerly pins its range-partitioned input, so
-    // the whole upstream has materialized by the time we unpersist
-    val out = Curation.tokenBudgetSelect(cleaned, Curation.SelectParts)
-    curated.unpersist()
-    out.orderBy(col("doc_id"))
+    Curation.tokenBudgetSelect(cleaned, Curation.SelectParts)
   }
 
   /** Learned-gate thresholds for [[p11PipelineLearned]], chosen against
@@ -700,16 +710,7 @@ object Dedup {
       .where(col("avg_surprisal2") <= LearnedSurpGate)
       .select(col("doc_id"))
     val lg = qg.join(lmKeep, Seq("doc_id")).persist()
-    val groups = dedupGroupsOf(lg)
-    val reps = lg
-      .join(groups.where(col("doc_id") === col("group_id"))
-        .select(col("doc_id")), Seq("doc_id"))
-      .select(col("doc_id"), col("text"))
-    val cleaned = spanRemoval(reps)
-      .select(col("doc_id"), col("clean_text").as("text"))
-    // tokenBudgetSelect eagerly pins its range-partitioned input, so
-    // the whole upstream has materialized before the unpersists
-    val out = Curation.tokenBudgetSelect(cleaned, Curation.SelectParts)
+    val out = dedupSpanBudget(lg)
     qg.unpersist()
     lg.unpersist()
     out.orderBy(col("doc_id"))
@@ -771,13 +772,8 @@ object Dedup {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val path = s"${Similarity.artifactRoot(dir)}/dedup_index"
     writeDedupIndex(stream.sparkSession, dir, path)
-    stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(assignAgainstIndex(batch.sparkSession, dir, path,
-          batch.toDF()))
-      }
-      .start()
+    MicroBatch.serve(stream)(b =>
+      assignAgainstIndex(b.sparkSession, dir, path, b))(sink)
   }
 
   /** 32-bit SimHash over the distinct token set: bit b is set when more

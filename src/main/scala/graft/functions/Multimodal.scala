@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -880,6 +880,18 @@ object Multimodal {
     "mm7_gif_census" -> mm7GifCensus
   )
 
+  /** The scaffold of every generated media fixture: the document ids,
+    * turned into rows inside the scan's partitions by `rows`.
+    */
+  private[functions] def perDocument[T: Encoder](s: SparkSession,
+      dir: String)(rows: Iterator[Long] => Iterator[T]): Dataset[T] = {
+    import s.implicits._
+    Tables.documents(s, dir)
+      .select(col("doc_id"))
+      .as[Long]
+      .mapPartitions(rows)
+  }
+
   /** mm4 gradient-BMP geometry: source dims derived from doc_id, longest
     * side scaled to [[ResizeBox]] by [[resizeBmp]].
     */
@@ -901,20 +913,14 @@ object Multimodal {
     */
   def gradientMedia(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (4 + id % 13).toInt
-          val h = (4 + id % 11).toInt
-          (id, bmpPixelBytes(w, h, (x, y) =>
-            (((x * 7 + y * 3 + id) % 256).toInt,
-              ((x * 5 + id * 2) % 256).toInt,
-              ((y * 11 + id * 3) % 256).toInt)))
-        }
-      }
-      .toDF("id", "payload")
+    perDocument(s, dir)(_.map { id =>
+      val w = (4 + id % 13).toInt
+      val h = (4 + id % 11).toInt
+      (id, bmpPixelBytes(w, h, (x, y) =>
+        (((x * 7 + y * 3 + id) % 256).toInt,
+          ((x * 5 + id * 2) % 256).toInt,
+          ((y * 11 + id * 3) % 256).toInt)))
+    }).toDF("id", "payload")
   }
 
   def mm4ResizeBmp: Q = (s, dir) => {
@@ -988,7 +994,18 @@ object Multimodal {
     val st = gradientStats(s, dir).toDF()
       .select(col("id"), col("width"), col("height"),
         col("domC"), col("domB"), col("emb"))
-    val keys = Seq("width", "height", "domC", "domB")
+    blockedCosinePairs(st, Seq("width", "height", "domC", "domB"),
+      PixelNearDupCosine)
+  }
+
+  /** The bucket-then-verify pair list mm6 and mm10 share: `st` rows
+    * (id, emb, keys…) self-join on the blocking `keys`, each pair once
+    * (doc_a < doc_b), and the pairs whose embedding cosine reaches
+    * `threshold` come out as (doc_a, doc_b, cos rounded to 4 places),
+    * ordered.
+    */
+  private[functions] def blockedCosinePairs(st: DataFrame,
+      keys: Seq[String], threshold: Double): DataFrame = {
     val x = st.select(col("id").as("doc_a") +: col("emb").as("ea") +:
       keys.map(col): _*)
     val y = st.select(col("id").as("doc_b") +: col("emb").as("eb") +:
@@ -997,7 +1014,7 @@ object Multimodal {
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         graft.core.Linalg.cosineCol(col("ea"), col("eb")).as("cos"))
-      .where(col("cos") >= PixelNearDupCosine)
+      .where(col("cos") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("cos"), 4).as("cos"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1019,8 +1036,25 @@ object Multimodal {
       .select(col("id"), col("width"), col("height"),
         col("domC"), col("domB"), col("emb"))
       .persist()
-    val buckets = st
-      .groupBy(col("width"), col("height"), col("domC"), col("domB"))
+    val out = blockedCosineGroups(st, st,
+      Seq("width", "height", "domC", "domB"), PixelNearDupCosine,
+      Tables.documents(s, dir).select(col("doc_id")))
+    st.unpersist()
+    out
+  }
+
+  /** The capped bucket-then-verify grouping mm6b and mm10b share:
+    * `blocked` rows (id, keys…) bucket on the blocking `keys`, each
+    * bucket of two or more emits its capped candidate pairs
+    * ([[Dedup.pairsFromBuckets]]), the pairs whose `st` embedding cosine
+    * reaches `threshold` are verified, and the closure over `allIds`
+    * labels each id with its group: (id, group_id), ordered by id.
+    */
+  private[functions] def blockedCosineGroups(st: DataFrame,
+      blocked: DataFrame, keys: Seq[String], threshold: Double,
+      allIds: => DataFrame): DataFrame = {
+    val buckets = blocked
+      .groupBy(keys.map(col): _*)
       .agg(array_sort(collect_list(col("id"))).as("ids"))
       .where(size(col("ids")) > 1)
     val cand = Dedup.pairsFromBuckets(buckets)
@@ -1028,15 +1062,11 @@ object Multimodal {
     val verified = cand
       .join(st.select(col("id").as("a"), col("emb").as("ea")), "a")
       .join(st.select(col("id").as("b"), col("emb").as("eb")), "b")
-      .where(graft.core.Linalg.cosineCol(col("ea"), col("eb")) >=
-        PixelNearDupCosine)
+      .where(graft.core.Linalg.cosineCol(col("ea"), col("eb")) >= threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    val out = graft.core.Closure.components(
-      Tables.documents(s, dir).select(col("doc_id")), verified)
+    graft.core.Closure.components(allIds, verified)
       .select(col("doc_id").as("id"), col("group_id"))
       .orderBy(col("id"))
-    st.unpersist()
-    out
   }
 
   /** The Y4M fixture behind mm2: one REAL YUV4MPEG2 stream per document —
@@ -1046,23 +1076,17 @@ object Multimodal {
     */
   def y4mMedia(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (2 * (2 + id % 6)).toInt
-          val h = (2 * (2 + id % 4)).toInt
-          val nf = (1 + id % 9).toInt
-          val cs = (id % 3) match {
-            case 0 => "C420jpeg"
-            case 1 => "C444"
-            case _ => "Cmono"
-          }
-          (id, y4mBytes(w, h, nf, cs, f => ((id + f) % 256).toInt))
-        }
+    perDocument(s, dir)(_.map { id =>
+      val w = (2 * (2 + id % 6)).toInt
+      val h = (2 * (2 + id % 4)).toInt
+      val nf = (1 + id % 9).toInt
+      val cs = (id % 3) match {
+        case 0 => "C420jpeg"
+        case 1 => "C444"
+        case _ => "Cmono"
       }
-      .toDF("id", "payload")
+      (id, y4mBytes(w, h, nf, cs, f => ((id + f) % 256).toInt))
+    }).toDF("id", "payload")
   }
 
   /** mm2: frame-sampling census over the REAL Y4M demux — per stream, the
@@ -1091,21 +1115,15 @@ object Multimodal {
     */
   def gifMedia(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          (id, gifStreamBytes(
-            w = (3 + id % 7).toInt, h = (3 + id % 5).toInt,
-            nFrames = (1 + id % 8).toInt,
-            withGct = id % 2 == 0, withExt = id % 3 != 0,
-            lctEvery = if (id % 4 == 0) 2 else 0,
-            dataLen = (5 + id % 20).toInt,
-            fill = f => ((id + f) % 256).toInt))
-        }
-      }
-      .toDF("id", "payload")
+    perDocument(s, dir)(_.map { id =>
+      (id, gifStreamBytes(
+        w = (3 + id % 7).toInt, h = (3 + id % 5).toInt,
+        nFrames = (1 + id % 8).toInt,
+        withGct = id % 2 == 0, withExt = id % 3 != 0,
+        lctEvery = if (id % 4 == 0) 2 else 0,
+        dataLen = (5 + id % 20).toInt,
+        fill = f => ((id + f) % 256).toInt))
+    }).toDF("id", "payload")
   }
 
   /** mm7: frame census over the REAL GIF block walk (mm2's shape for the
@@ -1147,25 +1165,19 @@ object Multimodal {
     */
   def mm3HeaderParse: Q = (s, dir) => {
     import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"))
-      .as[Long]
-      .mapPartitions { it =>
-        it.map { id =>
-          val w = (16 + (id * 31) % 4080).toInt
-          val h = (16 + (id * 17) % 2160).toInt
-          val bytes = (id % 5) match {
-            case 0 => pngBytes(w, h)
-            case 1 => jpegBytes(w, h)
-            case 2 => bmpBytes(w, h)
-            case 3 => gifBytes(w, h)
-            // TIFF alternates byte order — the dual-endian format
-            case _ => tiffBytes(w, h, bigEndian = id % 2 == 0)
-          }
-          decode(id, bytes)
-        }
+    perDocument(s, dir)(_.map { id =>
+      val w = (16 + (id * 31) % 4080).toInt
+      val h = (16 + (id * 17) % 2160).toInt
+      val bytes = (id % 5) match {
+        case 0 => pngBytes(w, h)
+        case 1 => jpegBytes(w, h)
+        case 2 => bmpBytes(w, h)
+        case 3 => gifBytes(w, h)
+        // TIFF alternates byte order — the dual-endian format
+        case _ => tiffBytes(w, h, bigEndian = id % 2 == 0)
       }
-      .toDF()
+      decode(id, bytes)
+    }).toDF()
       .select(col("id"), col("format"),
         col("width").cast("long").as("width"),
         col("height").cast("long").as("height"),

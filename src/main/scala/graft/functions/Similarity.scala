@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{ArtifactCache, ConcurrentLeg, Linalg}
 import graft.operators.Clustering
 import graft.sources.Tables
+import graft.streaming.MicroBatch
 
 /** Similarity search over the embedding column (builder brief): exact
   * brute-force cosine top-k as the correctness baseline, sign-LSH
@@ -115,18 +116,46 @@ object Similarity {
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("features").as("qv"))
     val c = e.select(col("vec_id").as("nid"), col("features").as("nv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    q.crossJoin(c)
+    topKPerQuery(q.crossJoin(c)
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        Linalg.cosineCol(col("qv"), col("nv")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
+        Linalg.cosineCol(col("qv"), col("nv")).as("cos")),
+      col("cos").desc, 5)
       .select(col("qid"), col("rank"), col("nid"),
         round(col("cos"), 4).as("cos"))
       .orderBy(col("qid"), col("rank"))
   }
+
+  /** The per-query top-k every ranking here shares: numbers each
+    * query's rows 1, 2, … in `rankAs` by `key`, ties toward the lower
+    * `nid`, and keeps the first `k`. A query is its `qid` unless `by`
+    * names other partition columns (the probe settings rank per
+    * (np, qid)).
+    */
+  private[graft] def topKPerQuery(rows: DataFrame, key: Column, k: Int,
+      by: Seq[Column] = Seq(col("qid")),
+      rankAs: String = "rank"): DataFrame =
+    rows.withColumn(rankAs, row_number().over(
+        Window.partitionBy(by: _*).orderBy(key, col("nid"))))
+      .where(col(rankAs) <= k)
+
+  /** Exact euclidean top-5 of the queries (qid, qv) among the corpus
+    * (nid, nv): (qid, nid). The brute-force denominator every recall
+    * measurement divides by.
+    */
+  private def exactTop5(q: DataFrame, c: DataFrame): DataFrame =
+    euclidTop5(q.crossJoin(c)).select(col("qid"), col("nid"))
+
+  /** The top 5 per query by euclidean distance among candidate (qid, qv,
+    * nid, nv) pairs, a query never its own neighbor: (qid, nid, dist,
+    * rank).
+    */
+  private def euclidTop5(pairs: DataFrame): DataFrame =
+    topKPerQuery(pairs
+      .where(col("qid") =!= col("nid"))
+      .select(col("qid"), col("nid"),
+        Linalg.euclidCol(col("qv"), col("nv")).as("dist")),
+      col("dist"), 5)
 
   /** Matryoshka-style truncated-prefix shortlist width: stage 1 ranks on
     * the first [[TruncDim]] of [[Dim]] dimensions only.
@@ -195,28 +224,22 @@ object Similarity {
   private[graft] def shortlistRerankOver(full: DataFrame,
       trunc: DataFrame, qtrunc: DataFrame, qFull: DataFrame,
       shortlistN: Int, k: Int = 5): DataFrame = {
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("tcos").desc, col("nid"))
-    val shortlist = qtrunc
+    val shortlist = topKPerQuery(qtrunc
       .crossJoin(trunc.select(col("vec_id").as("nid"), col("tv").as("ntv")))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        Linalg.cosineCol(col("qtv"), col("ntv")).as("tcos"))
-      .withColumn("srank", row_number().over(wShort))
-      .where(col("srank") <= shortlistN)
+        Linalg.cosineCol(col("qtv"), col("ntv")).as("tcos")),
+      col("tcos").desc, shortlistN, rankAs = "srank")
       .select(col("qid"), col("nid"))
     // fetch full vectors for shortlist members only: broadcast the
     // Q×Shortlist pair list against ONE scan of the vector table
     val fetched = full
       .join(broadcast(shortlist), col("vec_id") === col("nid"))
       .select(col("qid"), col("nid"), col("features").as("nv"))
-    val wFin = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    fetched.join(broadcast(qFull), "qid")
+    topKPerQuery(fetched.join(broadcast(qFull), "qid")
       .select(col("qid"), col("nid"),
-        Linalg.cosineCol(col("qv"), col("nv")).as("cos"))
-      .withColumn("rank", row_number().over(wFin))
-      .where(col("rank") <= k)
+        Linalg.cosineCol(col("qv"), col("nv")).as("cos")),
+      col("cos").desc, k)
   }
 
   /** s10b: LEARNED-rotation truncation — the OPQ-style answer to s10's
@@ -344,13 +367,8 @@ object Similarity {
   def serveRotatedStream(queries: DataFrame, dir: String, path: String)(
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(rotatedRankedQueries(batch.sparkSession, dir, path,
-          batch.toDF()))
-      }
-      .start()
+    MicroBatch.serve(queries)(b =>
+      rotatedRankedQueries(b.sparkSession, dir, path, b))(sink)
 
   /** Sign-LSH bucket per vector: bit i = [dot(v, plane_i) > 0] with the
     * first [[NumPlanes]] embeddings as (deterministic, data-derived)
@@ -481,14 +499,12 @@ object Similarity {
       .select(col("qid"), col("qv"), col("np"),
         explode(transform(slice(cellsSorted, lit(1), col("np")),
           p => p.getField("cluster"))).as("cell"))
-    val w = Window.partitionBy(col("np"), col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    probes.join(assigned, Seq("cell")) // equi-join on the cell = the pruning
-      .where(col("qid") =!= col("nid"))
-      .select(col("np"), col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
+    topKPerQuery(
+      probes.join(assigned, Seq("cell")) // equi-join on the cell = the pruning
+        .where(col("qid") =!= col("nid"))
+        .select(col("np"), col("qid"), col("nid"),
+          Linalg.euclidCol(col("qv"), col("nv")).as("dist")),
+      col("dist"), 5, by = Seq(col("np"), col("qid")))
       .select(col("np"), col("qid"), col("rank"), col("nid"))
   }
 
@@ -753,21 +769,24 @@ object Similarity {
   def s11AnnFiltered: Q = (s, dir) => {
     val e = Tables.embeddings(s, dir)
     val nlist = ivfCellsFor(e.count())
-    val cents = coarseCentroids(s, dir, nlist, trained = false)
-    val assigned = cellRanked(cents,
-      e.where(col("label") === S11Label), 1, "nid", "nv")
-    val probes = cellRanked(cents,
-      e.where(col("vec_id") < 5), ivfProbesFiltered(nlist), "qid", "qv")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    probes.join(assigned, Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("qid"), col("rank"), col("nid"))
+    probedCellsTop5(coarseCentroids(s, dir, nlist, trained = false),
+      e.where(col("label") === S11Label),
+      e.where(col("vec_id") < 5), ivfProbesFiltered(nlist))
       .orderBy(col("qid"), col("rank"))
+  }
+
+  /** The probe → join → rank body of s11 and the auto-IVF ranking:
+    * `corpus` rows take their nearest cell of `cents`, each query its
+    * `nprobe` nearest, and the candidates that share a cell (the
+    * equi-join is the pruning) rank by euclidean distance. Returns
+    * (qid, rank, nid), the top 5 per query.
+    */
+  private def probedCellsTop5(cents: DataFrame, corpus: DataFrame,
+      queries: DataFrame, nprobe: Int): DataFrame = {
+    val assigned = cellRanked(cents, corpus, 1, "nid", "nv")
+    val probes = cellRanked(cents, queries, nprobe, "qid", "qv")
+    euclidTop5(probes.join(assigned, Seq("cell")))
+      .select(col("qid"), col("rank"), col("nid"))
   }
 
   /** The s11 predicate's target label — ~10% selective on the fixture's
@@ -794,18 +813,8 @@ object Similarity {
       trained: Boolean = false): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val nlist = ivfCellsFor(e.count())
-    val cents = coarseCentroids(s, dir, nlist, trained)
-    val assigned = cellRanked(cents, e, 1, "nid", "nv")
-    val probes = cellRanked(cents, queries, nprobe, "qid", "qv")
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    probes.join(assigned, Seq("cell"))
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("qid"), col("rank"), col("nid"))
+    probedCellsTop5(coarseCentroids(s, dir, nlist, trained), e, queries,
+      nprobe)
   }
 
   /** Candidate-generation COMPUTE of s4's fixed [[NearDupPlanes]]-plane
@@ -959,16 +968,8 @@ object Similarity {
     val q = queries
       .select(col("vec_id").as("qid"), col("features").as("qv"))
       .localCheckpoint(eager = true)
-    val ally = e
-      .select(col("vec_id").as("nid"), col("features").as("nv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    val exact = broadcast(q).join(ally, col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("qid"), col("nid"))
+    val exact = exactTop5(broadcast(q),
+        e.select(col("vec_id").as("nid"), col("features").as("nv")))
       .localCheckpoint(eager = true) // consumers: per-variant hit join + count
     val nExact = exact.count()
     require(nExact > 0, "empty recall denominator")
@@ -980,19 +981,13 @@ object Similarity {
     }
   }
 
-  /** Coarse cell assignment + RESIDUALS of the corpus against the
-    * trained auto-IVF quantizer: (vec_id, cell, features = v − c_cell).
-    * The narrow-assignment discipline of [[cellRanked]]; the residual
-    * subtraction is one zip_with against the broadcast centroid table.
-    */
-  private def residualFrame(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    residualFrameOf(Tables.embeddings(s, dir), cents)
-
-  /** Cell assignment + residuals of an explicit (vec_id, features)
-    * frame against a given centroid table — shared by the
-    * corpus-of-record build and the incremental append path (arrivals
-    * encode against FROZEN centroids read back from the index).
+  /** Coarse cell assignment + RESIDUALS of an explicit (vec_id,
+    * features) frame against a given centroid table: (vec_id, cell,
+    * features = v − c_cell). The narrow-assignment discipline of
+    * [[cellRanked]]; the residual subtraction is one zip_with against
+    * the broadcast centroid table. Shared by the corpus-of-record build
+    * and the incremental append path (arrivals encode against FROZEN
+    * centroids read back from the index).
     */
   private def residualFrameOf(vecs: DataFrame,
       cents: DataFrame): DataFrame =
@@ -1001,18 +996,13 @@ object Similarity {
       .select(col("vec_id"), col("cell"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("features"))
 
-  /** Residual PQ codebook — per-subspace seeded k-means over the
-    * RESIDUALS (memoized per dir): after the coarse quantizer removes
-    * the cell centroid, the codewords quantize WITHIN-cell structure,
-    * which is exactly what flat-PQ codewords waste resolution on
-    * re-encoding (every codeword must span the whole data range).
-    */
-  private def pqResidualCodebook(s: SparkSession, dir: String,
-      cents: DataFrame): DataFrame =
-    pqResidualCodebookOf(s, Tables.embeddings(s, dir), cents, dir)
-
-  /** Residual codebook over an explicit corpus frame (see
-    * [[coarseCentroidsOf]] for the `key` contract).
+  /** Residual PQ codebook over an explicit corpus frame — per-subspace
+    * seeded k-means over the RESIDUALS (memoized per `key`, see
+    * [[coarseCentroidsOf]] for its contract): after the coarse
+    * quantizer removes the cell centroid, the codewords quantize
+    * WITHIN-cell structure, which is exactly what flat-PQ codewords
+    * waste resolution on re-encoding (every codeword must span the
+    * whole data range).
     */
   private def pqResidualCodebookOf(s: SparkSession, corpus: DataFrame,
       cents: DataFrame, key: String): DataFrame = {
@@ -1226,42 +1216,48 @@ object Similarity {
       .agg(array_sort(collect_list(col("e"))).as("es"))
       .select(col("qid"), col("cell"),
         transform(col("es"), x => x.getField("pd")).as("lut"))
+    // equi-join on the cell = the pruning
+    adcTop5(codes.join(luts, Seq("cell")), corpus, queries, rerank)
+  }
+
+  /** The ADC ranking shared by the flat-PQ and IVFADC scorers, over
+    * candidate (qid, nid, codes, lut) rows: the top 5 per query by the
+    * asymmetric distance (score = the rounded ADC) or, with
+    * `rerank > 0`, that many by ADC exactly reranked against `corpus`
+    * (score = the rounded exact distance). Returns (qid, rank, nid,
+    * score).
+    */
+  private def adcTop5(candidates: DataFrame, corpus: => DataFrame,
+      queries: DataFrame, rerank: Int): DataFrame = {
     val adc = (1 to PqSubspaces).map(m =>
       element_at(col("lut"),
         lit((m - 1) * PqCodewords) + element_at(col("codes"), m)))
       .reduce(_ + _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("nid"))
-    val ranked = codes.join(luts, Seq("cell")) // equi-join = the pruning
+    val ranked = topKPerQuery(candidates
       .where(col("qid") =!= col("nid"))
-      .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
+      .withColumn("adc", adc), col("adc"), if (rerank <= 0) 5 else rerank)
     if (rerank <= 0)
-      ranked.where(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("nid"),
-          round(col("adc"), 4).as("score"))
-    else exactRerank(corpus, queries, ranked, rerank)
+      ranked.select(col("qid"), col("rank"), col("nid"),
+        round(col("adc"), 4).as("score"))
+    else exactRerank(corpus, queries, ranked)
   }
 
   /** Exact rerank of an ADC shortlist — the ONLY leg that ever touches
     * a raw vector: the |q|·rerank narrow (qid, nid) shortlist rides
     * broadcast against the corpus (a (nid, nv) frame), exact euclidean,
-    * top-5 by (dist, nid). Shared by the flat-PQ and IVFADC rankings.
+    * top-5 by (dist, nid).
     */
   private def exactRerank(corpus: DataFrame,
-      queries: DataFrame, ranked: DataFrame, rerank: Int): DataFrame = {
-    val shortlist = ranked.where(col("rank") <= rerank)
-      .select(col("qid"), col("nid"))
+      queries: DataFrame, shortlist: DataFrame): DataFrame = {
     val qv = queries.select(col("vec_id").as("qid"),
       col("features").as("qv"))
-    val nv = corpus
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    broadcast(shortlist).join(nv, Seq("nid"))
-      .join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
+    topKPerQuery(
+      broadcast(shortlist.select(col("qid"), col("nid")))
+        .join(corpus, Seq("nid"))
+        .join(broadcast(qv), Seq("qid"))
+        .select(col("qid"), col("nid"),
+          Linalg.euclidCol(col("qv"), col("nv")).as("dist")),
+      col("dist"), 5)
       .select(col("qid"), col("rank"), col("nid"),
         round(col("dist"), 4).as("score"))
   }
@@ -1320,16 +1316,8 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("features").as("qv"))
-    val c = e.select(col("vec_id").as("nid"), col("features").as("nv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dist"), col("nid"))
-    val exact = q.crossJoin(c)
-      .where(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select(col("qid"), col("nid"))
+    val exact = exactTop5(q,
+      e.select(col("vec_id").as("nid"), col("features").as("nv")))
     // the SAME probedTopK that serves s3 — the measured recall is the
     // served algorithm's by construction, and the whole curve costs one
     // assignment scan + one candidate join
@@ -1399,19 +1387,10 @@ object Similarity {
         zip_with(col("features"), col("dq"),
           (a, b) => round(abs(a - b) * lit(1000000), 0)),
         lit(0.0), _ + _)) / (count(lit(1)) * Dim), 2).as("mae_micro"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("nid"))
-    def top5(frame: DataFrame, vcol: String): DataFrame = {
-      val q = frame.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col(vcol).as("qv"))
-      val c = frame.select(col("vec_id").as("nid"), col(vcol).as("nv"))
-      q.crossJoin(c)
-        .where(col("qid") =!= col("nid"))
-        .select(col("qid"), col("nid"),
-          Linalg.euclidCol(col("qv"), col("nv")).as("dist"))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= 5)
-        .select(col("qid"), col("nid"))
-    }
+    def top5(frame: DataFrame, vcol: String): DataFrame =
+      exactTop5(frame.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col(vcol).as("qv")),
+        frame.select(col("vec_id").as("nid"), col(vcol).as("nv")))
     val exact = top5(e, "features")
     val approx = top5(quantized, "dq")
     approx.join(exact, Seq("qid", "nid"), "left_semi")
@@ -1555,22 +1534,10 @@ object Similarity {
       rerank: Int = 0): DataFrame = {
     val cb = pqCodebookOf(s, dir, trained)
     val luts = pqLuts(queries, cb)
-    val adc = (1 to PqSubspaces).map(m =>
-      element_at(col("lut"),
-        lit((m - 1) * PqCodewords) + element_at(col("codes"), m)))
-      .reduce(_ + _)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("nid"))
-    val ranked = pqCodes(s, dir, cb)
+    adcTop5(pqCodes(s, dir, cb)
       .select(col("vec_id").as("nid"), col("codes"))
-      .crossJoin(broadcast(luts))
-      .where(col("qid") =!= col("nid"))
-      .withColumn("adc", adc)
-      .withColumn("rank", row_number().over(w))
-    if (rerank <= 0)
-      ranked.where(col("rank") <= 5)
-        .select(col("qid"), col("rank"), col("nid"),
-          round(col("adc"), 4).as("score"))
-    else exactRerank(corpusFrame(s, dir), queries, ranked, rerank)
+      .crossJoin(broadcast(luts)),
+      corpusFrame(s, dir), queries, rerank)
   }
 
   /** s8: product-quantization ANN (Jégou et al. 2011, "Product
@@ -1618,13 +1585,8 @@ object Similarity {
   def serveAnnStream(queries: DataFrame, dir: String, nprobe: Int)(
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(annIvfAutoRankedQueries(batch.sparkSession, dir, nprobe,
-          batch.toDF()))
-      }
-      .start()
+    MicroBatch.serve(queries)(b =>
+      annIvfAutoRankedQueries(b.sparkSession, dir, nprobe, b))(sink)
 
   /** Streaming serving twin of the COMPOSED index (s9 IVFADC): arriving
     * query vectors scored per micro-batch by the exact batch ranking
@@ -1639,13 +1601,8 @@ object Similarity {
   def serveIvfAdcStream(queries: DataFrame, dir: String, nprobe: Int,
       rerank: Int)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(pqIvfAdcRanked(batch.sparkSession, dir, batch.toDF(),
-          nprobe, rerank))
-      }
-      .start()
+    MicroBatch.serve(queries)(b =>
+      pqIvfAdcRanked(b.sparkSession, dir, b, nprobe, rerank))(sink)
 
   /** [[serveIvfAdcStream]] over a PERSISTED index path instead of the
     * in-JVM memoized frames — the base+delta serving face of the
@@ -1669,13 +1626,8 @@ object Similarity {
   def serveIvfAdcStreamFromIndex(queries: DataFrame, dir: String,
       path: String, nprobe: Int, rerank: Int)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(serveIvfAdcFromIndex(batch.sparkSession, dir, path,
-          batch.toDF(), nprobe, rerank))
-      }
-      .start()
+    MicroBatch.serve(queries)(b => serveIvfAdcFromIndex(b.sparkSession,
+      dir, path, b, nprobe, rerank))(sink)
 
   // ---- DuckDB oracles ------------------------------------------------------
 

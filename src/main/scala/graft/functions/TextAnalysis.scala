@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.sources.Tables
+import graft.streaming.MicroBatch
 
 /** Text-analysis operators for the training-data pipeline surface
   * (builder brief): token counting, quality scoring, language-ID heuristic,
@@ -342,13 +343,10 @@ object TextAnalysis {
   def serveLineCleanStream(docs: DataFrame, path: String)(
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        val bp = batch.sparkSession.read.parquet(path)
-        sink(removeBoilerplate(composedLines(batch.toDF()), bp))
-      }
-      .start()
+    MicroBatch.serve(docs) { b =>
+      val bp = b.sparkSession.read.parquet(path)
+      removeBoilerplate(composedLines(b), bp)
+    }(sink)
 
   /** t16's df threshold and the planted global banner line. */
   val T16MinDf = 3

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{ArtifactCache, Closure, ConcurrentLeg, Linalg}
 import graft.sources.Tables
+import graft.streaming.MicroBatch
 
 /** The clustering data-plane operators (SURVEY §2.3/§2.4/§2.11) expressed
   * Spark-first over the embeddings fixture, with fixed deterministic
@@ -141,33 +142,34 @@ object Clustering {
     * nondeterministic tie order; here ties break toward the lower cluster
     * id (documented divergence, deterministic by construction).
     */
-  def c5PurityByLabel: Q = (s, dir) => {
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("n").desc, col("cluster"))
-    assigned(s, dir)
-      .groupBy(col("label"), col("cluster"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("rn", row_number().over(w))
+  def c5PurityByLabel: Q = (s, dir) =>
+    majorityRanked(s, dir)
       .filter(col("rn") === 1)
       .select(col("label"), col("cluster").as("top_cluster"),
         col("n").as("n_top"))
       .orderBy(col("label"))
-  }
 
   /** Purity total: Σ majority counts / N (Spark_MOPSO_Avg.scala:339-355).
     * N is derived in-plan as Σn over the full label×cluster histogram —
     * one job, no separate count() action.
     */
-  def c6Purity: Q = (s, dir) => {
+  def c6Purity: Q = (s, dir) =>
+    majorityRanked(s, dir)
+      .agg(round(
+        sum(when(col("rn") === 1, col("n")).otherwise(lit(0L))) /
+          sum(col("n")).cast("double"), 6).as("purity"))
+
+  /** The label × cluster histogram (label, cluster, n) c5 and c6 share,
+    * each label's clusters numbered `rn` by count, ties toward the lower
+    * cluster id: `rn = 1` is the label's majority cluster.
+    */
+  private def majorityRanked(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("label"))
       .orderBy(col("n").desc, col("cluster"))
     assigned(s, dir)
       .groupBy(col("label"), col("cluster"))
       .agg(count(lit(1)).as("n"))
       .withColumn("rn", row_number().over(w))
-      .agg(round(
-        sum(when(col("rn") === 1, col("n")).otherwise(lit(0L))) /
-          sum(col("n")).cast("double"), 6).as("purity"))
   }
 
   /** Inertia / WSSSE: Σ d² (E5, Spark_MOPSO_Avg.scala:1351-1364). */
@@ -771,14 +773,22 @@ object Clustering {
     * plumbing. Prices the steer's pruning trade in the build record.
     */
   private def cappedPairMassOf(pc: DataFrame,
-      planes: Seq[Array[Double]], numPlanes: Int, cap: Int): Long =
-    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
-        numPlanes, LshTables)).as(Seq("tbl", "bucket")))
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
+      planes: Seq[Array[Double]], numPlanes: Int, cap: Int,
+      numTables: Int = LshTables): Long =
+    bucketSizes(pc, planes, numPlanes, numTables)
       .agg(coalesce(sum((col("c") - lit(1L)) *
           least(col("c"), lit(cap.toLong))), lit(0L)).as("pairs"))
       .head().getLong(0)
+
+  /** Occupancy `c` of every (tbl, bucket) of `pc`'s features under a
+    * sign layout: the histogram every candidate-pair count reads.
+    */
+  private def bucketSizes(pc: DataFrame, planes: Seq[Array[Double]],
+      numPlanes: Int, numTables: Int): DataFrame =
+    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
+        numPlanes, numTables)).as(Seq("tbl", "bucket")))
+      .groupBy(col("tbl"), col("bucket"))
+      .agg(count(lit(1)).as("c"))
 
   /** Build-time layout steer (VERDICT r19 next-1): the certificate no
     * longer only refuses — it picks the layout. Walk the plane count
@@ -1073,14 +1083,8 @@ object Clustering {
   private[graft] def lshCappedCandidatePairCount(s: SparkSession,
       dir: String, numPlanes: Int, numTables: Int, cap: Int): Long = {
     val pc = assigned(s, dir).select(col("features"))
-    val planes = lshPlaneRows(s, dir, numPlanes, numTables)
-    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
-        numPlanes, numTables)).as(Seq("tbl", "bucket")))
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum((col("c") - lit(1L)) *
-          least(col("c"), lit(cap.toLong))), lit(0L)).as("pairs"))
-      .head().getLong(0)
+    cappedPairMassOf(pc, lshPlaneRows(s, dir, numPlanes, numTables),
+      numPlanes, cap, numTables)
   }
 
   /** Neighbor recall of a layout at DATA scale, from a deterministic
@@ -1168,11 +1172,8 @@ object Clustering {
   private[graft] def lshCandidatePairCount(s: SparkSession, dir: String,
       numPlanes: Int, numTables: Int): Long = {
     val pc = assigned(s, dir).select(col("features"))
-    val planes = lshPlaneRows(s, dir, numPlanes, numTables)
-    pc.select(posexplode(Linalg.signBucketsCol(col("features"), planes,
-        numPlanes, numTables)).as(Seq("tbl", "bucket")))
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("c"))
+    bucketSizes(pc, lshPlaneRows(s, dir, numPlanes, numTables), numPlanes,
+      numTables)
       .agg(coalesce(sum(col("c") * (col("c") - lit(1L))), lit(0L))
         .as("pairs"))
       .head().getLong(0)
@@ -1416,13 +1417,8 @@ object Clustering {
     * reaches the cap — byte-equal to the uncapped closure there;
     * [[s13bGraphClustersCapped]] pins the LIVE fan-out).
     */
-  def s13GraphClusters: Q = (s, dir) => {
-    val (graph, orphans) =
-      cappedGraphAt(s, dir, LshPlanes, LshTables, GraphBuildCap)
-    mutualComponents(Tables.labeledPoints(s, dir),
-      graph.select(col("xi"), col("rnk").as("rank"), col("yi")),
-      orphans = Some(orphans))
-  }
+  def s13GraphClusters: Q = (s, dir) =>
+    graphClustersAt(s, dir, LshPlanes, GraphBuildCap)
 
   /** s13b: the capped closure where the cap — and therefore the orphan
     * fan-out — is LIVE at verify scale ([[OracleGraphCap]]: 126 of the
@@ -1434,23 +1430,25 @@ object Clustering {
     * points cannot form mutual edges — resolves to the rep-inheritance
     * convention, hash-checked against an independent engine.
     */
-  def s13bGraphClustersCapped: Q = (s, dir) => {
-    val (graph, orphans) =
-      cappedGraphAt(s, dir, LshPlanes, LshTables, OracleGraphCap)
-    mutualComponents(Tables.labeledPoints(s, dir),
-      graph.select(col("xi"), col("rnk").as("rank"), col("yi")),
-      orphans = Some(orphans))
-  }
+  def s13bGraphClustersCapped: Q = (s, dir) =>
+    graphClustersAt(s, dir, LshPlanes, OracleGraphCap)
 
   /** The production face: [[s13GraphClusters]] over the auto-layout
     * capped graph; equals the pinned face at fixture size (spec).
     * ScaleBench's `s13_graph_clusters` decade row times THIS face.
     */
   private[graft] def s13GraphClustersAuto(s: SparkSession,
-      dir: String): DataFrame = {
-    val n = Tables.labeledPoints(s, dir).count()
+      dir: String): DataFrame =
+    graphClustersAt(s, dir,
+      lshPlanesFor(Tables.labeledPoints(s, dir).count()), GraphBuildCap)
+
+  /** The s13 body at a layout and cap: the capped graph with its orphan
+    * fan-out, resolved to mutual-kNN components (id, component).
+    */
+  private def graphClustersAt(s: SparkSession, dir: String,
+      numPlanes: Int, cap: Int): DataFrame = {
     val (graph, orphans) =
-      cappedGraphAt(s, dir, lshPlanesFor(n), LshTables, GraphBuildCap)
+      cappedGraphAt(s, dir, numPlanes, LshTables, cap)
     mutualComponents(Tables.labeledPoints(s, dir),
       graph.select(col("xi"), col("rnk").as("rank"), col("yi")),
       orphans = Some(orphans))
@@ -1466,6 +1464,17 @@ object Clustering {
     */
   val S14Mod = 8L
   val S14Res = 0L
+
+  /** Runs `f` and reports its wall clock in seconds to `phase` under
+    * `name`: the one phase timer of the s14 build.
+    */
+  private def timedPhase[A](phase: (String, Double) => Unit,
+      name: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val a = f
+    phase(name, (System.nanoTime() - t0) / 1e9)
+    a
+  }
 
   /** Graph-index frames over an arbitrary (id, features) corpus:
     * `planes` (pid, v) at the given layout, `points` (id, features,
@@ -1491,12 +1500,6 @@ object Clustering {
       signed0: Option[DataFrame] = None)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
-    def timedPhase[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      phase(name, (System.nanoTime() - t0) / 1e9)
-      a
-    }
     val planes = planes0.getOrElse(planeRowsOf(corpus, numPlanes, LshTables))
     // ONE persisted signed frame (r21, VERDICT r20 next-4): the chain,
     // the orphan leg, and the points export all read the corpus WITH
@@ -1538,13 +1541,13 @@ object Clustering {
       }
     }
     s.sparkContext.addSparkListener(chainListener)
-    try timedPhase("chain") { gmut.count() } // candidate chain + ranking
+    try timedPhase(phase, "chain") { gmut.count() } // candidate chain + ranking
     finally {
       org.apache.spark.sql.graft.Bridge.drainListenerBus(s.sparkContext)
       s.sparkContext.removeSparkListener(chainListener)
     }
     phase("chain_shuffle_write_gb", chainBytes.get / 1e9)
-    val comp = timedPhase("closure") { // mutual join + propagation
+    val comp = timedPhase(phase, "closure") { // mutual join + propagation
       mutualComponents(pc, gmut.drop("dist"), orphans = Some(orphans))
     }
     val r2 = gmut.groupBy(col("xi"))
@@ -1612,12 +1615,7 @@ object Clustering {
       forceOrder: Option[String] = None): Seq[(String, Double)] =
     ArtifactCache(key, "s14_store") {
     val phases = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    def timedPhase[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val a = f
-      phases += (name -> (System.nanoTime() - t0) / 1e9)
-      a
-    }
+    val record: (String, Double) => Unit = (n, t) => phases += (n -> t)
     // THRESHOLD-FIDELITY CERTIFICATE, now STEERING the build (round
     // 19's finding, round 20's close): the stored r2dist is the CAPPED
     // view's rank-2 distance, an upper bound on the truth. On
@@ -1678,7 +1676,7 @@ object Clustering {
     // (the steer's old per-call try/finally, hoisted with the caches)
     try {
     val (chosenPlanes, chosenCap, chosenOrder, cert) =
-      timedPhase("fidelity") {
+      timedPhase(record, "fidelity") {
         forceOrder match {
           case Some(ord) =>
             val cf = stitchFidelityProbe(s, pc0,
@@ -1688,7 +1686,7 @@ object Clustering {
             (numPlanes, cap, ord, cf)
           case None =>
             steerCertifiedLayout(s, corpus, numPlanes, cap,
-              phase = (n, t) => phases += (n -> t),
+              phase = record,
               pc = pc0, n = nCorpus,
               planesAt = planesAt, signedAt = signedAt)
         }
@@ -1701,12 +1699,12 @@ object Clustering {
       (if (chosenOrder == "hash") 1.0 else 0.0))
     val (planesDf, pointsDf, pc, gmut) =
       knnGraphIndexFrames(s, corpus, chosenPlanes, chosenCap,
-        phase = (n, t) => phases += (n -> t),
+        phase = record,
         hashOrder = chosenOrder == "hash",
         planes0 = Some(planesAt(chosenPlanes)),
         signed0 = Some(signedAt(chosenPlanes)))
     planesDf.coalesce(1).write.mode("overwrite").parquet(s"$path/planes")
-    timedPhase("points_write") {
+    timedPhase(record, "points_write") {
       pointsDf.write.mode("overwrite").parquet(s"$path/points")
     }
     locally {
@@ -2170,15 +2168,12 @@ object Clustering {
     * the per-bucket cap-th nid, and the feature rows filter against
     * the broadcast threshold table (the price of portability is that
     * one extra store scan per serve, never the default;
-    * PlanAuditSpec pins both faces windowless). `capped = false` forces
-    * the UNCAPPED plain explode — the parity-measurement face
-    * (`scale_s14cap_*.json`) and nothing else; it is exactly the plan
-    * that died on disk spill at x1000 (SCALE.md §r16→17).
+    * PlanAuditSpec pins both faces windowless).
     */
   private[graft] def graphStoreFrame(s: SparkSession, path: String,
-      useBucketed: Boolean = true, capped: Boolean = true): DataFrame = {
+      useBucketed: Boolean = true): DataFrame = {
     val loc = s"$path/points_bucketed"
-    if (useBucketed && capped && storePathExists(s, loc)) {
+    if (useBucketed && storePathExists(s, loc)) {
       val tbl = storeTableName(path)
       if (!s.catalog.tableExists(tbl))
         // r2dist: parquet resolves by name, so a pre-r18 bucketed dir
@@ -2194,24 +2189,21 @@ object Clustering {
       s.table(tbl)
     } else {
       val exploded = explodedStore(readPoints(s, path))
-      if (capped) {
-        val meta = readStoreMeta(s, path)
-        cappedServing(exploded, meta.map(_._1).getOrElse(GraphBuildCap),
-          order = meta.map(_._4).getOrElse("nid"))
-      } else exploded.drop("tier")
+      val meta = readStoreMeta(s, path)
+      cappedServing(exploded, meta.map(_._1).getOrElse(GraphBuildCap),
+        order = meta.map(_._4).getOrElse("nid"))
     }
   }
 
   private[graft] def assignFromGraphIndex(batch: DataFrame,
-      path: String, useBucketed: Boolean = true,
-      capped: Boolean = true): DataFrame = {
+      path: String, useBucketed: Boolean = true): DataFrame = {
     val s = batch.sparkSession
     // the argmin inherits the store's RAW label, then the stitch map
     // (if any) rewrites it to the canonical — so serving reflects
     // every append-time repair without a store rewrite
     applyComponentMap(s, path,
       assignFromGraphStore(batch, readPlanes(s, path),
-        graphStoreFrame(s, path, useBucketed, capped)))
+        graphStoreFrame(s, path, useBucketed)))
   }
 
   /** The serve core over an arbitrary EXPLODED store frame
@@ -2683,12 +2675,7 @@ object Clustering {
   def serveGraphAssignStream(vecs: DataFrame, path: String)(
       sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        sink(assignFromGraphIndex(batch.toDF(), path))
-      }
-      .start()
+    MicroBatch.serve(vecs)(assignFromGraphIndex(_, path))(sink)
 
   /** s14: graph-index serving, END TO END — build the two-table index
     * on the corpus MINUS the held-out ids (planes, pre-signed buckets,
@@ -2842,28 +2829,14 @@ object Clustering {
     paretoFront(fitnessPoints(s, dir), s).orderBy(col("id"))
 
   /** Upper bound for feeding the front to a GLOBAL (unpartitioned)
-    * window in c12/c13. Skylines of lightly-correlated 2-d data are
+    * window in c12. Skylines of lightly-correlated 2-d data are
     * near-logarithmic in n, so the bound is generous — but an adversarial
     * front (f1 strictly increasing while f2 strictly decreasing) is THE
     * whole dataset, and silently single-partitioning it would be the
-    * scale-killer WindowExec warns about. Failing loudly here turns that
-    * warning into a contract; past the bound the crowding/minmax pass
-    * belongs on a range-partitioned formulation with boundary exchange.
+    * scale-killer WindowExec warns about. Past the bound the crowding
+    * pass runs its range-partitioned formulation with boundary exchange.
     */
   val MaxGlobalWindowFront = 100000L
-
-  /** The persisted front, size-guarded for global-window consumers. The
-    * count is served from the cache `paretoFront` just populated — the
-    * guard costs no extra job.
-    */
-  private def guardedFront(s: SparkSession, dir: String): DataFrame = {
-    val f = paretoFront(fitnessPoints(s, dir), s)
-    val n = f.count()
-    require(n <= MaxGlobalWindowFront,
-      s"Pareto front has $n rows — beyond the global-window bound " +
-        s"($MaxGlobalWindowFront); use a range-partitioned crowding pass")
-    f
-  }
 
   /** Crowding distance over the front (M3, product formula of the Single/
     * Particle variants, MOPSO_Single.scala:994-1020): sort by f2, middle

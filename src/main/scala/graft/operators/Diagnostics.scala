@@ -19,9 +19,4 @@ object Diagnostics {
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("label")).as("n_labels"))
       .orderBy(col("pid"))
-
-  /** Base-info summary line set (counts per label). */
-  def labelHistogram(df: DataFrame): DataFrame =
-    df.groupBy(col("label")).agg(count(lit(1)).as("n"))
-      .orderBy(col("label"))
 }
