@@ -286,22 +286,6 @@ object ScaleBench {
     }
   }
 
-  /** The auto-IVF recall/cost curve at corpus scale (the s7 twin of the
-    * `connlsh` mode): growing nlist with √n keeps per-probe work
-    * √-scaled, but at FIXED nprobe = 1 the probed corpus fraction
-    * shrinks as 1/√n — whether recall survives is a measurement, not an
-    * assumption. This mode records, at the decade's derived nlist and
-    * from a ~100-query hash-sampled set (exact denominators O(s·n),
-    * computed ONCE per curve — the lshSampledRecall pattern), the
-    * recall over an nprobe grid for THREE query/index combinations:
-    * easy (corpus-sampled) queries on the oracle-convention index, HARD
-    * (cell-radius-displaced, [[graft.functions.Similarity.hardQueries]])
-    * queries on the same index, and the hard queries on the TRAINED
-    * (seeded k-means) quantizer — the curve the engine's recall-targeted
-    * [[graft.functions.Similarity.ivfProbesFor]] rule is derived from.
-    * Also rides the s4/d7 watch metrics (uncapped vs capped candidate
-    * mass) and the capped d7 groups end-to-end time.
-    */
   /** The embedding-family rows `ivfauto` and `layout` both record: the
     * vector count, the derived nlist, and s4/d7's fixed 8-plane
     * near-dup buckets (layout fixed by the cosine threshold's recall
@@ -321,6 +305,22 @@ object ScaleBench {
         Similarity.nearDupCandidatePairsCapped(spark, work).toDouble)
   }
 
+  /** The auto-IVF recall/cost curve at corpus scale (the s7 twin of the
+    * `connlsh` mode): growing nlist with √n keeps per-probe work
+    * √-scaled, but at FIXED nprobe = 1 the probed corpus fraction
+    * shrinks as 1/√n — whether recall survives is a measurement, not an
+    * assumption. This mode records, at the decade's derived nlist and
+    * from a ~100-query hash-sampled set (exact denominators O(s·n),
+    * computed ONCE per curve — the lshSampledRecall pattern), the
+    * recall over an nprobe grid for THREE query/index combinations:
+    * easy (corpus-sampled) queries on the oracle-convention index, HARD
+    * (cell-radius-displaced, [[graft.functions.Similarity.hardQueries]])
+    * queries on the same index, and the hard queries on the TRAINED
+    * (seeded k-means) quantizer — the curve the engine's recall-targeted
+    * [[graft.functions.Similarity.ivfProbesFor]] rule is derived from.
+    * Also rides the s4/d7 watch metrics (uncapped vs capped candidate
+    * mass) and the capped d7 groups end-to-end time.
+    */
   private def ivfAutoCompare(spark: SparkSession,
       work: String): Seq[(String, Double)] = {
     import graft.functions.{Dedup, Similarity}

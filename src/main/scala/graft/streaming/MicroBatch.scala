@@ -9,14 +9,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object MicroBatch {
 
-  /** Starts `stream` and hands `sink` each micro-batch as `serve` maps
+  /** Starts `stream` and hands `sink` each micro-batch as `plan` maps
     * it. The typed lambda picks the Scala `foreachBatch` overload.
     */
-  def serve(stream: DataFrame)(serve: DataFrame => DataFrame)(
+  def serve(stream: DataFrame)(plan: DataFrame => DataFrame)(
       sink: DataFrame => Unit): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        sink(serve(batch.toDF()))
+        sink(plan(batch.toDF()))
       }
       .start()
 }
