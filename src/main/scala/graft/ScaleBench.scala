@@ -128,7 +128,7 @@ object ScaleBench {
     // the production graph build alone
     "s12_knn_graph",
     // round-14: mutual-kNN components — the s12 build + one graph-sized
-    // self-join + the d6 propagation loop; the delta over s12's row
+    // self-join + the d6 closure; the delta over s12's row
     // prices the clustering itself
     "s13_graph_clusters",
     // round-14: the semantic-component budget cut — s13's build + one

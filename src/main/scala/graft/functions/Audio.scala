@@ -374,7 +374,7 @@ object Audio {
     *     bucket instead of O(n²) — at x100 the replicated-container
     *     buckets that hang mm10 emit linearly here.
     *  3. TRANSITIVE CLOSURE — verified pairs feed
-    *     [[graft.core.Closure.components]] (min-label propagation), so
+    *     [[graft.core.Closure.components]] (connected components), so
     *     every doc keeps the group its full clique would give it: within a
     *     bucket-class all pairs verify (cos ≈ 0.999), hence the star
     *     topology preserves exactly the uncapped groups.

@@ -384,19 +384,6 @@ object Curation {
     tokenBudgetSelect(Tables.documents(s, dir), SelectParts)
       .orderBy(col("doc_id"))
 
-  /** The distributed budget-selection transform over any (doc_id, text)
-    * frame, under an explicit `budget` (callers state theirs; the
-    * fixture-scale [[SelectBudget]] is only the default). Result is
-    * invariant to `numParts` (the range boundaries move, but offset +
-    * within-partition prefix is the same global prefix sum — spec'd);
-    * empty documents are excluded before scoring — the gate is on the
-    * text trimmed of the FULL `\s` class ([[nonBlankCol]]), not the
-    * token array, because `split(trim(''), '\s+')` is `[""]` (size 1)
-    * in both Spark and DuckDB: a size guard never fires, and a
-    * fully-span-removed p10 representative (or a tabs/newlines-only
-    * document — ADVICE r12) would otherwise enter as a
-    * phantom-token doc with the maximum diversity score (spec'd).
-    */
   /** The p8 diversity scoring pass over any (doc_id, text) frame:
     * (doc_id, n_tokens, score) with blank docs excluded — shared by the
     * global (p8) and per-cluster (p12) budget selectors.
@@ -411,6 +398,19 @@ object Curation {
       .select(col("doc_id"), col("n_tokens"),
         expr("n_distinct * 1000 div n_tokens").as("score"))
 
+  /** The distributed budget-selection transform over any (doc_id, text)
+    * frame, under an explicit `budget` (callers state theirs; the
+    * fixture-scale [[SelectBudget]] is only the default). Result is
+    * invariant to `numParts` (the range boundaries move, but offset +
+    * within-partition prefix is the same global prefix sum — spec'd);
+    * empty documents are excluded before scoring — the gate is on the
+    * text trimmed of the FULL `\s` class ([[nonBlankCol]]), not the
+    * token array, because `split(trim(''), '\s+')` is `[""]` (size 1)
+    * in both Spark and DuckDB: a size guard never fires, and a
+    * fully-span-removed p10 representative (or a tabs/newlines-only
+    * document — ADVICE r12) would otherwise enter as a
+    * phantom-token doc with the maximum diversity score (spec'd).
+    */
   def tokenBudgetSelect(docs: DataFrame, numParts: Int,
       budget: Long = SelectBudget): DataFrame =
     prefixScored(docs, numParts)
@@ -519,19 +519,6 @@ object Curation {
       SelectParts, P14Budget)
       .orderBy(col("doc_id"))
 
-  /** p4: offset-quantized contiguous sequence packing — the shard's token
-    * stream (docs in doc_id order) is cut at fixed [[PackBudget]] offsets
-    * and each document belongs to the sequence containing its FIRST
-    * token: seq = floor(tokens-before / budget). A boundary-crossing
-    * document therefore overruns its sequence AND its overrun is charged
-    * against the next sequence's span (unlike a reset-on-overrun greedy
-    * packer, which would restart the count at each overrun — offset
-    * quantization is chosen precisely because it needs no sequential
-    * reset state, just a cumulative sum). The window runs per
-    * [[PackShard]]-wide doc_id shard: at scale the window key is the
-    * shard id, every shard packs independently in parallel, and no
-    * global sort ever happens.
-    */
   /** p12: CLUSTER-BALANCED token budgeting — domain induction by
     * embedding k-means plus a per-cluster p8 budget cut. A source-label
     * mix (p3) can only balance what the corpus already labels; when the
@@ -703,6 +690,19 @@ object Curation {
         col("tokens_before"))
   }
 
+  /** p4: offset-quantized contiguous sequence packing — the shard's token
+    * stream (docs in doc_id order) is cut at fixed [[PackBudget]] offsets
+    * and each document belongs to the sequence containing its FIRST
+    * token: seq = floor(tokens-before / budget). A boundary-crossing
+    * document therefore overruns its sequence AND its overrun is charged
+    * against the next sequence's span (unlike a reset-on-overrun greedy
+    * packer, which would restart the count at each overrun — offset
+    * quantization is chosen precisely because it needs no sequential
+    * reset state, just a cumulative sum). The window runs per
+    * [[PackShard]]-wide doc_id shard: at scale the window key is the
+    * shard id, every shard packs independently in parallel, and no
+    * global sort ever happens.
+    */
   def p4SeqPacking: Q = (s, dir) =>
     seqPacking(Tables.documents(s, dir)).orderBy(col("shard"), col("seq"))
 
@@ -727,9 +727,6 @@ object Curation {
 
   private val hkSql = "('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT"
 
-  /** Shared by p5 and its Bloom-prefilter twin p5b — identical output is
-    * the twin's contract.
-    */
   /** Shared eval/train distinct-gram CTE prefix (t → g → ev/tr) — the
     * SQL twin of [[distinctGrams]] split at [[EvalDocs]], reused by the
     * p5/p5b and p5c oracles.
@@ -749,6 +746,9 @@ object Curation {
        |  WHERE doc_id >= $EvalDocs)""".stripMargin
   }
 
+  /** Shared by p5 and its Bloom-prefilter twin p5b — identical output is
+    * the twin's contract.
+    */
   private val p5OracleSql: String =
     s"""WITH $gramCtes
        |SELECT train_doc, eval_doc, count(*) AS n_shared

@@ -327,7 +327,7 @@ object Dedup {
     bucketedPairs(bandRows(s, dir)).orderBy(col("doc_a"), col("doc_b"))
 
   /** Banded signature rows (doc_id, band, key). */
-  private def bandRows(s: SparkSession, dir: String): DataFrame =
+  private[graft] def bandRows(s: SparkSession, dir: String): DataFrame =
     bandRowsOf(minhashSigs(s, dir))
 
   private def bandRowsOf(sigs: DataFrame,
@@ -434,13 +434,13 @@ object Dedup {
       .select(col("p.doc_a"), col("p.doc_b")).distinct()
   }
 
-  /** First-round labels for [[Closure.components]], read straight off the
+  /** Head-start labels for [[Closure.components]], read straight off the
     * bucket arrays: every doc in a multi-doc bucket is directly connected
     * to the bucket minimum (clique members pair with it, overflow docs
-    * star to it), so propagation round 1 from identity labels lands on
-    * exactly `min(own id, min bucket-rep over the doc's buckets)` — this
-    * aggregate. Computing it here costs one small shuffle of (doc, rep)
-    * rows instead of the full edge-list join round it replaces.
+    * star to it), so `min(own id, min bucket-rep over the doc's buckets)`
+    * — this aggregate, one small shuffle of (doc, rep) rows — is reachable
+    * from the doc. The closure takes each row as one more edge, a direct
+    * link from a doc that bridges buckets to the least of their minimums.
     */
   private[graft] def repInitFromBuckets(buckets: DataFrame): DataFrame =
     buckets
@@ -454,7 +454,7 @@ object Dedup {
     * recovers exactly the groups the uncapped cliques would produce
     * (see [[bucketedPairs]]); the DuckDB oracle recomputes reachability
     * with a recursive CTE — an independent algorithm cross-check of the
-    * propagation loop.
+    * closure's star rounds.
     */
   def d6DedupGroups: Q = (s, dir) =>
     dedupGroupsFromBands(bandRows(s, dir), Tables.documents(s, dir))
@@ -541,17 +541,6 @@ object Dedup {
       .select(col("doc_id").as("vec_id"), col("group_id"))
       .orderBy(col("vec_id"))
 
-  /** p1: the end-to-end corpus-curation query a training-data run
-    * actually executes over the document table, in production order —
-    * quality gates FIRST (token count, stopword ratio, language-ID), then
-    * near-dup groups resolved among the survivors only, keeping each
-    * group's representative (min doc_id) tagged with its duplicate count.
-    * Filtering first shrinks the signature/LSH/propagation input (at
-    * 100 TB most of the corpus dies at the cheap per-row gates) and is
-    * semantically the right order: junk documents shouldn't vote on which
-    * duplicate survives. One plan composes the t1/t2/d2/d3/d6 operator
-    * families end to end.
-    */
   /** The p1 quality + language gate producing the curated (doc_id,
     * text, n_tokens, stop_ratio) frame — shared by p1 and the p10
     * pipeline composition (one definition, one oracle fragment).
@@ -585,8 +574,8 @@ object Dedup {
     * d6, d12, p1/p10/p11 and the d11 build (which shares ONE
     * signature/banding pass between its band table and this closure,
     * r21). The bucket arrays feed two consumers (candidate pairs and
-    * the first-round labels), so they stay persisted for the span of
-    * the propagation loop and the banding scan runs once. Every caller
+    * the head-start labels), so they stay persisted for the span of
+    * the closure and the banding scan runs once. Every caller
     * bands `curated` itself, so every pair endpoint is a `curated` doc.
     */
   private[graft] def dedupGroupsFromBands(bands: DataFrame,
@@ -597,6 +586,17 @@ object Dedup {
     finally buckets.unpersist()
   }
 
+  /** p1: the end-to-end corpus-curation query a training-data run
+    * actually executes over the document table, in production order —
+    * quality gates FIRST (token count, stopword ratio, language-ID), then
+    * near-dup groups resolved among the survivors only, keeping each
+    * group's representative (min doc_id) tagged with its duplicate count.
+    * Filtering first shrinks the signature/LSH/propagation input (at
+    * 100 TB most of the corpus dies at the cheap per-row gates) and is
+    * semantically the right order: junk documents shouldn't vote on which
+    * duplicate survives. One plan composes the t1/t2/d2/d3/d6 operator
+    * families end to end.
+    */
   def p1CorpusCuration: Q = (s, dir) => {
     // persisted: consumed by three separate actions (the propagation
     // seed, the signature build, the final output join) — without the
@@ -1228,7 +1228,7 @@ object Dedup {
          |FROM documents d LEFT JOIN mg ON mg.delta_id = d.doc_id
          |WHERE d.doc_id % $DeltaMod = $DeltaResidue
          |ORDER BY d.doc_id""".stripMargin,
-    // independent algorithm cross-check of the propagation loop: exact
+    // independent algorithm cross-check of the closure's rounds: exact
     // reachability via a recursive CTE, group = min reachable doc_id
     "d6_dedup_groups" ->
       s"""WITH RECURSIVE $sigSql,

@@ -388,10 +388,6 @@ object Multimodal {
     */
   final case class BmpImage(width: Int, height: Int, rgb: Array[Byte])
 
-  /** REAL pixel decode for uncompressed 24-bit BMPs (BI_RGB, INFO or
-    * CORE DIB header). Pure byte arithmetic — no codec library. Returns
-    * None for other formats/bit depths/compressions or truncated data.
-    */
   /** Decode guard: no legitimate payload here exceeds 64k on a side, and
     * the cap keeps every stride/size product inside exact Int range —
     * crafted headers with huge declared dims must fail CLEANLY (None),
@@ -399,6 +395,10 @@ object Multimodal {
     */
   private val MaxDecodeDim = 65535
 
+  /** REAL pixel decode for uncompressed 24-bit BMPs (BI_RGB, INFO or
+    * CORE DIB header). Pure byte arithmetic — no codec library. Returns
+    * None for other formats/bit depths/compressions or truncated data.
+    */
   def decodeBmpPixels(b: Array[Byte]): Option[BmpImage] = {
     if (b.length < 26 || !(b(0) == 'B' && b(1) == 'M')) return None
     val pixOff = leI32(b, 10)
@@ -897,16 +897,6 @@ object Multimodal {
     */
   val ResizeBox = 8
 
-  /** mm4: REAL pixel round trip — per document, build a 24-bit BMP whose
-    * pixels follow an integer gradient of (x, y, doc_id), then
-    * decode → nearest-neighbor resize → re-encode → decode again through
-    * the real byte-level codec ([[resizePayloads]]), emitting the resized
-    * dims, byte count, and the decoded-output pixel checksum. The oracle
-    * predicts every emitted value — including the checksum of all resized
-    * pixels — from integer arithmetic alone (the same floor maps
-    * [[resizeBmp]] uses), so builder, decoder, resizer, and encoder would
-    * all have to be wrong in compensating ways to pass falsely.
-    */
   /** The shared gradient-BMP fixture behind mm4/mm5/mm6: one REAL 24-bit
     * BMP per document, dims `(4 + id%13, 4 + id%11)`, pixels an integer
     * gradient of (x, y, doc_id) — every byte predictable by arithmetic.
@@ -923,6 +913,16 @@ object Multimodal {
     }).toDF("id", "payload")
   }
 
+  /** mm4: REAL pixel round trip — per document, build a 24-bit BMP whose
+    * pixels follow an integer gradient of (x, y, doc_id), then
+    * decode → nearest-neighbor resize → re-encode → decode again through
+    * the real byte-level codec ([[resizePayloads]]), emitting the resized
+    * dims, byte count, and the decoded-output pixel checksum. The oracle
+    * predicts every emitted value — including the checksum of all resized
+    * pixels — from integer arithmetic alone (the same floor maps
+    * [[resizeBmp]] uses), so builder, decoder, resizer, and encoder would
+    * all have to be wrong in compensating ways to pass falsely.
+    */
   def mm4ResizeBmp: Q = (s, dir) => {
     val media = gradientMedia(s, dir)
     resizePayloads(media, s, ResizeBox)

@@ -698,18 +698,6 @@ object Similarity {
       .toDF("cell", "cv")
   }
 
-  /** The auto-IVF top-5 ranking for an ARBITRARY query frame
-    * (vec_id, features) — queries need not live in the corpus. Emits
-    * (qid, rank, nid) — top-5 per query over the union of the query's
-    * `nprobe` nearest cells' members against the chosen quantizer
-    * ([[coarseCentroids]]). Assignment and probing stay NARROW through
-    * the n·nlist candidate rows (see the inline note); the per-query
-    * cell ranking rides one sort_array over the nlist-sized
-    * collect_list — bounded by √(n/5) elements per query row. A corpus
-    * query is excluded from its own result (qid ≠ nid); out-of-corpus
-    * queries use a disjoint id range ([[HardQueryIdOffset]]) so the
-    * exclusion never fires for them.
-    */
   /** Nearest cells of `cents` per vector of `in` — (idAs, cell, vecAs)
     * rows, one per (vector, probed cell): min (assignment, np = 1) /
     * sorted prefix (probing) over struct(dist, cell) — a total order
@@ -808,6 +796,18 @@ object Similarity {
   def ivfProbesFiltered(nlist: Int): Int =
     math.min(nlist, 2 * ivfProbesFor(nlist))
 
+  /** The auto-IVF top-5 ranking for an ARBITRARY query frame
+    * (vec_id, features) — queries need not live in the corpus. Emits
+    * (qid, rank, nid) — top-5 per query over the union of the query's
+    * `nprobe` nearest cells' members against the chosen quantizer
+    * ([[coarseCentroids]]). Assignment and probing stay NARROW through
+    * the n·nlist candidate rows (see the inline note); the per-query
+    * cell ranking rides one sort_array over the nlist-sized
+    * collect_list — bounded by √(n/5) elements per query row. A corpus
+    * query is excluded from its own result (qid ≠ nid); out-of-corpus
+    * queries use a disjoint id range ([[HardQueryIdOffset]]) so the
+    * exclusion never fires for them.
+    */
   private[graft] def annIvfAutoRankedQueries(s: SparkSession, dir: String,
       nprobe: Int, queries: DataFrame,
       trained: Boolean = false): DataFrame = {
@@ -887,16 +887,6 @@ object Similarity {
   private[graft] def querySampleFilter(step: Long): Column =
     pmod(xxhash64(col("vec_id"), lit("qsample")), lit(step)) === lit(0L)
 
-  /** HARD (out-of-corpus) query vectors: a hash-sampled corpus subset,
-    * each vector displaced by a deterministic hash-derived per-dimension
-    * uniform whose total magnitude ≈ [[HardDisplacementCellRadii]] ×
-    * the measured mean cell radius. Corpus-sampled queries sit at cell
-    * members' own positions — the easiest possible case for an IVF
-    * probe — whereas boundary-displaced queries are what a serving
-    * workload looks like. No RNG: xxhash64(vec_id, dim, salt) is the
-    * generator (the Zipf-corpus discipline), so every engine replays
-    * the same query set.
-    */
   /** Mean cell radius of a quantizer over the hash-sampled subset:
     * O(s·nlist), one broadcast join. The TRAINED quantizer's radius is
     * the corpus's actual density-region scale; the first-vectors
@@ -916,6 +906,16 @@ object Similarity {
       .agg(avg(col("r"))).head().getDouble(0)
   }
 
+  /** HARD (out-of-corpus) query vectors: a hash-sampled corpus subset,
+    * each vector displaced by a deterministic hash-derived per-dimension
+    * uniform whose total magnitude ≈ [[HardDisplacementCellRadii]] ×
+    * the measured mean cell radius. Corpus-sampled queries sit at cell
+    * members' own positions — the easiest possible case for an IVF
+    * probe — whereas boundary-displaced queries are what a serving
+    * workload looks like. No RNG: xxhash64(vec_id, dim, salt) is the
+    * generator (the Zipf-corpus discipline), so every engine replays
+    * the same query set.
+    */
   private[graft] def hardQueries(s: SparkSession, dir: String,
       step: Long): DataFrame = {
     val e = Tables.embeddings(s, dir)
@@ -1029,31 +1029,6 @@ object Similarity {
     rows.toDF("m", "j", "cv")
   }
 
-  /** IVFADC (Jégou et al. 2011 §IV): the s7 coarse quantizer COMPOSED
-    * with residual PQ — the standard production ANN shape at corpus
-    * scale. Vectors are stored as (cell, M codes of the residual
-    * v − c_cell); a query ranks cells once ([[cellRanked]], nprobe
-    * prefix), builds one ADC lookup table PER PROBED CELL from its own
-    * residual against that cell (q − c_cell), and scores ONLY the
-    * cells' members — the candidate join rides the cell id, so the
-    * IVF pruning and the 32× code compression compose: per query,
-    * (nprobe/nlist)·n candidates at M lookups + 7 adds each, never a
-    * raw vector until the optional exact rerank of the shortlist.
-    *
-    * What residual encoding buys DEPENDS on the corpus's cluster
-    * structure, and the engine measures rather than assumes it: on the
-    * near-uniform fixture, cells are weak (within-cell spread ≈ the
-    * data range), residual codewords rank no better than flat ones,
-    * and recall composes as pruning-ceiling × shortlist-quality
-    * (PqSpec pins the structural law: reranked IVFADC never exceeds
-    * exact ranking over the probed cells). On clustered corpora —
-    * the scaled decade fixtures — residual codewords only span
-    * within-cell spread and the composition pays (scale_pq.json).
-    *
-    * Trained everywhere (coarse + residual codebooks, seeded + memoized)
-    * — the stochastic-but-seeded family: spec-pinned, decade-measured,
-    * no DuckDB oracle (the oracle-checked faces are s7 and s8).
-    */
   /** The composed index REDUCED TO THREE TABLES — (centroids(cell, cv),
     * codebook(m, j, cv), codes(nid, cell, codes)) — the persistable
     * whole of IVFADC state: everything the serving plan needs except
@@ -1183,6 +1158,31 @@ object Similarity {
     Tables.embeddings(s, dir)
       .select(col("vec_id").as("nid"), col("features").as("nv"))
 
+  /** IVFADC (Jégou et al. 2011 §IV): the s7 coarse quantizer COMPOSED
+    * with residual PQ — the standard production ANN shape at corpus
+    * scale. Vectors are stored as (cell, M codes of the residual
+    * v − c_cell); a query ranks cells once ([[cellRanked]], nprobe
+    * prefix), builds one ADC lookup table PER PROBED CELL from its own
+    * residual against that cell (q − c_cell), and scores ONLY the
+    * cells' members — the candidate join rides the cell id, so the
+    * IVF pruning and the 32× code compression compose: per query,
+    * (nprobe/nlist)·n candidates at M lookups + 7 adds each, never a
+    * raw vector until the optional exact rerank of the shortlist.
+    *
+    * What residual encoding buys DEPENDS on the corpus's cluster
+    * structure, and the engine measures rather than assumes it: on the
+    * near-uniform fixture, cells are weak (within-cell spread ≈ the
+    * data range), residual codewords rank no better than flat ones,
+    * and recall composes as pruning-ceiling × shortlist-quality
+    * (PqSpec pins the structural law: reranked IVFADC never exceeds
+    * exact ranking over the probed cells). On clustered corpora —
+    * the scaled decade fixtures — residual codewords only span
+    * within-cell spread and the composition pays (scale_pq.json).
+    *
+    * Trained everywhere (coarse + residual codebooks, seeded + memoized)
+    * — the stochastic-but-seeded family: spec-pinned, decade-measured,
+    * no DuckDB oracle (the oracle-checked faces are s7 and s8).
+    */
   private[graft] def pqIvfAdcRanked(s: SparkSession, dir: String,
       queries: DataFrame, nprobe: Int, rerank: Int = 0): DataFrame = {
     val (cents, cbR, codes) = ivfAdcIndexFrames(s, dir)
@@ -1512,6 +1512,11 @@ object Similarity {
       .select(col("qid"),
         transform(col("es"), e => e.getField("pd")).as("lut"))
 
+  /** Codebook dispatch shared by [[pqRankedQueries]] and the specs. */
+  private[graft] def pqCodebookOf(s: SparkSession, dir: String,
+      trained: Boolean): DataFrame =
+    if (trained) pqCodebookTrained(s, dir) else pqCodebook(s, dir)
+
   /** The parameterized PQ ranking behind [[s8AnnPq]] (first-vectors
     * codebook, no rerank — the SQL-replayable face) and the measured
     * production variants: `trained` swaps in the k-means codebook;
@@ -1524,11 +1529,6 @@ object Similarity {
     * Returns (qid, rank, nid, score) — score is the rounded ADC (or
     * exact rerank distance when reranking).
     */
-  /** Codebook dispatch shared by [[pqRankedQueries]] and the specs. */
-  private[graft] def pqCodebookOf(s: SparkSession, dir: String,
-      trained: Boolean): DataFrame =
-    if (trained) pqCodebookTrained(s, dir) else pqCodebook(s, dir)
-
   private[graft] def pqRankedQueries(s: SparkSession, dir: String,
       queries: DataFrame, trained: Boolean = false,
       rerank: Int = 0): DataFrame = {

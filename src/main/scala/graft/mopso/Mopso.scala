@@ -1,9 +1,6 @@
 package graft.mopso
 
-import java.util.concurrent.TimeoutException
-
-import scala.util.{Random, Try}
-import scala.util.control.NonFatal
+import scala.util.Random
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,8 +96,9 @@ object Mopso {
       if (cfg0.numPartitions > 0) cfg0
       else cfg0.copy(numPartitions = MopsoConfig.partitionsFor(total))
 
-    withKMeansLeg(spark, base.select(col("features")), k, cfg.kmeansIter,
-      seed) { kmeansCenters =>
+    ConcurrentLeg(spark, "mopso-kmeans")(Init.kmeansCenters(
+        base.select(col("features")), k, cfg.kmeansIter, seed)) {
+      kmeansCenters =>
       val partitioned = cfg.partitioning match {
         case PartRandom => base.repartition(cfg.numPartitions)
         case PartByLabel => base.repartition(cfg.numPartitions, col("label"))
@@ -261,27 +259,6 @@ object Mopso {
     }
     InputProfile(parts.flatMap(_._1).distinct.length, parts.map(_._2).sum, f)
   }
-
-  /** Runs `body` beside the K-Means baseline on a [[ConcurrentLeg]];
-    * `body` joins the leg through the function it is handed. A failing
-    * `body` first lets the leg finish, bounded by the leg's timeout: a
-    * K-Means cancelled mid-fit leaves its caches persisted, and a map-stage
-    * job of its SQL part can start after the cancellation and outlive the
-    * run (Spark turns away the jobs of a cancelled group only when they
-    * are result jobs). A timed-out join propagates at once.
-    */
-  private def withKMeansLeg[A](spark: SparkSession, features: DataFrame,
-      k: Int, maxIter: Int, seed: Long)(
-      body: (() => Array[Array[Double]]) => A): A =
-    ConcurrentLeg(spark, "mopso-kmeans")(
-      Init.kmeansCenters(features, k, maxIter, seed)) { kmeans =>
-      try body(kmeans)
-      catch {
-        case NonFatal(e) if !e.isInstanceOf[TimeoutException] =>
-          Try(kmeans())
-          throw e
-      }
-    }
 
   /** Purity = Σ_label max_cluster count / N (E1). */
   private def purityOf(hist: Map[(Int, Int), Long], total: Long): Double = {

@@ -930,18 +930,6 @@ object Clustering {
     cappedGraphWithOrphans(pc, planes, numPlanes, numTables, cap,
       xiFilter, hashOrder, signed)._1
 
-  /** The capped candidate chain plus its ORPHAN set — the ids capped
-    * out of every table's candidate prefix. An orphan receives no
-    * incoming edges at all, so the mutuality filter would leave it a
-    * singleton regardless of its true neighborhood; the s13 faces fan
-    * each orphan out to its rank-1 neighbor's component instead
-    * ([[mutualComponents]]'s `orphans` leg — the dedup-first
-    * rep→member convention expressed in graph terms). The orphan leg
-    * rides its own SLIM lineage (id, tbl, bucket — one extra signing
-    * scan and a 24-byte-row window) so the feature-carrying candidate
-    * frame is never shuffled twice; at a saturating cap the orphan set
-    * is empty by construction, which is the fixed point the specs pin.
-    */
   /** The HASH-ordered capped-prefix key (round 20): a golden-ratio
     * multiplicative hash of the id — ((id mod 2³¹)·2654435761) mod 2³¹
     * — pure integer arithmetic with no 64-bit overflow, so DuckDB
@@ -975,6 +963,18 @@ object Clustering {
     s"((((($id % 2147483648) + 2147483648) % 2147483648)" +
       s" * 2654435761) % 2147483648)"
 
+  /** The capped candidate chain plus its ORPHAN set — the ids capped
+    * out of every table's candidate prefix. An orphan receives no
+    * incoming edges at all, so the mutuality filter would leave it a
+    * singleton regardless of its true neighborhood; the s13 faces fan
+    * each orphan out to its rank-1 neighbor's component instead
+    * ([[mutualComponents]]'s `orphans` leg — the dedup-first
+    * rep→member convention expressed in graph terms). The orphan leg
+    * rides its own SLIM lineage (id, tbl, bucket — one extra signing
+    * scan and a 24-byte-row window) so the feature-carrying candidate
+    * frame is never shuffled twice; at a saturating cap the orphan set
+    * is empty by construction, which is the fixed point the specs pin.
+    */
   private[graft] def cappedGraphWithOrphans(pc: DataFrame,
       planes: Seq[Array[Double]], numPlanes: Int, numTables: Int,
       cap: Int, xiFilter: Option[Column] = None,
@@ -1387,8 +1387,8 @@ object Clustering {
           .select(col("xi").as("o_id"), col("yi").as("rep"))
           .localCheckpoint(eager = true)
         g.unpersist()
-        // comp is a checkpointed frame (the closure materializes per
-        // round), so its two consumers here never re-run the closure
+        // the closure returns comp materialized and persisted, so its
+        // two consumers here never re-run the closure
         comp.join(rep, col("id") === col("o_id"), "left")
           .join(comp.select(col("id").as("rep_id"),
               col("component").as("rep_component")),
@@ -1408,8 +1408,8 @@ object Clustering {
     * themselves. Scale shape: the graph build is s12's (O(n·L)
     * exchange), mutuality is one self-join of an O(n·m) frame on
     * (xi, yi) — a hash shuffle of graph-sized, not corpus-squared,
-    * rows — and the closure is the d6 propagation loop (shuffled once
-    * on dst, label side only per round). The DuckDB oracle replays the
+    * rows — and the closure is d6's ([[Closure.components]], two
+    * shuffles of the edge list per round). The DuckDB oracle replays the
     * chain with a recursive CTE — an independent reachability
     * algorithm, the d6 cross-check convention. Since round 16 the graph
     * is the capped production chain at [[GraphBuildCap]] with the
@@ -1602,8 +1602,8 @@ object Clustering {
     * build. [[assignFromGraphIndex]] rides it by default; the plain
     * parquet stays as the portability fallback (bucketed reads need
     * the table registered in a catalog; plain parquet needs nothing).
-    */
-  /** Returns the build's per-phase wall clock — (chain, closure,
+    *
+    * Returns the build's per-phase wall clock — (chain, closure,
     * points_write, export_write, export_meta) — so the decade record
     * can name which phase carries `s14_index_build`'s residual
     * above-linear ratio (VERDICT r17 next-4); a memo hit returns the
@@ -1795,21 +1795,6 @@ object Clustering {
       }
     }
 
-  /** The CAPPED serving projection of an exploded store: per
-    * (tbl, bucket), the first `cap` tier-0 rows by the serving-prefix
-    * key — the BUILD's own candidate-prefix convention
-    * (`cappedGraphWithOrphans`' in-cap window: same keys, same order —
-    * [[hashPrefixKey]] for the production store since r20, nid for
-    * pre-r20 exports) — plus every tier-1 (appended) row uncapped. Serve candidates over this projection are EXACTLY
-    * the build's candidate set, so the self-serve fixed point survives
-    * capping by construction; appended rows are never capped out, so a
-    * later batch still inherits through an earlier append (the chain-
-    * growth contract). This is the round-17 fix for the x1000 serve
-    * DNF (VERDICT r16 next-1): the uncapped store side made the serve
-    * join's output ∝ batch-mass × store-mass per bucket — quadratic in
-    * duplication mass — and spilled the disk to death at x1000; the
-    * prefix bounds the store side at `cap` rows per (tbl, bucket).
-    */
   /** The serving-prefix ORDER key. `"hash"` — [[hashPrefixKey]] of the
     * nid, the PRODUCTION build's own candidate-prefix convention since
     * round 20 (unbiased bucket sample; see the key's note for the
@@ -1840,6 +1825,21 @@ object Clustering {
     if (df.columns.contains("r2dist")) df
     else df.withColumn("r2dist", lit(null).cast("double"))
 
+  /** The CAPPED serving projection of an exploded store: per
+    * (tbl, bucket), the first `cap` tier-0 rows by the serving-prefix
+    * key — the BUILD's own candidate-prefix convention
+    * (`cappedGraphWithOrphans`' in-cap window: same keys, same order —
+    * [[hashPrefixKey]] for the production store since r20, nid for
+    * pre-r20 exports) — plus every tier-1 (appended) row uncapped. Serve candidates over this projection are EXACTLY
+    * the build's candidate set, so the self-serve fixed point survives
+    * capping by construction; appended rows are never capped out, so a
+    * later batch still inherits through an earlier append (the chain-
+    * growth contract). This is the round-17 fix for the x1000 serve
+    * DNF (VERDICT r16 next-1): the uncapped store side made the serve
+    * join's output ∝ batch-mass × store-mass per bucket — quadratic in
+    * duplication mass — and spilled the disk to death at x1000; the
+    * prefix bounds the store side at `cap` rows per (tbl, bucket).
+    */
   private[graft] def cappedServing(exploded0: DataFrame, cap: Int,
       order: String = "nid"): DataFrame = {
     // threshold filter, not a row_number window (r17 export-cost fix):
@@ -1951,12 +1951,14 @@ object Clustering {
       Some((r.getInt(0), r.getLong(1), r.getLong(2), order))
     } else None
 
-  /** The store's append-time stitch map — (component, canon) rows for
-    * every component the stitch pass has merged into a smaller-id
-    * canonical ([[appendToGraphIndex]]); empty frame when no stitch
-    * has run (fresh build, or a store rebuilt since). GRAPH-sized:
-    * one row per merged component, never per point.
-    */
+  private def stagedMapCommitted(s: SparkSession, path: String): Boolean =
+    // either marker proves the staged job committed: Spark's own
+    // _SUCCESS, or the engine's explicit marker written right after
+    // the staged parquet job (ADVICE r20 — _SUCCESS alone disappears
+    // under mapreduce.fileoutputcommitter.marksuccessfuljobs=false)
+    storePathExists(s, s"$path/component_map_staged/_SUCCESS") ||
+      storePathExists(s, s"$path/component_map_staged/_graft_committed")
+
   /** The live component-map directory, staged-crash tolerant: the
     * committed map, or the COMPLETE staged map an append crash left
     * between its two swap renames. "Complete" is the parquet job's own
@@ -1966,14 +1968,6 @@ object Clustering {
     * staged dir would otherwise be read (or promoted) as if it were
     * the whole map, silently dropping that batch's merges.
     */
-  private def stagedMapCommitted(s: SparkSession, path: String): Boolean =
-    // either marker proves the staged job committed: Spark's own
-    // _SUCCESS, or the engine's explicit marker written right after
-    // the staged parquet job (ADVICE r20 — _SUCCESS alone disappears
-    // under mapreduce.fileoutputcommitter.marksuccessfuljobs=false)
-    storePathExists(s, s"$path/component_map_staged/_SUCCESS") ||
-      storePathExists(s, s"$path/component_map_staged/_graft_committed")
-
   private def componentMapDir(s: SparkSession,
       path: String): Option[String] =
     if (storePathExists(s, s"$path/component_map"))
@@ -2012,6 +2006,12 @@ object Clustering {
       }
     }
 
+  /** The store's append-time stitch map — (component, canon) rows for
+    * every component the stitch pass has merged into a smaller-id
+    * canonical ([[appendToGraphIndex]]); empty frame when no stitch
+    * has run (fresh build, or a store rebuilt since). GRAPH-sized:
+    * one row per merged component, never per point.
+    */
   private[graft] def readComponentMap(s: SparkSession,
       path: String): DataFrame =
     componentMapDir(s, path).map(s.read.parquet(_)).getOrElse {
@@ -2066,28 +2066,6 @@ object Clustering {
   def invalidateKnnGraphIndex(dir: String): Unit =
     ArtifactCache.invalidate(dir, "s14_store")
 
-  /** Assign a batch of (id, features) vectors against a persisted
-    * graph index: sign each vector with the FROZEN planes (a driver
-    * read — the planes table is layout-sized), bucket-join against the
-    * store's pre-computed sigs (exploded from parquet, no corpus
-    * re-signing), and take each vector's nearest candidate's component
-    * via a partial-aggregatable struct-min — no window, no exact pass.
-    * A vector colliding with a candidate in several tables contributes
-    * duplicate pairs; the argmin is unaffected, so no first-match
-    * dedup is spent on them. Vectors with NO bucket collision mint a
-    * new singleton component = their own id (null neighbor) — exactly
-    * what an ingest pipeline does with a genuinely novel point.
-    *
-    * The store side is the CAPPED serving projection (r17): at most
-    * `cap` base rows per (tbl, bucket) — the build's own candidate
-    * prefix — so serve output is ≤ batch-sigs × cap rows regardless of
-    * duplication mass (the uncapped join's batch × bucket-mass output
-    * spilled the disk to death at x1000, SCALE.md §r16→17). A probed
-    * bucket that is non-empty in the store always has a non-empty
-    * prefix, so capping never creates NEW singletons — it can only
-    * move an assignment to another near candidate's component; that
-    * delta is measured per decade (`scale_s14cap_*.json`).
-    */
   /** The store's frozen hyperplanes — a driver read; the planes table
     * is layout-sized (≤ ~13×8 rows at any corpus size).
     */
@@ -2195,6 +2173,28 @@ object Clustering {
     }
   }
 
+  /** Assign a batch of (id, features) vectors against a persisted
+    * graph index: sign each vector with the FROZEN planes (a driver
+    * read — the planes table is layout-sized), bucket-join against the
+    * store's pre-computed sigs (exploded from parquet, no corpus
+    * re-signing), and take each vector's nearest candidate's component
+    * via a partial-aggregatable struct-min — no window, no exact pass.
+    * A vector colliding with a candidate in several tables contributes
+    * duplicate pairs; the argmin is unaffected, so no first-match
+    * dedup is spent on them. Vectors with NO bucket collision mint a
+    * new singleton component = their own id (null neighbor) — exactly
+    * what an ingest pipeline does with a genuinely novel point.
+    *
+    * The store side is the CAPPED serving projection (r17): at most
+    * `cap` base rows per (tbl, bucket) — the build's own candidate
+    * prefix — so serve output is ≤ batch-sigs × cap rows regardless of
+    * duplication mass (the uncapped join's batch × bucket-mass output
+    * spilled the disk to death at x1000, SCALE.md §r16→17). A probed
+    * bucket that is non-empty in the store always has a non-empty
+    * prefix, so capping never creates NEW singletons — it can only
+    * move an assignment to another near candidate's component; that
+    * delta is measured per decade (`scale_s14cap_*.json`).
+    */
   private[graft] def assignFromGraphIndex(batch: DataFrame,
       path: String, useBucketed: Boolean = true): DataFrame = {
     val s = batch.sparkSession
@@ -3198,7 +3198,7 @@ object Clustering {
 
   /** The s13 closure SQL at an arbitrary cap: capped candidates →
     * mutual edges → recursive reachability (the independent closure
-    * algorithm vs Spark's min-label propagation) → orphan fan-out
+    * algorithm vs Spark's star rounds) → orphan fan-out
     * (ids capped out of EVERY prefix inherit their rank-1 neighbor's
     * component — the Spark side's `orphans` leg, replayed as one
     * HAVING + two joins).
@@ -3546,7 +3546,7 @@ object Clustering {
     "s12b_knn_graph_capped" -> cappedGraphSql(OracleGraphCap),
     // the s12 chain through the mutuality filter, then reachability as a
     // recursive CTE — an independent closure algorithm vs the Spark
-    // side's min-label propagation loop (the d6 cross-check convention),
+    // side's star rounds (the d6 cross-check convention),
     // plus the orphan fan-out (empty at this cap at fixture size)
     "s13_graph_clusters" -> cappedClustersSql(GraphBuildCap),
     // the closure at the live cap: 126 of 500 fixture points cap out of

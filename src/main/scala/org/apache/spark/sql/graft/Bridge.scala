@@ -24,32 +24,4 @@ object Bridge {
       timeoutMillis: Long = 10000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMillis)
     catch { case _: java.util.concurrent.TimeoutException => () }
-
-  /** Lineage truncation for iterative loops: persist the frame's
-    * INTERNAL (UnsafeRow) rows and wrap them in a fresh LogicalRDD leaf
-    * with DEFAULT statistics. This is what `Dataset.localCheckpoint`
-    * does minus two things the closure loop cannot afford:
-    *  - no origin-stats rewrite (Spark 4's `LogicalRDD.fromDataset`
-    *    pins the origin plan's size estimate, and a per-round join's
-    *    size-only estimate is a PRODUCT of its children — each round
-    *    then multiplies the previous round's pinned estimate until the
-    *    BigInteger digit count overflows; see the closure's note), and
-    *  - no InternalRow → external Row → InternalRow double conversion
-    *    (the old `df.rdd` + `createDataFrame` detour paid a full
-    *    per-field boxing pass and a RowEncoder pass per round — pure
-    *    serialization overhead at corpus-sized label frames).
-    * Rows are copied before caching (toRdd reuses row buffers), matching
-    * localCheckpoint's own contract. Returns the wrapped frame and the
-    * persisted RDD so the caller controls unpersist timing.
-    */
-  def cachedLineageCut(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val session = ds.sparkSession
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val plan = org.apache.spark.sql.execution.LogicalRDD(
-      ds.queryExecution.analyzed.output, rdd)(session)
-    (org.apache.spark.sql.classic.Dataset.ofRows(session, plan), rdd)
-  }
 }

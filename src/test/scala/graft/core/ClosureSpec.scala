@@ -8,14 +8,34 @@ import graft.functions.Dedup
 
 /** The connected-components closure: fixpoint against an independent
   * union-find, head-start labels, deep geometry within the round cap,
-  * the bucket entry point, and release of its persisted frames on a
-  * throw.
+  * the job counts of its rounds, the bucket entry point, and release of
+  * its persisted frames on a throw.
   */
 class ClosureSpec extends AnyFunSuite with SparkTestBase {
   import ClosureSpec.unionFind
 
   private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
+  /** The closure over `docs` and `edges` labels every doc with the minimum
+    * of its union-find component, one row per doc.
+    */
+  private def assertUnionFind(name: String, docs: Seq[Long],
+      edges: Seq[(Long, Long)],
+      init: Option[org.apache.spark.sql.DataFrame]): Unit = {
+    import spark.implicits._
+    val got = labels(Closure.components(docs.toDF("doc_id"),
+      edges.toDF("doc_a", "doc_b"), init))
+    val root = unionFind(edges.toSet)
+    // normalize union-find roots to the component MIN id
+    val minOfRoot = docs.groupBy(root).map {
+      case (r, members) => (r, members.min)
+    }
+    assert(got.size === docs.distinct.size, name)
+    docs.foreach { d =>
+      assert(got(d) === minOfRoot(root(d)), s"$name, node $d")
+    }
+  }
 
   test("bucket-rep init equals a propagation round: same groups, head start") {
     import spark.implicits._
@@ -59,8 +79,8 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
 
   test("a sequential-id chain deeper than the round cap converges") {
     import spark.implicits._
-    // one hop per round would need n − 1 > MaxRounds rounds; pointer
-    // jumping doubles the influence distance per round
+    // one hop per round would need n − 1 > MaxRounds rounds; star rounds
+    // need O(log n)
     val n = Closure.MaxRounds + 10L
     val docs = (0L until n).toDF("doc_id")
     val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
@@ -69,16 +89,14 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
     assert(groups.values.forall(_ === 0L), "whole chain is one component")
   }
 
-  test("compression escalation finishes a RANDOM-id long path (the " +
-      "indep-geometry wall) within the round cap") {
+  test("star rounds close a 4096-node RANDOM-id path within the round cap") {
     import spark.implicits._
-    // the sequential-id chain above flatters the single shortcut hop:
-    // copy ids ascend along ε-clone chains, so each node's neighbor-min
-    // already points far back. Honest geometry has random ids along a
-    // long path — the bare step + one hop is O(diameter) rounds there,
-    // which blew the 30-round cap on the indep x100 rank table (r17).
-    // A deterministic multiplicative permutation scrambles ids along a
-    // 4096-node path; only the escalated compression can close it.
+    // the sequential-id chain above flatters any min-chasing scheme: copy
+    // ids ascend along ε-clone chains, so each node's neighbor-min already
+    // points far back. Honest geometry has random ids along a long path —
+    // label propagation is O(diameter) rounds there, which blew the
+    // 30-round cap on the indep x100 rank table (r17). A deterministic
+    // multiplicative permutation scrambles ids along a 4096-node path.
     val n = 4096L
     val p = 4099L // prime > n; k=3001 coprime → a permutation of 1..4098
     def perm(i: Long): Long = (i + 1L) * 3001L % p
@@ -86,7 +104,11 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
     val docs = ids.toDF("doc_id")
     val path = (0L until n - 1).map(i => (perm(i), perm(i + 1)))
       .toDF("doc_a", "doc_b")
-    val groups = labels(Closure.components(docs, path))
+    var comp: org.apache.spark.sql.DataFrame = null
+    // one job per round plus the label job: the round count of this graph,
+    // pinned so that a change to the rounds shows its cost here
+    assert(jobsDuring { comp = Closure.components(docs, path) } === 13)
+    val groups = labels(comp)
     assert(groups.size === n)
     val minId = ids.min
     assert(groups.values.forall(_ === minId),
@@ -119,18 +141,56 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
           (d, walk.min)
         }.toDF("doc_id", "group_id")
       }
-      val got = labels(Closure.components(
-        (0L until n.toLong).toDF("doc_id"),
-        edges.toDF("doc_a", "doc_b"), init))
-      val root = unionFind(edges.toSet)
-      // normalize union-find roots to the component MIN id
-      val minOfRoot = (0L until n.toLong).groupBy(root).map {
-        case (r, members) => (r, members.min)
-      }
-      (0L until n.toLong).foreach { d =>
-        assert(got(d) === minOfRoot(root(d)), s"case $c, node $d")
-      }
+      assertUnionFind(s"case $c", 0L until n.toLong, edges, init)
     }
+  }
+
+  test("union-find twin on multigraphs: repeated, reversed and self " +
+      "pairs, identity init") {
+    import spark.implicits._
+    val rng = new scala.util.Random(4321L)
+    (1 to 4).foreach { c =>
+      val n = 20 + rng.nextInt(20)
+      val base = Seq.fill(n) {
+        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)
+      }
+      // every pair twice, once reversed, plus self-pairs on some docs
+      val edges = base ++ base ++ base.map(_.swap) ++
+        (0L until n.toLong by 3).map(d => (d, d))
+      // identity rows on every fourth doc, isolated or not
+      val init = (0L until n.toLong by 4).map(d => (d, d))
+        .toDF("doc_id", "group_id")
+      assertUnionFind(s"multigraph $c", 0L until n.toLong, edges,
+        Some(init))
+    }
+    // init only on isolated docs: the edges leave 5..9 alone
+    assertUnionFind("isolated init", 0L until 10L,
+      Seq((0L, 1L), (1L, 2L), (3L, 4L)),
+      Some((5L until 10L).map(d => (d, d)).toDF("doc_id", "group_id")))
+  }
+
+  test("union-find twin on deep random-id graphs: a 64×64 grid and a " +
+      "binary tree") {
+    // ids scrambled by a multiplicative permutation of 1..4096 mod the
+    // prime 4099, so neither graph's id order follows its geometry
+    def perm(i: Long): Long = (i + 1L) * 3001L % 4099L
+    val side = 64L
+    val grid = for {
+      r <- 0L until side; c <- 0L until side
+      (dr, dc) <- Seq((0L, 1L), (1L, 0L)) if r + dr < side && c + dc < side
+    } yield (perm(r * side + c), perm((r + dr) * side + c + dc))
+    assertUnionFind("grid", (0L until side * side).map(perm), grid, None)
+    val tree = (1L until 4095L).map(i => (perm((i - 1) / 2), perm(i)))
+    assertUnionFind("tree", (0L until 4095L).map(perm), tree, None)
+  }
+
+  test("d6's closure over the sf0.001 bands runs a pinned job count") {
+    val s = spark
+    val bands = Dedup.bandRows(s, sfDir)
+    val docs = graft.sources.Tables.documents(s, sfDir)
+    // the round count of the rep-seeded d6 graph plus the jobs of the
+    // bucket, pair and head-start frames
+    assert(jobsDuring(Dedup.dedupGroupsFromBands(bands, docs)) === 9)
   }
 
   test("bucket entry point closes a random-id 100-node path to its min") {
@@ -153,7 +213,7 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val sc = spark.sparkContext
     val docs = (1L to 20L).toDF("doc_id")
-    // the edge list is first evaluated by round 0's stats job; a range,
+    // the edge list is first evaluated by round 1's job; a range,
     // not a local Seq, whose projection the optimizer would fold (and
     // throw) while planning, before anything is persisted
     val pairs = spark.range(1L, 20L)

@@ -8,15 +8,17 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** Supervision of concurrent legs: cancellation when the caller fails
-  * and when the wait times out, release of the named frames, one job
-  * group per call, the in-flight bound, and the timeout knob's errors.
+/** Supervision of concurrent legs: a failed caller's legs drained, and
+  * cancelled once the drain runs out of the timeout or the wait itself
+  * times out, release of the named frames, one job group per call, the
+  * in-flight bound, and the timeout knob's errors.
   */
 class ConcurrentLegSpec extends AnyFunSuite with SparkTestBase {
   /** Job starts and ends of the legs whose group begins with `prefix`. */
@@ -50,8 +52,11 @@ class ConcurrentLegSpec extends AnyFunSuite with SparkTestBase {
 
   test("a failing caller cancels the leg's running Spark job") {
     watching("spec-caller") { jobs =>
+      // the ~200 s leg drains for what is left of a 2 s timeout, then
+      // its group is cancelled
       intercept[IllegalStateException] {
-        ConcurrentLeg(spark, "spec-caller")(slowJob()) { _ =>
+        ConcurrentLeg(spark, "spec-caller", timeout = 2.seconds)(slowJob()) {
+            _ =>
           assert(jobs.started.await(60, TimeUnit.SECONDS))
           throw new IllegalStateException("caller failed")
         }
@@ -60,6 +65,35 @@ class ConcurrentLegSpec extends AnyFunSuite with SparkTestBase {
         "the leg's job must end once the caller fails")
       assert(!jobs.succeeded)
     }
+  }
+
+  test("a failing caller drains an SQL leg with an exchange: no job and " +
+      "no cache of it is left") {
+    val sc = spark.sparkContext
+    val slow = org.apache.spark.sql.functions.udf { (x: Long) =>
+      Thread.sleep(2); x
+    }
+    val before = sc.getPersistentRDDs.keySet
+    watching("spec-drain") { jobs =>
+      intercept[IllegalStateException] {
+        ConcurrentLeg(spark, "spec-drain") {
+          // the leg releases its cache only when it finishes, as a Spark
+          // K-Means does; a cancelled leg would leave it persisted
+          val d = spark.range(0, 2000, 1, 4)
+            .select((col("id") % 10).as("k"), slow(col("id")).as("v"))
+            .persist()
+          val n = d.groupBy(col("k")).count().collect().length
+          d.unpersist()
+          n
+        } { _ =>
+          assert(jobs.started.await(60, TimeUnit.SECONDS))
+          throw new IllegalStateException("caller failed")
+        }
+      }
+    }
+    Bridge.drainListenerBus(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
   test("a leg past a 1 s timeout is cancelled and its frames unpersisted") {

@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Same-session A/B of two git refs on one perfbench workload.
+"""Same-session A/B of two git refs on one perfbench workload, or on
+single queries timed by ``graft.TimeOne``.
 
 Usage:
   python3 tools/ab.py REF_A REF_B --workload W --pairs N
                       [--seed0 S] [--trace-runs] [--save DIR]
+  python3 tools/ab.py REF_A REF_B --timeone Q[,Q...] --sf DIR --pairs N
 
 Each ref is exported with ``git archive`` into its own directory under a
 fresh temporary directory, so both sides build and run from committed files
@@ -24,13 +26,23 @@ reports) to ``DIR/pair<i>-seed<s>-<side>/`` and, after each pair, compares
 the reports both sides wrote line by line (report directories matched by
 path with the timestamp segment masked, the wall-clock ``elapsed sec:``
 line skipped): it prints ``outputs identical`` or the first differing
-line, and after the pairs how many pairs had identical outputs. The temporary directory is
-removed at the end. Nothing under the repository's
-``perfbench/`` is touched: the runs use the exported copies.
+line, and after the pairs how many pairs had identical outputs.
+
+``--timeone`` times the named queries instead: each exported ref is built
+with its own ``perfbench/build.py``, and pair ``i`` runs ``graft.TimeOne Q...``
+once per side against the fixtures in ``--sf`` (A first in even pairs, B
+first in odd ones), each run in a fresh work directory. A run's value for a
+query is the median of its timed passes (``SPARK_GRAFT_PASSES``, default 3,
+after one warm-up pass). Printed: every run, then per query the median and
+quartiles of each side, the change, and how many pairs B won.
+
+The temporary directory is removed at the end. Nothing under the
+repository's ``perfbench/`` is touched: the runs use the exported copies.
 """
 import argparse
 import itertools
 import json
+import os
 import re
 import shutil
 import statistics
@@ -128,12 +140,40 @@ def quartiles(xs):
     return q[0], q[2]
 
 
-def summary(runs, bench):
-    """Per end-to-end metric: both sides' medians and quartiles, pairs won."""
+TIMEONE_LINE = re.compile(
+    r"^\[timeone\] (\S+): warm=\S+ passes=\[([^\]]*)\]")
+
+
+def timeone_run(checkout, classpath, queries, sf, jvm_options):
+    """One ``graft.TimeOne`` run in a fresh work directory of `checkout`:
+    {query: median seconds of its timed passes}."""
+    work = checkout / ".timeone_work"
+    shutil.rmtree(work, ignore_errors=True)
+    cmd = ["java", *jvm_options(work), "-cp", classpath,
+           "graft.TimeOne", *queries]
+    p = subprocess.run(cmd, cwd=work, text=True, capture_output=True,
+                       timeout=RUN_TIMEOUT_S,
+                       env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf,
+                                SPARK_LOCAL_DIRS=str(work / "spark-local")))
+    times = {}
+    for line in p.stdout.splitlines():
+        m = TIMEONE_LINE.match(line)
+        if m:
+            passes = [float(x) for x in m.group(2).split(",")]
+            times[m.group(1)] = statistics.median(passes)
+    if p.returncode != 0 or set(times) != set(queries):
+        sys.stderr.write(p.stderr[-3000:])
+        raise SystemExit(f"ab: graft.TimeOne in {checkout} exited with "
+                         f"{p.returncode}, timed {sorted(times)}")
+    return times
+
+
+def summary(runs, metrics):
+    """Per (name, lower_is_better) metric: both sides' medians and
+    quartiles, and the pairs B won."""
     out = []
     pairs = sorted({r["pair"] for r in runs})
-    for m in bench["end_to_end"]:
-        name, lower = m["name"], m.get("better", "lower") == "lower"
+    for name, lower in metrics:
         side = {s: [r["metrics"][name] for r in runs
                     if r["side"] == s and name in r["metrics"]]
                 for s in ("A", "B")}
@@ -159,12 +199,55 @@ def summary(runs, bench):
     return out
 
 
+def print_summary(rows):
+    print("\nmetric        A median [q1-q3]            "
+          "B median [q1-q3]            change   B won  gap>IQR(A)")
+    for r in rows:
+        print(f"{r['metric']:<13} "
+              f"{r['a_median']:9.4g} [{r['a_q1']:.4g}-{r['a_q3']:.4g}]"
+              f"{'':>4}{r['b_median']:9.4g} [{r['b_q1']:.4g}-{r['b_q3']:.4g}]"
+              f"{'':>4}{r['change_pct']:+6.1f}%  {r['b_won']:2d}/{r['pairs']}"
+              f"  {r['gap_exceeds_a_iqr']}")
+
+
+def timeone_ab(a, sides, shas):
+    # the benchmark's JVM options (heap, module opens, scratch paths)
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    from run import jvm_options
+
+    queries = a.timeone.split(",")
+    classpath = {}
+    for s in ("A", "B"):
+        built = subprocess.run([sys.executable, "perfbench/build.py"],
+                               cwd=sides[s], text=True, capture_output=True)
+        if built.returncode != 0:
+            sys.stderr.write(built.stderr[-3000:])
+            raise SystemExit(f"ab: perfbench/build.py failed for {s}")
+        classpath[s] = built.stdout.strip().splitlines()[-1]
+    print(f"A = {a.ref_a} ({shas['A'][:12]}), B = {a.ref_b} "
+          f"({shas['B'][:12]}), graft.TimeOne {' '.join(queries)} on "
+          f"{a.sf}, {a.pairs} pairs", flush=True)
+    runs = []
+    for i in range(a.pairs):
+        order = ("A", "B") if i % 2 == 0 else ("B", "A")
+        for pos, s in enumerate(order):
+            times = timeone_run(sides[s], classpath[s], queries, a.sf,
+                                jvm_options)
+            runs.append({"pair": i, "side": s, "metrics": times})
+            print(f"pair {i:2d} {s} ({'first' if pos == 0 else 'second'}): "
+                  + " ".join(f"{q}={times[q]:.3f}" for q in queries),
+                  flush=True)
+    print_summary(summary(runs, [(q, True) for q in queries]))
+
+
 def main():
     ap = argparse.ArgumentParser(
         description="Alternating same-session perfbench A/B of two git refs.")
     ap.add_argument("ref_a")
     ap.add_argument("ref_b")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload")
+    ap.add_argument("--timeone", help="comma-separated graft.TimeOne queries")
+    ap.add_argument("--sf", help="fixture directory for --timeone")
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, default=101)
     ap.add_argument("--trace-runs", action="store_true")
@@ -172,12 +255,19 @@ def main():
     a = ap.parse_args()
     if a.pairs < 1:
         raise SystemExit("ab: --pairs must be at least 1")
+    if (a.workload is None) == (a.timeone is None):
+        raise SystemExit("ab: give exactly one of --workload and --timeone")
+    if a.timeone and not a.sf:
+        raise SystemExit("ab: --timeone needs --sf DIR")
 
     tmp = Path(tempfile.mkdtemp(prefix="ab-"))
     try:
         sides = {"A": tmp / "a", "B": tmp / "b"}
         shas = {"A": export(a.ref_a, sides["A"]),
                 "B": export(a.ref_b, sides["B"])}
+        if a.timeone:
+            timeone_ab(a, sides, shas)
+            return
         bench = json.loads((sides["A"] / "BENCHMARK.json").read_text())
         workloads = [w["name"] for w in bench["workloads"]]
         if a.workload not in workloads:
@@ -210,15 +300,9 @@ def main():
                 identical += same
                 print(f"pair {i:2d} {msg}", flush=True)
 
-        rows = summary(runs, bench)
-        print("\nmetric        A median [q1-q3]            "
-              "B median [q1-q3]            change   B won  gap>IQR(A)")
-        for r in rows:
-            print(f"{r['metric']:<13} "
-                  f"{r['a_median']:9.4g} [{r['a_q1']:.4g}-{r['a_q3']:.4g}]"
-                  f"{'':>4}{r['b_median']:9.4g} [{r['b_q1']:.4g}-{r['b_q3']:.4g}]"
-                  f"{'':>4}{r['change_pct']:+6.1f}%  {r['b_won']:2d}/{r['pairs']}"
-                  f"  {r['gap_exceeds_a_iqr']}")
+        print_summary(summary(runs, [
+            (m["name"], m.get("better", "lower") == "lower")
+            for m in bench["end_to_end"]]))
         print("failed runs: " +
               str(sum(1 for r in runs if r["failed"])) + f" of {len(runs)}")
         if a.save:
