@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions.col
   * label propagation needs O(diameter).
   *
   * The rounds are RDD operations on (node, neighbor) pairs, kept in both
-  * orientations and partitioned by one HashPartitioner sized like the
-  * session's SQL shuffles. Large-star groups the edge list where it lies,
+  * orientations and partitioned by one HashPartitioner, sized like the
+  * pairs' own partitioning and capped by the session's SQL shuffle
+  * partitions. Large-star groups the edge list where it lies,
   * small-star and the regrouped result shuffle once each, and one job per
   * round also compares the new edge list with the old, partition by
   * partition. No Catalyst plan is built inside the loop. Each round's
@@ -54,11 +55,17 @@ object Closure {
   def components(docs: DataFrame, pairs: DataFrame,
       init: Option[DataFrame] = None): DataFrame = {
     val s = docs.sparkSession
-    val part = new HashPartitioner(
-      s.conf.get("spark.sql.shuffle.partitions").toInt)
     def longPairs(df: DataFrame, a: String, b: String): RDD[(Long, Long)] =
       df.select(col(a).cast("long"), col(b).cast("long")).rdd
         .map(r => (r.getLong(0), r.getLong(1)))
+    val input = longPairs(pairs, "doc_a", "doc_b")
+    // the partition count adaptive execution gave the pairs, capped by the
+    // session's SQL shuffle partitions: a fixed count would run a small
+    // graph's rounds as mostly empty tasks. At least one, for the docs'
+    // labels when there are no pairs.
+    val part = new HashPartitioner(math.max(1, math.min(
+      input.getNumPartitions,
+      s.conf.get("spark.sql.shuffle.partitions").toInt)))
     // both orientations, keyed by `part`, without self-loops or duplicates
     def undirected(e: RDD[(Long, Long)]): RDD[(Long, Long)] = e
       .flatMap { case (a, b) => if (a == b) Nil else List((a, b), (b, a)) }
@@ -70,8 +77,7 @@ object Closure {
     }
     try {
       var edges = keep(undirected(s.sparkContext.union(
-        longPairs(pairs, "doc_a", "doc_b") +:
-          init.map(longPairs(_, "doc_id", "group_id")).toSeq)))
+        input +: init.map(longPairs(_, "doc_id", "group_id")).toSeq)))
       var changed = true
       var round = 0
       while (changed && round < MaxRounds) {

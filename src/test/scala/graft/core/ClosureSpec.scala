@@ -75,6 +75,10 @@ class ClosureSpec extends AnyFunSuite with SparkTestBase {
       Seq.empty[Long].toDF("doc_id"),
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
     assert(empty.count() === 0L)
+    // no pairs at all: every doc is its own group
+    assert(labels(Closure.components((1L to 5L).toDF("doc_id"),
+      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))) ===
+      (1L to 5L).map(d => (d, d)).toMap)
   }
 
   test("a sequential-id chain deeper than the round cap converges") {
